@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Benchmark main (driver contract): run every SparkEntry query on
@@ -45,6 +44,13 @@ object Bench {
     }.toMap
   }
 
+  /** Default 4 cores, not 32: measured at sf0.1, 57 queries run 53.5 s on
+    * local[4] vs 72.8 s on local[32] — per-stage task scheduling dominates
+    * at this data size, so more threads only add overhead. Override with
+    * SPARK_GRAFT_CPUS at larger SFs where scans/shuffles are CPU-bound. */
+  private[graft] def setup: Graft.Setup =
+    Graft.Setup("graft-bench", Graft.envCores(4), Graft.Fair)
+
   def main(args: Array[String]): Unit = {
     // Round-11 measurement honesty: every bench invocation computes from
     // the parquet inputs — a fresh private ArtifactStore root means rep 1
@@ -53,32 +59,7 @@ object Bench {
     // back only what THIS invocation built. Swept at JVM exit.
     ArtifactStore.freshRootForThisInvocation()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 4, not 32: measured at sf0.1, 57 queries run 53.5 s on
-    // local[4] vs 72.8 s on local[32] — per-stage task scheduling dominates
-    // at this data size, so more threads only add overhead. Override with
-    // SPARK_GRAFT_CPUS at larger SFs where scans/shuffles are CPU-bound.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Round-11 (guide §2.2/§2.5): AQE's parallelism-first coalescing
-      // bottoms out at minPartitionSize (default 1m), which SERIALIZES
-      // byte-small but CPU-dense stages — x12's candidate verify
-      // (array_intersect over 322k pairs, ~5 MB shuffled) ran as 3 tasks
-      // and measured 6.5 s vs 2.3 s at 64k in a within-JVM A/B. 64k only
-      // changes shuffles far below the advisory size, so cluster-scale
-      // plans (partitions ≫ 1 MB) are untouched — this is a
-      // small-shuffle parallelism floor, not a local[32] constant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"))
-      // FAIR so the q_sql_concurrent panel volley shares cores across its
-      // 12 per-panel pools instead of queueing them FIFO
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up outside the timed region: JVM/codegen/parquet-reader init
     // otherwise lands entirely on the alphabetically-first query
@@ -92,6 +73,11 @@ object Bench {
       .map(_.split(",").flatMap(s => Seq(s, s"q_$s")).toSet)
       .getOrElse(Set.empty)
 
+    // a crashed query's time-to-failure is not a timing: a query that fails
+    // in any rep leaves the timing maps and totals, is listed on stderr and
+    // under "failed" in bench.json (a count on the compact stdout line,
+    // which must stay inside the driver's tail), and makes the exit non-zero
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def onePass(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -101,6 +87,7 @@ object Bench {
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed.getOrElseUpdate(name, String.valueOf(e.getMessage))
         }
         spark.catalog.clearCache()
         name -> (System.nanoTime() - t0) / 1e9
@@ -113,14 +100,14 @@ object Bench {
     // read against the query's measured noise floor instead of guessed at.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
     val passes = (1 to reps).map(_ => onePass().toMap)
-    val keys = passes.head.keys.toSeq.sorted
+    val keys = passes.head.keys.toSeq.sorted.filterNot(failed.contains)
     val results = keys.map(k => k -> passes.map(_(k)).min)
     // rep-1 sum = the COLD total: SessionMemo artifacts (shared pair lists,
     // IVF/PQ builds, staged replay fixtures) survive clearCache() by design,
     // so later reps are warm and min-of-reps amortizes one-time build cost.
     // Both numbers are reported; min stays the headline only because the
     // cold one is also within gate (VERDICT r8 #3).
-    val totalCold = passes.head.values.sum
+    val totalCold = keys.map(passes.head).sum
     val vr: Map[String, Double] =
       keys.map(k => k -> (if (reps < 2 || passes.map(_(k)).min <= 0) 1.0
                           else passes.map(_(k)).max / passes.map(_(k)).min))
@@ -151,11 +138,12 @@ object Bench {
     // ratio-based regression flags readable without grepping the vr map
     val maxVrQuery =
       if (vr.isEmpty) "" else vr.maxBy { case (k, v) => (v, k) }._1
+    val failedJson = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","value_cold":$totalCold,"queries":$qs,""" +
         s""""reps":$reps,"vr":$vrJson,"max_vr_query":"$maxVrQuery",""" +
         s""""sql_panel_p50_ms":${pct(0.5)},""" +
-        s""""sql_panel_p95_ms":${pct(0.95)},"sf":"$sfDir"}"""
+        s""""sql_panel_p95_ms":${pct(0.95)},"failed":$failedJson,"sf":"$sfDir"}"""
 
     // The driver captures only a bounded stdout tail (both r1 and r2
     // recorded parsed:null — the full-name line is ~2.4 KB and overflows a
@@ -185,7 +173,7 @@ object Bench {
     val shortLine =
       s"""{"metric":"total","value":${d(total, 2)},"unit":"sec","value_cold":${d(totalCold, 2)},"queries":$qsShort,""" +
         s""""reps":$reps,"max_vr":${d(maxVr, 2)},"max_vr_q":"${alias.getOrElse(maxVrQuery, maxVrQuery)}",""" +
-        s""""sql_panel_p95_ms":${d(pct(0.95), 1)},"sf":"$sfName"}"""
+        s""""sql_panel_p95_ms":${d(pct(0.95), 1)},"failed":${failed.size},"sf":"$sfName"}"""
 
     // regression tracking vs the previous history entry (same sf only).
     // Jackson, not a regex over the raw line: the line now carries a "vr"
@@ -219,8 +207,13 @@ object Bench {
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       Files.writeString(Paths.get("bench.json"), line + "\n")
     }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED ${failed.size} of ${keys.size + failed.size} queries:")
+      failed.foreach { case (k, msg) => System.err.println(s"[bench]   $k: $msg") }
+    }
     spark.stop()
     // bare final stdout line (after spark.stop so no INFO logs follow it)
     println(shortLine)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

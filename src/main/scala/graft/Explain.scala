@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: print `explain(formatted)` for selected queries (all by
   * default) — used to check filter pushdown (PushedFilters), column pruning
   * (ReadSchema), broadcast vs shuffle joins, and WholeStageCodegen spans.
@@ -9,16 +7,13 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.Explain [sfDir] [queryName...]
   */
 object Explain {
+  private[graft] def setup: Graft.Setup = Graft.Setup("graft-explain", 4)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

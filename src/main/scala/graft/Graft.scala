@@ -19,33 +19,61 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** A session configured the way every graft main configures it: AQE on,
-    * UTC, shuffle parallelism = cores (not the 200 default — at cluster
-    * scale set this to 2–3× total executor cores instead). */
+  /** Entries in Spark's generated-class cache, set by every session built
+    * here. With Spark's default of 100 a class was evicted before its plan
+    * ran again: a cold rep of the 273 queries compiles 6,368 classes and the
+    * warm rep recompiled 5,949. 8,192 holds the whole cold rep.
+    * A static conf, JVM-wide: `CodeGenerator` sizes its cache once, from the
+    * session active at the first codegen, so the first session wins.
+    * Cost: 13.5–16 KB of retained heap per cached class (+3.5 to +4.2 MB
+    * measured for the benchmark's batch_mix, 259 classes) plus metaspace. */
+  val CodegenCacheEntries = 8192
+
+  /** The confs `session` sets: AQE on, UTC, shuffle parallelism = cores
+    * (not the 200 default — at cluster scale set this to 2–3× total
+    * executor cores instead), the codegen cache above, `extraConf` last so
+    * a caller's override wins. */
+  private[graft] def conf(cores: Int,
+      extraConf: Map[String, String] = Map.empty): Map[String, String] = Map(
+    "spark.master" -> s"local[$cores]",
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    // Small-shuffle parallelism floor: AQE coalescing bottoms out at
+    // minPartitionSize (default 1m), serializing byte-small but CPU-dense
+    // stages (3× on q_x12's verify shuffle); ≫1 MB partitions are untouched.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"),
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.ui.enabled" -> "false"
+  ) ++ extraConf
+
+  /** The one session factory: every main but Smoke, and the test suites,
+    * build their session here, passing their differences as `extraConf`. */
   def session(appName: String = "graft", cores: Int =
       Runtime.getRuntime.availableProcessors.min(32),
       extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Small-shuffle parallelism floor (round-11 Bench/Verify, promoted
-      // to the production facade in round-12 per VERDICT r11 #1): AQE's
-      // parallelism-first coalescing bottoms out at minPartitionSize
-      // (default 1m), which serializes byte-small but CPU-dense stages
-      // (measured 3× on q_x12's candidate-verify shuffle). 64k only
-      // affects shuffles far below the advisory partition size, so
-      // cluster-scale plans with ≫1 MB partitions are untouched.
-      // Same env override as the harness mains.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"))
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
+    val b = SparkSession.builder().appName(appName)
+    conf(cores, extraConf).foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }
+
+  /** What a main asks of `session`. A main exposes its `Setup` so a spec
+    * can pin its confs without starting a second SparkContext. */
+  final case class Setup(appName: String, cores: Int,
+      extraConf: Map[String, String] = Map.empty) {
+    def conf: Map[String, String] = Graft.conf(cores, extraConf)
+    def session(): SparkSession = Graft.session(appName, cores, extraConf)
+  }
+
+  /** `SPARK_GRAFT_CPUS`, else the main's own default core count. */
+  private[graft] def envCores(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** FAIR: concurrent jobs (the 12-panel volley, Verify's query pool) share
+    * cores instead of queueing FIFO. */
+  private[graft] val Fair = Map("spark.scheduler.mode" -> "FAIR")
 
   /** Register the table views (`events_v`, `lineitem_v`, …), the
     * `vector_dot` codegen function, and the streaming state-store config —

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Optimization-round profiling harness (guide §1): run one named query
@@ -15,6 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Usage: runMain graft.Prof <query> [sfDir] [reps]
   */
 object Prof {
+  private[graft] def setup: Graft.Setup =
+    Graft.Setup("graft-prof", Graft.envCores(32), Graft.Fair)
+
   def main(args: Array[String]): Unit = {
     // same measurement-honesty contract as Bench/Verify (ADVICE r11):
     // a durable artifact root would let rep-1 "build" timings silently
@@ -23,18 +25,7 @@ object Prof {
     val names = args(0).split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"))
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.contains("PROF_JOBS"))
       spark.sparkContext.addSparkListener(

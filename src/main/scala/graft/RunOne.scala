@@ -1,20 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Run a single SparkEntry query by name: rows, elapsed, optional plan.
   * Usage: runMain graft.RunOne <query_name> [sfDir] [explain]. */
 object RunOne {
+  private[graft] def setup: Graft.Setup =
+    Graft.Setup("graft-runone", Graft.envCores(4))
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val df = SparkEntry.queries(name)(spark, sfDir)

@@ -60,17 +60,14 @@ object ScaleGen {
 
   private val KEY_STRIDE = 100000000L // above every key domain in sf<=1
 
+  private[graft] def setup: Graft.Setup =
+    Graft.Setup("graft-scalegen", Graft.envCores(16))
+
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, dst, k)
     spark.stop()

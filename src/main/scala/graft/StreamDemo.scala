@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingJobs
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.{Files, Paths}
 
@@ -13,17 +12,14 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.StreamDemo [workDir]
   */
 object StreamDemo {
+  private[graft] def setup: Graft.Setup = Graft.Setup("graft-stream-demo", 4)
+
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("graft_stream_demo").toString)
     val in = s"$work/in"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(in))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     StreamingJobs.configureStateStore(spark)
 

@@ -33,17 +33,13 @@ object Stress {
         }: _*).as("text"))
   }
 
+  private[graft] def setup: Graft.Setup =
+    Graft.Setup("graft-stress", Graft.envCores(32))
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val nKeys = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -34,6 +33,14 @@ object Verify {
     "q_y4_lsh_neardup", "q_stream_join", "q_t15_bpe_apply",
     "q_t14_bpe_train", "q_stream_merge", "q_stream_waterfill",
     "q_stream_raw")
+
+  /** Defaults to the box's full core count, not Bench's 4: verify is a
+    * wall-clock race against the driver's window, and 10 concurrent queries
+    * on local[4] re-create the round-6 truncation risk. */
+  private[graft] def setup: Graft.Setup = Graft.Setup("graft-verify",
+    Graft.envCores(math.min(Runtime.getRuntime.availableProcessors, 32)),
+    Graft.Fair)
+
   def main(args: Array[String]): Unit = {
     // fresh per-invocation artifact root (same contract as Bench): the
     // oracle dump always computes from the parquet inputs, never from
@@ -45,21 +52,7 @@ object Verify {
     // full 140-query dump
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    // default to the box's full core count, not Bench's 4: verify is a
-    // wall-clock race against the driver's window, and 10 concurrent
-    // queries on local[4] re-create the round-6 truncation risk
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // small-shuffle parallelism floor — see Bench.scala (round-11)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"))
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = setup.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

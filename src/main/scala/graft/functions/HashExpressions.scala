@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -66,8 +67,17 @@ object HashExpressions {
 
   /** Register `poly_hash` in the session's function registry. Idempotent. */
   def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "built-in")
+    registerOnce(spark, "poly_hash")(exprs => PolyHash(exprs.head))
+
+  /** Register `name` unless the session's registry already has it: the
+    * operators call `ensureRegistered` per query, and replacing a function
+    * logs a "replaced a previously registered function" WARN every time. */
+  private[functions] def registerOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 
   /** Rolling content hash of a string column (codegen'd).
     * Requires ensureRegistered on the session. */

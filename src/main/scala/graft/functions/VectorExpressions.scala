@@ -213,17 +213,15 @@ case class QuantStats(child: Expression)
 object VectorExpressions {
   import org.apache.spark.sql.functions.{call_function, sqrt}
 
-  /** Register `vector_dot` + `quant_stats` in the session's function
+  /** Register `vector_dot`, `quant_stats` and `vector_dist2` in the function
     * registry — the supported Spark 4 route to a custom Expression
     * (Column↔Expression bridges are private to the sql package).
     * Idempotent. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant_stats", exprs => QuantStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dist2", exprs => VectorDist2(exprs.head, exprs(1)), "built-in")
+    import HashExpressions.registerOnce
+    registerOnce(spark, "vector_dot")(exprs => VectorDot(exprs.head, exprs(1)))
+    registerOnce(spark, "quant_stats")(exprs => QuantStats(exprs.head))
+    registerOnce(spark, "vector_dist2")(exprs => VectorDist2(exprs.head, exprs(1)))
   }
 
   /** Dot product of two array<double> columns (codegen'd).

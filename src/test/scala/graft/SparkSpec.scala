@@ -10,14 +10,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Built through the library's session factory, so the suites run with
+    * the codegen cache size it sets; the suites' own confs stay as before,
+    * including Spark's default 1m AQE minPartitionSize. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("graft-tests", 4, Map(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1m"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -58,6 +58,25 @@ class VectorExprSpec extends SparkSpec {
     assert(viaSql == viaExpr)
   }
 
+  test("a second ensureRegistered leaves the function registry unchanged") {
+    import graft.functions.HashExpressions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("vector_dot", "quant_stats", "vector_dist2", "poly_hash")
+    // a replaced function gets a new ExpressionInfo, so reference
+    // equality of the looked-up infos shows nothing was re-registered
+    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    VectorExpressions.ensureRegistered(spark)
+    HashExpressions.ensureRegistered(spark)
+    val first = infos
+    val listed = registry.listFunction().size
+    VectorExpressions.ensureRegistered(spark)
+    HashExpressions.ensureRegistered(spark)
+    assert(first.forall(_.isDefined))
+    assert(infos.zip(first).forall { case (a, b) => a.get eq b.get })
+    assert(registry.listFunction().size == listed)
+  }
+
   test("cosine of a vector with itself is 1.0") {
     VectorExpressions.ensureRegistered(spark)
     val df = Seq((1L, Seq(0.5, -1.5, 2.0))).toDF("id", "v")
