@@ -307,19 +307,13 @@ object CdcParser {
     * the envelope. */
   private[graft] def eventsAsEnvelopeJsonTs(spark: SparkSession,
       dir: String): DataFrame =
-    envelopeMemo.getOrBuild(spark, dir) {
-      // localCheckpoint (survives catalog.clearCache, the pairs-memo
-      // lesson): the JSON-encode pass over events is paid once per
-      // session; every streaming replay's fixture writer reuses it
-      envelopeBuild(spark, dir).localCheckpoint()
-    }
+    envelopes(spark, dir)(envelopeBuild(spark, dir))
 
   /** Every streaming replay starts by JSON-encoding the events table into
     * Debezium envelopes — a dozen fixture writers per bench/verify run
-    * paying the same projection. Session-scoped memo, same pattern as
-    * [[graft.operators.Dedup.sharedNearDupPairs]]. */
-  private val envelopeMemo = // onEvict: release checkpoint blocks on sweep
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+    * paying the same projection, now paid once per session. */
+  private val envelopes =
+    new graft.Artifact("cdc_envelope", 2, publish = false)
 
   private def envelopeBuild(spark: SparkSession,
       dir: String): DataFrame = {
@@ -363,17 +357,12 @@ object CdcParser {
   }
 
   /** P1/P2/S2 roundtrip: generate the envelope stream, parse it back. */
-  /** Session-scoped memo (the sharedNearDupPairs pattern): eleven
-    * operators consume the parsed CDC frame and each paid the full
-    * envelope encode + Jackson parse per query; the parsed frame is a
-    * few MB at sf0.1. SessionMemo sweeps stopped-session entries. */
-  private val parseMemo = // onEvict: release checkpoint blocks on sweep
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+  /** Eleven operators consume the parsed CDC frame and each paid the
+    * full envelope encode + Jackson parse per query; the parsed frame is a
+    * few MB at sf0.1, so it is built once per session. */
+  private val parsed = new graft.Artifact("cdc_parsed", 2, publish = false)
   def cdcParseRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    parseMemo.getOrBuild(spark, dir) {
-      parse(eventsAsEnvelopeJson(spark, dir), col("json"))
-        .localCheckpoint()
-    }
+    parsed(spark, dir)(parse(eventsAsEnvelopeJson(spark, dir), col("json")))
 
   /** q_p1 entry: the roundtrip plus its presentation sort. The sort lives
     * here — not in the building block — so downstream aggregations

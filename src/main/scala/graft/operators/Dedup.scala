@@ -899,43 +899,20 @@ object Dedup {
     * c22, c27, m10). A production pipeline materializes these once per
     * corpus snapshot and serves every consumer from the artifact — the
     * same materialized-view move the reference makes for its per-minute
-    * rollups (`dashboard_queries.sql`), applied to the dedup graph. These
-    * memos are that artifact at session scope: the first caller computes
-    * and persists, later callers reuse the cached frame. Keyed by
-    * (session identity, data dir) so concurrent Verify workers and
-    * multi-SF test sessions never cross-contaminate. */
-  // onEvict (ADVICE r11): a superseded-entry sweep must release the
-  // localCheckpoint blocks, not just drop the map entry
-  private val pairsMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
-  private val labelsMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+    * rollups (`dashboard_queries.sql`), applied to the dedup graph. */
+  private val nearDupPairs = new graft.Artifact("neardup_pairs", 2)
+  private val clusterLabels = new graft.Artifact("cluster_labels", 2)
 
   private[graft] def sharedNearDupPairs(spark: SparkSession,
       dir: String): DataFrame =
-    pairsMemo.getOrBuild(spark, dir) {
-      // ArtifactStore (round-10): the pair list is a per-corpus-snapshot
-      // index — COLD runs read the published parquet instead of paying the
-      // banded build again (the sf1 cold bench charged the ~42 s build to
-      // its first consumer, c10's vr 37.9).
-      // localCheckpoint (round-11, VERDICT r10 #2): the artifact switch
-      // left consumers re-scanning the parquet per query with file-size
-      // stats only; checkpointing restores the r9 in-memory-frame
-      // semantics (exact row counts for join planning, no per-consumer
-      // re-scan) on top of the disk artifact. Exact longs — bit-lossless.
-      graft.ArtifactStore.getOrBuild(spark, "neardup_pairs", dir) {
-        simhashNearDups(spark, dir)
-      }.localCheckpoint()
-    }
+    nearDupPairs(spark, dir)(simhashNearDups(spark, dir))
 
   private[graft] def sharedClusterLabels(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    labelsMemo.getOrBuild(spark, dir) {
-      graft.ArtifactStore.getOrBuild(spark, "cluster_labels", dir) {
-        memberLabels(sharedNearDupPairs(spark, dir)
-          .select(col("doc_a"), col("doc_b")).as[(Long, Long)])
-      }.localCheckpoint() // see sharedNearDupPairs — same round-11 move
+    clusterLabels(spark, dir) {
+      memberLabels(sharedNearDupPairs(spark, dir)
+        .select(col("doc_a"), col("doc_b")).as[(Long, Long)])
     }
   }
 
@@ -1400,15 +1377,13 @@ object Dedup {
     * 2 exchanges per round over (pos, r1, r2) longs only, never tokens.
     * 8 fixed rounds at any corpus size; at 100 TB this is the textbook
     * distributed SA build (the same doubling DC3/psac engines use). */
-  def suffixArray(spark: SparkSession, dir: String): DataFrame = {
-    val spk = spark
-    import spk.implicits._
-    val out = saRanks(spark, dir).toDF("pos", "r")
-      .select(col("r").as("rank"),
+  def suffixArray(spark: SparkSession, dir: String): DataFrame =
+    suffixArrayOf(saRanks(spark, dir))
+
+  private def suffixArrayOf(ranks: DataFrame): DataFrame =
+    ranks.select(col("r").as("rank"),
         expr("pos DIV 256").as("doc_id"), expr("pos % 256").as("off"))
       .orderBy(col("rank"), col("doc_id"), col("off"))
-    out
-  }
 
   /** Distributed dense rank with no global window, no distinct, and no
     * join-back: one range-sort of (key, pos), one per-partition
@@ -1456,32 +1431,25 @@ object Dedup {
     (ranked, m)
   }
 
-  /** Final suffix ranks (pos, rank) — shared by q_x6 (the array itself)
-    * and q_x7 (adjacent-class LCP spans). */
-  /** Session-scoped memo of the corpus suffix-array ranks (the
-    * sharedNearDupPairs pattern): x6 and x7 each consumed a FULL
-    * prefix-doubling build — the most expensive artifact in the suite —
-    * per query. First caller builds and persists the rank RDD (RDD
-    * storage, untouched by Bench's `catalog.clearCache()`), the other
-    * reuses it. */
-  private val saMemo = // onEvict: release the persisted rank RDD on sweep
-    new graft.SessionMemo[org.apache.spark.rdd.RDD[(Long, Long)]](
-      r => { try r.unpersist(false) catch { case _: Throwable => () }; () })
-  private def saRanks(spark: SparkSession, dir: String)
-      : org.apache.spark.rdd.RDD[(Long, Long)] =
-    saMemo.getOrBuild(spark, dir) {
+  /** Final suffix ranks (pos, r) over the corpus, or over its doc_id < w
+    * window — shared by q_x6 (the array itself) and q_x7 (adjacent-class
+    * LCP spans) and their window twins, which each paid a full
+    * prefix-doubling build, the most expensive artifact in the suite. */
+  private val suffixRanks = new graft.Artifact("suffix_ranks", 2)
+  /** The Artifact params of a doc_id < w window variant. */
+  private def windowParam(w: Option[Long]): String = w.fold("")(n => s"_w$n")
+  /** The documents, or those with doc_id < w. */
+  private def windowDocs(spark: SparkSession, dir: String,
+      w: Option[Long]): DataFrame = {
+    val docs = G.table(spark, dir, "documents")
+    w.fold(docs)(n => docs.filter(col("doc_id") < n))
+  }
+  private def saRanks(spark: SparkSession, dir: String,
+      w: Option[Long] = None): DataFrame =
+    suffixRanks(spark, dir, windowParam(w)) {
       val spk = spark
       import spk.implicits._
-      // published as a (pos, r) parquet artifact: the prefix-doubling
-      // build is the most expensive artifact in the suite; cold runs
-      // read it back (exact longs, bit-lossless round-trip)
-      val df = graft.ArtifactStore.getOrBuild(spark, "suffix_ranks", dir) {
-        saRanksOn(spark, G.table(spark, dir, "documents")).toDF("pos", "r")
-      }
-      val r = df.as[(Long, Long)].rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
+      saRanksOn(spark, windowDocs(spark, dir, w)).toDF("pos", "r")
     }
 
   /** Stress entry: the SA build over any (doc_id, text) frame. Doc length
@@ -1611,35 +1579,24 @@ object Dedup {
     * window. The only payload-carrying exchange ships bounded suffix
     * slices, O(corpus tokens) total, the same order as any tokenizing
     * scan. */
-  def repeatedSpans(spark: SparkSession, dir: String): DataFrame = {
-    val docs = G.table(spark, dir, "documents")
-    val ranks = {
-      val spk = spark
-      import spk.implicits._
-      saRanks(spark, dir).toDF("pos", "r")
-    }
-    repeatedSpansOf(docs, ranks,
-      spanTag = Some((spark, "repeated_spans", dir)))
-  }
+  def repeatedSpans(spark: SparkSession, dir: String): DataFrame =
+    repeatedSpansOf(spark, dir, None)
 
   /** Round-12 (VERDICT r11 #5): the per-rank-class span table — the
     * adjacent-class LCP kernel's output, the exact-substring-dedup
     * decision table Lee et al.'s pipeline materializes per corpus
     * snapshot — was recomputed over the full corpus per execution
     * (~1.3 s of x7's warm cost on top of the shared suffix-rank
-    * artifact). Published/memoized like the ranks themselves: consumers
-    * pay one rank⋈span join + per-doc max. Exact longs, bit-lossless. */
-  private val spanMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+    * artifact). Consumers pay one rank⋈span join + per-doc max. */
+  private val spanClasses = new graft.Artifact("repeated_spans", 2)
 
-  /** The adjacent-class LCP kernel on any (doc_id, text) frame plus its
-    * suffix ranks — shared by the full query and the bounded twin.
-    * `spanTag` publishes the (r, span) class table as a versioned
-    * artifact; None (Stress ladders) computes it inline. */
-  private def repeatedSpansOf(docsRaw: DataFrame, ranks: DataFrame,
-      spanTag: Option[(SparkSession, String, String)] = None): DataFrame = {
-    def spanTable(): DataFrame = {
-      val docs = docsRaw
+  /** The adjacent-class LCP kernel over the corpus or its doc_id < w
+    * window — shared by the full query and the bounded twin. */
+  private def repeatedSpansOf(spark: SparkSession, dir: String,
+      w: Option[Long]): DataFrame = {
+    val ranks = saRanks(spark, dir, w)
+    val spans = spanClasses(spark, dir, windowParam(w)) {
+      val docs = windowDocs(spark, dir, w)
         .select(col("doc_id"), split(col("text"), "\\s+").as("ts"))
         .select(col("doc_id"), col("ts"), size(col("ts")).as("n"))
       val cls = ranks.groupBy("r")
@@ -1668,14 +1625,6 @@ object Dedup {
             .otherwise(greatest(coalesce(col("lcp_dn"), lit(0L)),
               coalesce(col("lcp_up"), lit(0L)))).as("span"))
     }
-    val spans = spanTag match {
-      case Some((spark, name, dir)) =>
-        spanMemo.getOrBuild(spark, s"$dir#$name") {
-          graft.ArtifactStore.getOrBuild(spark, name, dir)(spanTable())
-            .localCheckpoint()
-        }
-      case None => spanTable()
-    }
     ranks.join(spans, "r")
       .groupBy(expr("pos DIV 256").as("doc_id"))
       .agg(max(col("span")).as("max_dup_span"))
@@ -1699,23 +1648,11 @@ object Dedup {
     * reference byte-range semantics of exact-substring dedup. */
   def dedupCut(spark: SparkSession, dir: String): DataFrame = {
     val K = 16
-    // Round-12 (guide §2.6 idle capacity, the r11 numbered-repartition
-    // move): the documents scan is ONE split at bench SFs (a single
-    // sub-MB parquet file), so the per-position 16-gram concat+md5 — the
-    // query's dominant CPU — ran as two ~850 ms single-task stages with
-    // 31 cores idle. The numbered repartition (width = session conf, AQE
-    // never coalesces it) spreads the tokenized frame; it fires ONLY when
-    // the scan's own parallelism is under half the session width, so a
-    // production corpus whose scan already has many splits skips the
-    // shuffle entirely. Both the position explode and the digest explode
-    // consume the SAME exchange (ReuseExchange), so tokenization also
-    // drops from two passes to one.
-    val docsRaw = G.table(spark, dir, "documents")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts"))
-    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toksDf =
-      if (docsRaw.rdd.getNumPartitions * 2 < width) docsRaw.repartition(width)
-      else docsRaw
+    // spread: the per-position 16-gram concat+md5 is the query's dominant
+    // CPU. Both the position explode and the digest explode consume the
+    // SAME spread exchange (ReuseExchange), so tokenization runs once.
+    val toksDf = G.spread(G.table(spark, dir, "documents")
+      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("ts")))
     val pos = toksDf.select(col("doc_id"),
       posexplode(col("ts")).as(Seq("off", "tok")))
     val starts = toksDf.select(col("doc_id"),
@@ -1834,14 +1771,8 @@ object Dedup {
   def simJoin(spark: SparkSession, dir: String, tau: Double = 0.5)
       : DataFrame =
     simJoinCore(
-      ppIndexMemo.getOrBuild(spark, dir) {
-        // localCheckpoint the ARTIFACT READ path too (the in-memory build
-        // path already checkpoints inside ppIndexOn) — round-11, see
-        // sharedNearDupPairs
-        graft.ArtifactStore.getOrBuild(spark, "ppjoin_index", dir) {
-          ppIndexOn(G.table(spark, dir, "documents"))
-        }.localCheckpoint()
-      }.cache(), tau)
+      ppIndex(spark, dir)(ppIndexOn(G.table(spark, dir, "documents")))
+        .cache(), tau)
       // the per-call .cache() matters beyond re-scan cost: it restores
       // RELATION SIZE STATS over the checkpointed RDD, without which the
       // planner demotes the two verify joins from broadcast to shuffling
@@ -1868,8 +1799,8 @@ object Dedup {
       .cache()
     val tf = ex.groupBy(col("g")).agg(count(lit(1)).as("freq"))
     // localCheckpoint (eager) materializes the index here — it both
-    // survives Bench's clearCache between queries (the sharedNearDupPairs
-    // lesson) and lets the exploded-shingle cache be dropped immediately
+    // survives Bench's clearCache between queries (see graft.Artifact)
+    // and lets the exploded-shingle cache be dropped immediately
     // instead of pinning ~2× the corpus's shingles until session teardown
     // (Stress ladders never clearCache between rungs).
     val res = ex
@@ -1883,8 +1814,7 @@ object Dedup {
     res
   }
 
-  private val ppIndexMemo = // onEvict: release checkpoint blocks on sweep
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+  private val ppIndex = new graft.Artifact("ppjoin_index", 2)
 
   private def simJoinCore(sorted: DataFrame, tau: Double): DataFrame = {
     val pre = sorted.select(col("doc_id"),
@@ -1947,19 +1877,9 @@ object Dedup {
   /** Kernel on any (doc_id, text) frame — the spec runs it on planted
     * excerpt/duplicate fixtures. */
   private[graft] def containmentOn(docsRaw: DataFrame): DataFrame = {
-    // Round-12 (the x8 move, guide §2.6 idle capacity): the documents scan
-    // is ONE split at bench SFs, so the per-position 8-gram concat+xxhash —
-    // this query's dominant CPU — ran as 0.8-2.5 s single-task stages
-    // (PROF_JOBS). The numbered repartition (AQE never coalesces it)
-    // spreads gram generation; guarded to fire only when the scan's own
-    // parallelism is under half the session width, so a many-split
-    // production corpus skips the shuffle.
-    val width = docsRaw.sparkSession
-      .conf.get("spark.sql.shuffle.partitions").toInt
-    val docs =
-      if (docsRaw.rdd.getNumPartitions * 2 < width) docsRaw.repartition(width)
-      else docsRaw
-    val g = docs
+    // spread: the per-position 8-gram concat+xxhash is this query's
+    // dominant CPU
+    val g = G.spread(docsRaw)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("t"))
       .filter(size(col("t")) >= 8)
       .select(col("doc_id"), explode(expr(
@@ -2398,40 +2318,32 @@ object Dedup {
     * label-propagation rounds run on the contracted graph, whose diameter
     * collapses with the base components. */
   def incrementalClusters(spark: SparkSession, dir: String): DataFrame =
-    incrementalClustersOf(sharedNearDupPairs(spark, dir),
-      baseLabelTag = Some((dir, "c27_base_labels")))
+    incrementalClustersOf(spark, dir, None)
 
   // Round-12: step (1)'s "yesterday's labels" are exactly what the scale
   // note below step (4) documents as a per-snapshot artifact ("free at
   // refresh time") — yet the query recomputed the base-graph label
   // propagation (an RDD loop with per-round count actions, the dominant
   // cost of the query: ~2.5 s of its 3.6 s warm build, PROF-measured) on
-  // EVERY execution. Published/memoized like neardup_pairs: the first
-  // consumer builds, later executions read the labels and pay only the
-  // O(delta) contract + compose — which is the production shape the
-  // docstring describes. onEvict releases the checkpoint blocks.
-  private val baseLabMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+  // EVERY execution. Later executions now pay only the O(delta) contract
+  // + compose — the production shape the docstring describes.
+  private val baseLabels = new graft.Artifact("c27_base_labels", 2)
 
-  private def incrementalClustersOf(pairsRaw: DataFrame,
-      baseLabelTag: Option[(String, String)] = None): DataFrame = {
-    val spark = pairsRaw.sparkSession
+  /** The base/delta composition over the near-dup pairs of the corpus or of
+    * its doc_id < w window. */
+  private def incrementalClustersOf(spark: SparkSession, dir: String,
+      w: Option[Long]): DataFrame = {
     import spark.implicits._
-    val pairs = pairsRaw.select(col("doc_a"), col("doc_b"))
+    val pairs = w.fold(sharedNearDupPairs(spark, dir))(
+      windowPairs(spark, dir, _)).select(col("doc_a"), col("doc_b"))
     def isDelta(c: org.apache.spark.sql.Column) = c % 5 === 0
     val basePairs = pairs
       .filter(!isDelta(col("doc_a")) && !isDelta(col("doc_b")))
     val deltaPairs = pairs
       .filter(isDelta(col("doc_a")) || isDelta(col("doc_b")))
     // (1) yesterday's labels (id -> bl), id = every base-edge endpoint
-    val baseLab = baseLabelTag match {
-      case Some((dir, name)) =>
-        baseLabMemo.getOrBuild(spark, s"$dir#$name") {
-          graft.ArtifactStore.getOrBuild(spark, name, dir) {
-            memberLabels(basePairs.as[(Long, Long)])
-          }.localCheckpoint()
-        }
-      case None => memberLabels(basePairs.as[(Long, Long)])
+    val baseLab = baseLabels(spark, dir, windowParam(w)) {
+      memberLabels(basePairs.as[(Long, Long)])
     }
     // (2) contract delta edges through the base labels; endpoints with no
     // base component stay themselves. Self-loops cannot arise (a delta
@@ -2642,44 +2554,17 @@ object Dedup {
       s"FROM (SELECT * FROM documents WHERE doc_id < $w) documents")
   }
 
-  /** WINDOW suffix ranks, memoized and disk-published like the
-    * full-corpus [[saRanks]] artifact (keyed by the window bound): x6w
-    * and x7w each paid a full prefix-doubling build over the window PER
-    * BENCH EXECUTION — 14.5 s of every sf0.1 run rebuilding ranks the
-    * verify pass already built (VERDICT r10 #7). The window artifact is
-    * tiny (w docs × ≤256 positions of exact longs), so consumers just
-    * scan the published parquet. */
-  private val saWMemo = // onEvict: release checkpoint blocks on sweep
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
-  private def saRanksW(spark: SparkSession, dir: String,
-      w: Long): DataFrame =
-    saWMemo.getOrBuild(spark, s"$dir#w=$w") {
-      val spk = spark
-      import spk.implicits._
-      graft.ArtifactStore.getOrBuild(spark, s"suffix_ranks_w$w", dir) {
-        saRanksOn(spark,
-          G.table(spark, dir, "documents").filter(col("doc_id") < w))
-          .toDF("pos", "r")
-      }.localCheckpoint() // see sharedNearDupPairs — same round-11 move
-    }
-
   /** q_x6w: the suffix array over the doc_id < 1200 window. */
   def suffixArrayW(spark: SparkSession, dir: String,
       w: Long = 1200): DataFrame =
-    saRanksW(spark, dir, w)
-      .select(col("r").as("rank"),
-        expr("pos DIV 256").as("doc_id"), expr("pos % 256").as("off"))
-      .orderBy(col("rank"), col("doc_id"), col("off"))
+    suffixArrayOf(saRanks(spark, dir, Some(w)))
 
   val suffixArrayWSql: String = windowedDocsSql(suffixArraySql, 1200)
 
   /** q_x7w: longest repeated token span within the doc_id < 1200 window. */
   def repeatedSpansW(spark: SparkSession, dir: String,
-      w: Long = 1200): DataFrame = {
-    val docs = G.table(spark, dir, "documents").filter(col("doc_id") < w)
-    repeatedSpansOf(docs, saRanksW(spark, dir, w),
-      spanTag = Some((spark, s"repeated_spans_w$w", dir)))
-  }
+      w: Long = 1200): DataFrame =
+    repeatedSpansOf(spark, dir, Some(w))
 
   val repeatedSpansWSql: String = windowedDocsSql(repeatedSpansSql, 1200)
 
@@ -2738,8 +2623,7 @@ object Dedup {
     * fixpoint on the window. */
   def incrementalClustersW(spark: SparkSession, dir: String,
       w: Long = 2000): DataFrame =
-    incrementalClustersOf(windowPairs(spark, dir, w),
-      baseLabelTag = Some((dir, s"c27_base_labels_w$w")))
+    incrementalClustersOf(spark, dir, Some(w))
 
   val incrementalClustersWSql: String =
     windowedDocsSql(incrementalClustersSql, 2000)

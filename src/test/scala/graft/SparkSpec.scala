@@ -19,4 +19,9 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Held by every test that mutates the JVM-wide artifact state
+    * (`ArtifactStore.rootOverride`, `enabled`, `graceMs`), so such tests
+    * never interleave if suites run in parallel in one JVM. */
+  val artifactLock = new Object
 }
