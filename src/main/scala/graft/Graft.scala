@@ -31,8 +31,10 @@ object Graft {
 
   /** The confs `session` sets: AQE on, UTC, shuffle parallelism = cores
     * (not the 200 default — at cluster scale set this to 2–3× total
-    * executor cores instead), the codegen cache above, `extraConf` last so
-    * a caller's override wins. */
+    * executor cores instead), the codegen cache above, the fork-free local
+    * filesystem (`LocalFs.scala`) for both Hadoop APIs, `extraConf` last so
+    * a caller's override wins. `Smoke`'s bare session gets none of these,
+    * the shim included, by intent: it checks a stock session. */
   private[graft] def conf(cores: Int,
       extraConf: Map[String, String] = Map.empty): Map[String, String] = Map(
     "spark.master" -> s"local[$cores]",
@@ -46,6 +48,8 @@ object Graft {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
       sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"),
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
     "spark.ui.enabled" -> "false"
   ) ++ extraConf
 

@@ -67,8 +67,12 @@ object StreamingJobs {
     * MEASURED AND REJECTED as a speedup — a within-JVM A/B alternating
     * this base between /dev/shm (RAM) and /tmp (disk) across
     * late/scd2/resume/profile showed the two arms within noise on every
-    * query (the page cache absorbs the small per-trigger writes; nothing
-    * on the commit path fsyncs). The knob stays because it is the right
+    * query. The commit path's cost was never the device: without the
+    * native libhadoop, stock Hadoop forks `chmod` for every file and `.crc`
+    * it creates and `readlink` for both sides of every rename, on RAM and
+    * disk alike (10 s of live cdc_ingest: over 1,200 children seen by
+    * `tools/child_census.py`, 3.7 s of child CPU); `graft.LocalFs`, set by
+    * `Graft.session`, removes them. The knob stays because it is the right
     * seam for the A/B and for deployments whose local disks are actually
     * slow. Resolution order: `graft.replay.tmpdir` session conf
     * (within-JVM A/B via graft.Prof), `SPARK_GRAFT_REPLAY_TMP` env,
@@ -2073,7 +2077,9 @@ object StreamingJobs {
         col("trade_volume").as("k")))
 
   /** W4: session config for fault-tolerant state — RocksDB state store
-    * (reference: RocksDB backend, EXACTLY_ONCE, 60 s checkpoints). */
+    * (reference: RocksDB backend, EXACTLY_ONCE, 60 s checkpoints).
+    * Each stateful partition commits four files per trigger: the changelog,
+    * Spark's checksum sidecar, and a Hadoop `.crc` for each. */
   def configureStateStore(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

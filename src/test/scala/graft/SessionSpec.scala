@@ -4,8 +4,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.col
 
 /** `Graft.session` is the one session factory: it sizes the codegen cache
-  * for the suite's working set, and every main keeps the confs it set on
-  * its own builder before they were folded into it. */
+  * for the suite's working set, routes local `file:` I/O through the
+  * fork-free `graft.LocalFs`, and every main keeps the confs it set on its
+  * own builder before they were folded into it. `Smoke` is not among the
+  * mains below: it builds a bare session on purpose (a stock session, as
+  * the driver's t1 check runs), so it gets neither the cache size nor the
+  * local filesystem shim. */
 class SessionSpec extends SparkSpec {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -25,9 +29,14 @@ class SessionSpec extends SparkSpec {
       "plan 0's class was evicted: the codegen cache is too small")
   }
 
+  private val LocalFsImpls = Map(
+    "spark.hadoop.fs.file.impl" -> "graft.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.NioLocalFs")
+
   test("the test session is built by Graft.session and keeps its own confs") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       Graft.CodegenCacheEntries.toString)
+    LocalFsImpls.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get(
       "spark.sql.adaptive.coalescePartitions.minPartitionSize") == "1m")
@@ -60,6 +69,7 @@ class SessionSpec extends SparkSpec {
         sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"), name)
       assert(c("spark.sql.codegen.cache.maxEntries") ==
         Graft.CodegenCacheEntries.toString, name)
+      LocalFsImpls.foreach { case (k, v) => assert(c(k) == v, s"$name $k") }
       assert(c.get("spark.scheduler.mode") == (if (fair) Some("FAIR") else None),
         name)
     }
