@@ -1303,8 +1303,7 @@ object Dedup {
     val n = deg.count()
     var ranks = deg
       .select(col("node"), col("deg"), (lit(1.0) / n).as("rank"))
-    val ckpt = spark.conf.getOption("graft.c15.ckpt").exists(_.toBoolean)
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contrib = edges
         .join(ranks, col("src") === col("node"))
         .groupBy(col("dst"))
@@ -1312,16 +1311,6 @@ object Dedup {
       ranks = deg.join(contrib, col("node") === col("dst"))
         .select(col("node"), col("deg"),
           (lit(0.15) / n + lit(0.85) * col("contrib")).as("rank"))
-      // Round-12 MEASURED AND REJECTED (default off): a per-round
-      // localCheckpoint truncates the lazily-chained round plans (plan
-      // 496 -> 228 lines, exec 2.5 -> 1.0 s) but the checkpoint
-      // materialization costs ~2 s per execution — 12-rep within-JVM A/B
-      // totals: ckpt ~3.26 s vs plain ~3.09 s steady-state, and the full
-      // bench read c15 3.6 -> 4.3 s with it on. The chained plan's task
-      // binaries (2 MiB+) are cheaper than eager materialization at this
-      // round count. Conf gate kept for re-measurement at larger scale,
-      // where plan depth grows with data and the trade may invert.
-      if (ckpt && i < iters) ranks = ranks.localCheckpoint()
     }
     ranks.select(col("node").as("doc_id"), col("deg"), col("rank"))
       .orderBy(col("doc_id"))

@@ -5,7 +5,7 @@ import graft.model.{AnomalyAlert, DetectorState}
 import graft.operators.{AnomalyDetection, CdcParser, TradeAggregates}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured-Streaming layer (SURVEY §2.5 T1–T3, §2.6 W1–W4, §2.7 K1–K4):
   * the reference Flink job (`flink/.../CdcPipelineJob.java:35-101`)
@@ -30,27 +30,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingJobs {
 
   /** Replay-sized state parallelism. Every stateful operator commits one
-    * state-store instance PER SHUFFLE PARTITION per micro-batch; at the
-    * session's batch-oriented 32 partitions a 15-trigger replay pays
-    * 32 × operators × 15 state-store commits to manage a few hundred keys
-    * — measured as the dominant wall cost of the round-7 streaming block
-    * (102 s of a 318 s bench). Production sizes state partitions to key
-    * cardinality, not to the batch scan width; 8 covers every replay's
-    * key space with headroom. Override with SPARK_GRAFT_STREAM_SHUFFLE. */
-  @volatile private[graft] var replayShufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+    * state-store instance per shuffle partition per micro-batch; at the
+    * session's 32 partitions a 15-trigger replay paid 32 × operators × 15
+    * state-store commits for a few hundred keys, the dominant wall cost of
+    * the round-7 streaming block (102 s of a 318 s bench). 8 covers every
+    * replay's key space with headroom (r11 measured it against 4 and 32). */
+  @volatile private[graft] var replayShufflePartitions: String = "8"
 
-  /** `.startReplay(spark)` = `.startReplay()` with `spark.sql.shuffle.partitions`
-    * set to the replay size for the duration of the start call, restored
-    * immediately after: Structured Streaming CLONES the session at start
-    * (and pins the value in the batch-0 offset metadata for stateful
-    * operators; resume reads it back from the checkpoint), so the running
-    * stream keeps the replay setting while the caller's session — and
-    * every batch query after it — is untouched. */
-  /** Per-call scratch dir (sink/checkpoint/state) — swept in one JVM-exit
-    * hook (File.deleteOnExit can't remove non-empty trees; before this,
-    * every replay call left its parquet sink and checkpoint in /tmp
-    * forever). */
+  /** Per-call scratch dirs (sink, checkpoint, state) under java.io.tmpdir,
+    * swept in one JVM-exit hook (File.deleteOnExit can't remove non-empty
+    * trees). Round 12 measured /dev/shm against /tmp for them: within
+    * noise on every replay, because the commit path's cost was Hadoop
+    * forking `chmod`/`readlink` per file, not the device (`graft.LocalFs`
+    * removes the forks). */
   private val scratchDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   locally {
@@ -59,67 +51,109 @@ object StreamingJobs {
       "graft-replay-scratch-cleanup"))
   }
 
-  /** Base dir for per-call replay scratch (checkpoint WAL, state-store
-    * files, versioned state snapshots, parquet sinks) — all of it is
-    * ephemeral per-replay I/O, deleted at JVM exit, and every byte of it
-    * sits on the per-trigger commit path (offset/commit WAL writes, state
-    * delta files, snapshot rewrites). Round-12 (guide §6, I/O layout):
-    * MEASURED AND REJECTED as a speedup — a within-JVM A/B alternating
-    * this base between /dev/shm (RAM) and /tmp (disk) across
-    * late/scd2/resume/profile showed the two arms within noise on every
-    * query. The commit path's cost was never the device: without the
-    * native libhadoop, stock Hadoop forks `chmod` for every file and `.crc`
-    * it creates and `readlink` for both sides of every rename, on RAM and
-    * disk alike (10 s of live cdc_ingest: over 1,200 children seen by
-    * `tools/child_census.py`, 3.7 s of child CPU); `graft.LocalFs`, set by
-    * `Graft.session`, removes them. The knob stays because it is the right
-    * seam for the A/B and for deployments whose local disks are actually
-    * slow. Resolution order: `graft.replay.tmpdir` session conf
-    * (within-JVM A/B via graft.Prof), `SPARK_GRAFT_REPLAY_TMP` env,
-    * java.io.tmpdir. Durable checkpoints for RESUMABLE production streams
-    * belong on durable storage regardless — this only places the
-    * self-contained replay harness's throwaway state. */
-  private def scratchBase(): java.nio.file.Path = {
-    val fromConf = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => scala.util.Try(
-        s.conf.getOption("graft.replay.tmpdir")).toOption.flatten)
-    val fromEnv = sys.env.get("SPARK_GRAFT_REPLAY_TMP")
-    val base = fromConf.orElse(fromEnv).map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp")))
-    java.nio.file.Files.createDirectories(base)
-    base
-  }
-  private def replayTmp(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(scratchBase(), prefix)
-    scratchDirs.add(p.toString)
+  private def replayTmp(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    scratchDirs.add(p)
     p
   }
 
   private val startLock = new Object
-  private implicit class ReplayWriter[T](
-      w: org.apache.spark.sql.streaming.DataStreamWriter[T]) {
-    /** `sparkOf`: the session the stream will clone from — ALWAYS passed
-      * explicitly (a `SparkSession.active` default can resolve to a
-      * different session than the one the writer was built on, e.g. Verify
-      * worker threads with inherited thread-locals, and the override would
-      * then be set/restored on the wrong session: the replay silently runs
-      * at full batch width while an unrelated session's conf is briefly
-      * mutated under it). The set/start/restore triple is locked: Verify
-      * starts replays from a concurrent worker pool, and interleaved
-      * set/restore pairs would otherwise leave the shared session at the
-      * replay width (performance-only — results are partition-count
-      * independent, spec-pinned — but the session must come back exactly
-      * as found). */
-    def startReplay(sparkOf: SparkSession): StreamingQuery =
-      startLock.synchronized {
-        val prev = sparkOf.conf.get("spark.sql.shuffle.partitions")
-        sparkOf.conf
-          .set("spark.sql.shuffle.partitions", replayShufflePartitions)
-        try w.start()
-        finally sparkOf.conf.set("spark.sql.shuffle.partitions", prev)
-      }
+
+  /** Start `w` with `spark.sql.shuffle.partitions` set to
+    * [[replayShufflePartitions]] for the duration of the start call,
+    * restored immediately after: Structured Streaming CLONES the session at
+    * start (and pins the value in the batch-0 offset metadata for stateful
+    * operators; resume reads it back from the checkpoint), so the running
+    * stream keeps the replay setting while the caller's session — and
+    * every batch query after it — is untouched.
+    *
+    * `spark` is the session the writer was built on, ALWAYS passed
+    * explicitly (a `SparkSession.active` default can resolve to a
+    * different session, e.g. on Verify worker threads with inherited
+    * thread-locals, and the override would then be set/restored on the
+    * wrong session). The set/start/restore triple is locked: Verify starts
+    * replays from a concurrent worker pool, and interleaved set/restore
+    * pairs would otherwise leave the shared session at the replay width
+    * (performance-only — results are partition-count independent,
+    * spec-pinned — but the session must come back exactly as found). */
+  private def startReplay[T](spark: SparkSession,
+      w: DataStreamWriter[T]): StreamingQuery =
+    startLock.synchronized {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions)
+      try w.start()
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+
+  /** Drain `w` once: checkpoint at `ck`, `Trigger.AvailableNow`, started
+    * by [[startReplay]] on `spark`, returning when the input is consumed. */
+  private def drain[T](spark: SparkSession, ck: String,
+      w: DataStreamWriter[T]): Unit =
+    drain(startReplay(spark,
+      w.option("checkpointLocation", ck).trigger(Trigger.AvailableNow())))
+
+  /** Wait for a started AvailableNow query to finish; stop it on any exit
+    * (a failed or interrupted wait must not leave it running). */
+  private def drain(q: StreamingQuery): Unit =
+    try q.awaitTermination() finally if (q.isActive) q.stop()
+
+  /** Parquet-sink replay: drain `df` (started on its own session) into a
+    * fresh append-mode parquet sink and read the sink back on `spark` with
+    * the stream's own schema — no schema-inference job, and a stream that
+    * emitted no rows reads back as an empty frame (inference throws
+    * "Unable to infer schema" on a sink without data files). */
+  private[graft] def parquetReplay(spark: SparkSession, prefix: String,
+      df: Dataset[_]): DataFrame = {
+    val tmp = replayTmp(prefix)
+    drainToParquet(df, s"$tmp/out", s"$tmp/ck")
+    spark.read.schema(df.schema).parquet(s"$tmp/out")
   }
+
+  private def drainToParquet(df: Dataset[_], out: String, ck: String): Unit =
+    drain(df.sparkSession, ck, df.writeStream.format("parquet")
+      .option("path", out).outputMode("append"))
+
+  /** The newest `<prefix><n>` entry of the versioned-state dir `dir` with
+    * n < `before` (each foreachBatch writes version `<prefix><batchId>`, so
+    * a retried batch re-derives from the same parent). */
+  private def latest(dir: String, prefix: String,
+      before: Long = Long.MaxValue): Option[String] = {
+    val ns = new java.io.File(dir).list()
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong)
+      .filter(_ < before)
+    if (ns.isEmpty) None else Some(s"$dir/$prefix${ns.max}")
+  }
+
+  /** Replay inputs, staged once per (session, key) and shared by every
+    * bench rep and every replay of the same shape: a staged dir is
+    * IMMUTABLE once written (streams only read it; out/ck dirs are
+    * per-call), so the replays measure the streaming machinery, not
+    * repeated fixture writes. Dirs are deleted on session sweep / JVM
+    * exit. */
+  private val fixtureMemo = graft.SessionMemo.tempDirs()
+
+  /** Stage: `write` fills a fresh `in/` dir once per (session, key) — the
+    * memo holds (and on evict deletes) its parent. With `stamp`, the
+    * `part-*` files get ascending modtimes in name order, so a file source
+    * (`latestFirst=false` processes in modtime order) with
+    * `maxFilesPerTrigger = 1` replays one file per micro-batch in that
+    * order. Files a writer stamps itself (sentinels, redeliveries) must be
+    * named outside `part-*` and dated after the stamped ones. */
+  private def stage(spark: SparkSession, key: String,
+      stamp: Boolean = false)(write: String => Unit): String =
+    fixtureMemo.getOrBuild(spark, key) {
+      val base = java.nio.file.Files.createTempDirectory("graft_fix_").toString
+      write(s"$base/in")
+      if (stamp) {
+        val t0 = System.currentTimeMillis() - 3600000L
+        new java.io.File(s"$base/in").listFiles()
+          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+          .zipWithIndex.foreach { case (f, i) =>
+            f.setLastModified(t0 + i * 1000L); ()
+          }
+      }
+      base
+    } + "/in"
 
   /** S1-equivalent: stream of envelope JSON lines from a directory
     * (the offline replay analogue of the Kafka topic; swap for
@@ -202,18 +236,9 @@ object StreamingJobs {
     * candles must be byte-identical. Single watermark branch (the
     * BID/ASK filter keeps the ASK sentinel), so one sentinel suffices. */
   def ohlcReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_ohlc")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopeWithSentinel(spark, dir)
-    val agg = ohlcStream(readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20))
-    val q = agg.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_ohlc",
+        ohlcStream(readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)))
       .filter(col("market") =!= "ZSENTINEL")
       .orderBy(col("market"), col("candle_ms"))
   }
@@ -244,8 +269,6 @@ object StreamingJobs {
     * the archive, and this query is the correctness contract that lets
     * you trust that shortcut. */
   def backfillReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_bf")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val env = graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
     val mm = env.agg(min(col("src_ms")), max(col("src_ms"))).head()
     val mid = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
@@ -253,15 +276,8 @@ object StreamingJobs {
     val batchPart = graft.operators.DashboardQueries.ohlcCandles(spark, dir)
       .filter(col("candle_ms") < cutoff)
     val in = stagedEnvelopeWithSentinel(spark, dir, minMs = cutoff)
-    val agg = ohlcStream(readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20))
-    val q = agg.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    val streamPart = spark.read.parquet(out)
+    val streamPart = parquetReplay(spark, "graft_stream_bf",
+        ohlcStream(readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)))
       .filter(col("market") =!= "ZSENTINEL")
     batchPart.unionByName(streamPart)
       .orderBy(col("market"), col("candle_ms"))
@@ -291,13 +307,11 @@ object StreamingJobs {
     * idempotizes the sink with the batch id. */
   def ivmJoinReplay(spark: SparkSession, dir: String): DataFrame = {
     val tmp = replayTmp("graft_stream_ivm")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
+    val out = s"$tmp/out"
     val stateA = s"$tmp/bids"; val stateB = s"$tmp/asks"
     val in = stagedEnvelopeWithSentinel(spark, dir, sentinels = 1, parts = 3)
     val parsed = readCdcStream(spark, in, maxFilesPerTrigger = 1)
-    val q = parsed.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
+    drain(spark, s"$tmp/ck", parsed.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession
         def side(ab: String, idc: String, pc: String) = batch
@@ -325,9 +339,7 @@ object StreamingJobs {
         dB.write.mode("append").parquet(stateB)
         dA.unpersist(); dB.unpersist()
         ()
-      }
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+      })
     spark.read.parquet(out)
       .filter(col("market") =!= "ZSENTINEL")
       .orderBy(col("bid_id"), col("ask_id"))
@@ -504,7 +516,7 @@ object StreamingJobs {
       trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
       maxFilesPerTrigger: Int = 8): StreamingQuery = {
     val parsed = readCdcStream(spark, inputDir, maxFilesPerTrigger)
-    parsed.writeStream
+    val w = parsed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -524,7 +536,7 @@ object StreamingJobs {
           ()
         } finally batch.unpersist()
       }
-      .startReplay(spark)
+    startReplay(spark, w)
   }
 
   /** Latest materialized fan-out sink root per input dir, within this JVM:
@@ -538,6 +550,15 @@ object StreamingJobs {
   private val lastReplayOut =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** The plain single-batch envelope fixture (natural partitioning, no
+    * sentinel) shared by the fan-out, detector, TWS, join and enrich
+    * replays — staged once per (session, dir). */
+  private def stagedEnvelopePlain(spark: SparkSession, dir: String)
+      : String =
+    stage(spark, s"$dir#plain")(
+      graft.operators.CdcParser.eventsAsEnvelopeJson(spark, dir)
+        .write.mode("overwrite").text(_))
+
   /** Run the T1 fan-out once over the events-derived envelope stream
     * (`CdcParser.eventsAsEnvelopeJson` — the exact q_p1 input) via the
     * file-stream source with `Trigger.AvailableNow`, materializing all
@@ -547,26 +568,12 @@ object StreamingJobs {
     * single micro-batch: the per-batch window aggregate in the agg sink
     * then equals the global aggregate (cross-batch stateful windows are
     * covered by StreamingSpec's watermarked queries). */
-  /** The plain single-batch envelope fixture (natural partitioning, no
-    * sentinel) shared by the fan-out, detector, TWS, join and enrich
-    * replays — staged once per (session, dir). */
-  private def stagedEnvelopePlain(spark: SparkSession, dir: String)
-      : String =
-    fixtureMemo.getOrBuild(spark, s"$dir#plain") {
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_fix_plain_").toString
-      graft.operators.CdcParser.eventsAsEnvelopeJson(spark, dir)
-        .write.mode("overwrite").text(s"$base/in")
-      base
-    } + "/in"
-
   private def runFanOutReplay(spark: SparkSession, dir: String): String = {
     val tmp = replayTmp("graft_stream_a1")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
+    val out = s"$tmp/out"
     val in = stagedEnvelopePlain(spark, dir)
-    val q = fanOut(spark, in, out, ck, Trigger.AvailableNow(),
-      maxFilesPerTrigger = 1 << 20)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    drain(fanOut(spark, in, out, s"$tmp/ck", Trigger.AvailableNow(),
+      maxFilesPerTrigger = 1 << 20))
     lastReplayOut.put(dir, out)
     out
   }
@@ -636,19 +643,9 @@ object StreamingJobs {
     * cross-micro-batch state carry is pinned by StreamingSpec's
     * two-batch MemoryStream test. */
   def detectorReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_d")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopePlain(spark, dir)
-    val q = detectAnomaliesStream(
-        readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20))
-      .writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_d", detectAnomaliesStream(
+        readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)))
       .groupBy(col("alert_type")).agg(count(lit(1)).as("n"))
       .orderBy(col("alert_type"))
   }
@@ -666,21 +663,11 @@ object StreamingJobs {
   def twsReplay(spark0: SparkSession, dir: String): DataFrame = {
     val spark = spark0.newSession()
     configureStateStore(spark)
-    val tmp = replayTmp("graft_stream_tws")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
-    // stage against the PARENT session: the per-call newSession() would
-    // never hit the (session, dir)-keyed fixture memo
+    // stage and read back on the PARENT session: the per-call newSession()
+    // would never hit the (session, dir)-keyed fixture memo
     val in = stagedEnvelopePlain(spark0, dir)
-    val q = detectAnomaliesTws(
-        readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20))
-      .writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark0.read.parquet(out)
+    parquetReplay(spark0, "graft_stream_tws", detectAnomaliesTws(
+        readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)))
       .groupBy(col("alert_type")).agg(count(lit(1)).as("n"))
       .orderBy(col("alert_type"))
   }
@@ -694,9 +681,8 @@ object StreamingJobs {
     *
     * Replay construction (all deterministic):
     *  - the base envelope is range-partitioned on event time, so
-    *    part-0000k ascends in time; each part's modtime is then stamped
-    *    ascending, and the file source (`latestFirst=false` processes in
-    *    modtime order) with `maxFilesPerTrigger=1` replays one file per
+    *    part-0000k ascends in time; [[stage]] stamps the parts' modtimes
+    *    ascending, so `maxFilesPerTrigger=1` replays one file per
     *    micro-batch in event-time order — no original row is ever behind
     *    the watermark when it arrives.
     *  - redelivered duplicates are the events in the newest 9 minutes of
@@ -710,26 +696,16 @@ object StreamingJobs {
     * Duplicate rows are byte-identical to their originals, so WHICH copy
     * survives never affects the output. */
   def dedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_k5")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
-    val in = fixtureMemo.getOrBuild(spark, s"$dir#dedup") {
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_fix_k5_").toString
-      val inD = s"$base/in"
+    val in = stage(spark, s"$dir#dedup", stamp = true) { inD =>
       val env = graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
       // 4 time-range files + the redelivery file = 5 micro-batches: enough
       // to carry dedup state across several batches without paying the
       // per-batch state-commit machinery more often than the test needs
       env.repartitionByRange(4, col("src_ms")).select("json")
         .write.mode("overwrite").text(inD)
-      val baseFiles = new java.io.File(inD).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      baseFiles.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 1000L); ()
-      }
       val maxTs = env.agg(max(col("src_ms"))).head().getLong(0)
-      val dupStage = s"$base/dup"
+      val dupStage = new java.io.File(new java.io.File(inD).getParent, "dup")
+        .toString
       env.filter(col("src_ms") >= maxTs - 9L * 60000L).select("json")
         .write.mode("overwrite").text(dupStage)
       new java.io.File(dupStage).listFiles()
@@ -737,20 +713,13 @@ object StreamingJobs {
         .zipWithIndex.foreach { case (f, i) =>
           val dst = new java.io.File(inD, f"z-redelivery-$i%05d.txt")
           java.nio.file.Files.move(f.toPath, dst.toPath)
-          dst.setLastModified(t0 + 7200000L); ()
+          dst.setLastModified(System.currentTimeMillis() + 3600000L); ()
         }
-      base
-    } + "/in"
-    val deduped = dedupStream(readCdcStream(spark, in, maxFilesPerTrigger = 1))
-      .drop("ts")
-    val q = deduped.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out).orderBy(col("trade_id"))
+    }
+    parquetReplay(spark, "graft_stream_k5",
+        dedupStream(readCdcStream(spark, in, maxFilesPerTrigger = 1))
+          .drop("ts"))
+      .orderBy(col("trade_id"))
   }
 
   /** The dedup sink must contain exactly the duplicate-free parse. */
@@ -767,8 +736,6 @@ object StreamingJobs {
     * flushes them all to the sink. Deterministic: session contents are
     * event-time math, independent of batch boundaries. */
   def sessionReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_s")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopeWithSentinel(spark, dir)
     val parsed = readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)
     val sessions = parsed
@@ -781,14 +748,7 @@ object StreamingJobs {
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("market"), col("n_events"), col("total_value"))
-    val q = sessions.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_s", sessions)
       .filter(col("market") =!= "ZSENTINEL")
       .withColumn("session_start", col("session_start")
         .cast(org.apache.spark.sql.types.TimestampNTZType))
@@ -832,19 +792,9 @@ object StreamingJobs {
     * Oracle = the q_stream_a1 window SQL (sentinel filtered both sides by
     * market). */
   def windowAggReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_w")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopeWithSentinel(spark, dir)
-    val agg = windowAggStream(
-      readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20))
-    val q = agg.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_w", windowAggStream(
+        readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)))
       .filter(col("user_id") =!= "ZSENTINEL")
       .withColumn("window_start",
         col("window_start").cast(org.apache.spark.sql.types.TimestampNTZType))
@@ -856,6 +806,50 @@ object StreamingJobs {
   // exactly q_stream_a1's. `def`: fanOutReplaySql is declared later in
   // this object and a val here would capture null at init time.
   def windowAggReplaySql: String = fanOutReplaySql
+
+  /** Shared scaffolding of the incremental-maintenance replays
+    * (latency histogram / centroid refresh / waterfill): [[stage]] the
+    * input once (mtime-stamped so `maxFilesPerTrigger = 1` replays it as
+    * ordered micro-batches), fold each batch's state slice into a
+    * versioned parquet state table, return the FINAL merged state.
+    * `read` builds the streaming source over the staged dir, `slice`
+    * computes a batch's own state contribution, `merge` folds it into
+    * the previous version (must be commutative+associative in the slice
+    * argument, and keep the slice's schema, for the replay to be
+    * batch-boundary-independent — the property every caller's oracle
+    * hash-check actually proves). Fails with a clear message if no batch
+    * committed state. */
+  private def replayVersionedState(
+      spark: SparkSession,
+      writeInput: String => Unit,
+      read: String => DataFrame,
+      statePrefix: String,
+      slice: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame,
+      fixtureTag: String): DataFrame = {
+    val tmp = replayTmp(s"graft_stream_$statePrefix")
+    val st = s"$tmp/state"; val pre = s"${statePrefix}_"
+    new java.io.File(st).mkdirs()
+    // input fixture memoized per (session, tag); ck/state stay per-call
+    val in = stage(spark, fixtureTag, stamp = true)(writeInput)
+    @volatile var schema: org.apache.spark.sql.types.StructType = null
+    drain(spark, s"$tmp/ck", read(in).writeStream
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        val p = slice(batch)
+        val merged = latest(st, pre, bid) match {
+          case None => p
+          case Some(f) =>
+            merge(p, batch.sparkSession.read.schema(p.schema).parquet(f))
+        }
+        merged.coalesce(1).write.mode("overwrite").parquet(s"$st/$pre$bid")
+        schema = merged.schema
+        ()
+      })
+    val fin = latest(st, pre).getOrElse(sys.error(
+      s"replayVersionedState($statePrefix): no micro-batch committed " +
+        "state — was the staged input empty?"))
+    spark.read.schema(schema).parquet(fin)
+  }
 
   /** INCREMENTAL LATENCY SLO, STREAMING (q_stream_latency): the q_p13
     * mergeable log-histogram maintained across micro-batches — the claim
@@ -870,71 +864,6 @@ object StreamingJobs {
     * how arrivals split into batches, which is exactly the property that
     * lets a 100 TB deployment serve p99 lag from a table the size of a
     * screenshot. */
-  /** Shared scaffolding of the incremental-maintenance replays
-    * (latency histogram / centroid refresh / waterfill): stage the input
-    * once (mtime-staggered so `maxFilesPerTrigger = 1` replays it as
-    * ordered micro-batches), fold each batch's state slice into a
-    * versioned parquet state table, return the FINAL merged state.
-    * `read` builds the streaming source over the staged dir, `slice`
-    * computes a batch's own state contribution, `merge` folds it into
-    * the previous version (must be commutative+associative in the slice
-    * argument for the replay to be batch-boundary-independent — the
-    * property every caller's oracle hash-check actually proves). Fails
-    * with a clear message if no batch committed state. */
-  private def replayVersionedState(
-      spark: SparkSession,
-      writeInput: String => Unit,
-      read: String => DataFrame,
-      statePrefix: String,
-      slice: DataFrame => DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame,
-      fixtureTag: String): DataFrame = {
-    val tmp = replayTmp(s"graft_stream_$statePrefix")
-    val ck = s"$tmp/ck"; val st = s"$tmp/state"
-    new java.io.File(st).mkdirs()
-    // input fixture memoized per (session, tag); ck/state stay per-call
-    val in = fixtureMemo.getOrBuild(spark, fixtureTag) {
-      val base = java.nio.file.Files
-        .createTempDirectory(s"graft_fix_${statePrefix}_").toString
-      writeInput(s"$base/in")
-      val t0 = System.currentTimeMillis() - 3600000L
-      new java.io.File(s"$base/in").listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(t0 + i * 1000L); ()
-        }
-      base
-    } + "/in"
-    def latest(before: Long): Option[java.io.File] = {
-      val fs = new java.io.File(st).listFiles()
-        .filter(_.getName.startsWith(s"${statePrefix}_"))
-        .filter(_.getName.stripPrefix(s"${statePrefix}_").toLong < before)
-      if (fs.isEmpty) None
-      else Some(fs.maxBy(_.getName.stripPrefix(s"${statePrefix}_").toLong))
-    }
-    val q = read(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val s = batch.sparkSession
-        val p = slice(batch)
-        val merged = latest(bid) match {
-          case None => p
-          case Some(f) => merge(p, s.read.parquet(f.getPath))
-        }
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(s"$st/${statePrefix}_$bid")
-        ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    val fin = latest(Long.MaxValue).getOrElse(sys.error(
-      s"replayVersionedState($statePrefix): no micro-batch committed " +
-        "state — was the staged input empty?"))
-    spark.read.parquet(fin.getPath)
-  }
-
   def latencyReplay(spark: SparkSession, dir: String): DataFrame = {
     val finalState = replayVersionedState(spark,
       writeInput = in =>
@@ -1116,8 +1045,6 @@ object StreamingJobs {
     * the parse CTE (boundary-free: arrivals are event-time ordered, so
     * the watermark only ever CLOSES windows). */
   def slidingDistinctReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_sd")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopeWithSentinel(spark, dir, sentinels = 1, parts = 4)
     val agg = readCdcStream(spark, in, maxFilesPerTrigger = 1)
       .select(timestamp_millis(col("source_ts")).as("ts"), col("market"))
@@ -1128,20 +1055,14 @@ object StreamingJobs {
       .groupBy(col("win"))
       .agg(count(lit(1)).as("n_markets"))
       .select(col("win.start").as("window_start"), col("n_markets"))
-    val q = agg.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+    val sink = parquetReplay(spark, "graft_stream_sd", agg)
     // the sentinel inflates its own 4 windows' counts by one market; those
     // windows start at/after the sentinel's hour and contain nothing real,
     // so dropping every window the real stream never touched removes them
     val maxReal = graft.operators.CdcParser
       .eventsAsEnvelopeJsonTs(spark, dir)
       .agg(max(col("src_ms"))).head().getLong(0)
-    spark.read.parquet(out)
+    sink
       .filter(col("window_start") <=
         timestamp_millis(lit(maxReal)))
       .withColumn("window_start",
@@ -1184,36 +1105,25 @@ object StreamingJobs {
     val out = s"$tmp/out"; val ck = s"$tmp/ck"
     // the staged fixture is shared/memoized — COPY files into the
     // per-call arrival dir (never move them out of the shared stage)
-    val stage = stagedEnvelopeWithSentinel(spark, dir, sentinels = 1,
+    val fixture = stagedEnvelopeWithSentinel(spark, dir, sentinels = 1,
       parts = 4)
     val inDir = new java.io.File(in); inDir.mkdirs()
-    val staged = new java.io.File(stage).listFiles()
+    val agg = windowAggStream(readCdcStream(spark, in, maxFilesPerTrigger = 1))
+    val staged = new java.io.File(fixture).listFiles()
       .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
       .sortBy(_.lastModified)
-    def runOnce(): Unit = {
-      val q = windowAggStream(readCdcStream(spark, in, maxFilesPerTrigger = 1))
-        .writeStream
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", out)
-        .outputMode("append")
-        .startReplay(spark)
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    }
     val (phase1, phase2) = staged.splitAt(staged.length / 2)
-    phase1.foreach { f =>
-      val dst = new java.io.File(inDir, f.getName)
-      val m = f.lastModified
-      java.nio.file.Files.copy(f.toPath, dst.toPath); dst.setLastModified(m)
+    // phase 1 drains, commits the checkpoint and terminates; phase 2
+    // RESUMES from the same checkpoint: offsets + state restored
+    Seq(phase1, phase2).foreach { phase =>
+      phase.foreach { f =>
+        val dst = new java.io.File(inDir, f.getName)
+        val m = f.lastModified
+        java.nio.file.Files.copy(f.toPath, dst.toPath); dst.setLastModified(m)
+      }
+      drainToParquet(agg, out, ck)
     }
-    runOnce() // drains phase 1, commits the checkpoint, terminates
-    phase2.foreach { f =>
-      val dst = new java.io.File(inDir, f.getName)
-      val m = f.lastModified
-      java.nio.file.Files.copy(f.toPath, dst.toPath); dst.setLastModified(m)
-    }
-    runOnce() // RESUMES from the same checkpoint: offsets + state restored
-    spark.read.parquet(out)
+    spark.read.schema(agg.schema).parquet(out)
       .filter(col("user_id") =!= "ZSENTINEL")
       .withColumn("window_start",
         col("window_start").cast(org.apache.spark.sql.types.TimestampNTZType))
@@ -1237,8 +1147,6 @@ object StreamingJobs {
     * the halves are time-interleaved (the adversarial case for watermark
     * coordination), not time-partitioned. */
   def unionReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_union")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val split = pmod(xxhash64(col("json")), lit(2L))
     val inA = stagedEnvelopeWithSentinel(spark, dir, sentinels = 1,
       parts = 2, keep = split === 0L, tag = "unionA")
@@ -1246,14 +1154,7 @@ object StreamingJobs {
       parts = 2, keep = split === 1L, tag = "unionB")
     val united = readCdcStream(spark, inA, maxFilesPerTrigger = 1)
       .unionByName(readCdcStream(spark, inB, maxFilesPerTrigger = 1))
-    val q = windowAggStream(united).writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_union", windowAggStream(united))
       .filter(col("user_id") =!= "ZSENTINEL")
       .withColumn("window_start",
         col("window_start").cast(org.apache.spark.sql.types.TimestampNTZType))
@@ -1292,8 +1193,6 @@ object StreamingJobs {
     * the production shape — watermark filter → keyed state-store agg,
     * state O(open windows × markets). */
   def lateWindowReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_late")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     // arrival-sliced fixture is immutable once staged → memoized like the
     // sentinel fixtures (the replay measures the watermark machinery,
     // not repeated fixture shuffles)
@@ -1307,14 +1206,7 @@ object StreamingJobs {
         graft.G.dsum(col("trade_price")).as("total_value"))
       .select(col("window.start").as("window_start"), col("market"),
         col("n_trades"), col("total_value"))
-    val q = agg.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_late", agg)
       .filter(col("market") =!= "ZSENTINEL")
       .withColumn("window_start", col("window_start")
         .cast(org.apache.spark.sql.types.TimestampNTZType))
@@ -1345,17 +1237,9 @@ object StreamingJobs {
     * writes) would silently multiply the per-round bench cost. The round-9
     * 6.2 → 7.1 s reading solo-measures at 6.8 s warm with max/min 2.48
     * across idle reps — machinery noise, not a plan change; the pin is the
-    * guard that keeps it that way. */
-  private[graft] def lateFixtureDir(spark: SparkSession, dir: String)
-      : String =
-    fixtureMemo.getOrBuild(spark, s"$dir#late") {
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_fix_late_").toString
-      writeEnvelopeArrivalSlices(spark, dir, s"$base/in")
-      base
-    } + "/in"
-
-  /** The q_stream_late fixture: the envelope stream re-ordered by a
+    * guard that keeps it that way.
+    *
+    * The fixture: the envelope stream re-ordered by a
     * deterministic ARRIVAL clock (cdc time + injected lateness — every
     * 101st trade +7 days when ≥ 8 days from stream end, every 103rd
     * +6 hours), written as one file per arrival DAY with ascending
@@ -1369,8 +1253,8 @@ object StreamingJobs {
     * order — no per-slice filtered writes, no sampled range boundaries
     * (the oracle is boundary-robust, but deterministic files keep the
     * replay byte-stable run to run). */
-  private def writeEnvelopeArrivalSlices(spark: SparkSession, dir: String,
-      in: String): Unit = {
+  private[graft] def lateFixtureDir(spark: SparkSession, dir: String)
+      : String = stage(spark, s"$dir#late", stamp = true) { in =>
     val env = graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
       .cache()
     // the holdback cut is defined on PARSED events (the oracle's world):
@@ -1396,32 +1280,35 @@ object StreamingJobs {
         override def getPartition(key: Any): Int =
           idx(key.asInstanceOf[Long])
       }).values.saveAsTextFile(in)
-    val inDir = new java.io.File(in)
-    val t0 = System.currentTimeMillis() - 7200000L
-    inDir.listFiles().filter(_.getName.startsWith("part-"))
-      .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 1000L); ()
-      }
     val maxSrc = env.agg(max(col("src_ms"))).head().getLong(0)
-    val sentinelTs = maxSrc + 30L * 86400000L
-    val sentinel =
-      s"""{"payload": {"before": null, "after": {"trade_id": 999999990, """ +
-        s""""market": "ZSENTINEL", "trade_price": "1.0", "trade_volume": "1", """ +
-        s""""ask_bid": "ASK", "sequential_id": 999999990000}, """ +
-        s""""source": {"ts_ms": $sentinelTs, "db": "crypto_db", "table": "crypto_trades"}, """ +
-        s""""op": "c", "ts_ms": $sentinelTs}}"""
-    val sentinelFile = new java.io.File(inDir, "z-sentinel.txt")
-    java.nio.file.Files.write(sentinelFile.toPath,
-      (sentinel + "\n").getBytes("UTF-8"))
-    sentinelFile.setLastModified(System.currentTimeMillis() + 7200000L)
+    writeSentinel(in, "z-sentinel.txt", 0, "ASK", maxSrc + 30L * 86400000L,
+      System.currentTimeMillis() + 7200000L)
     env.unpersist()
+    ()
+  }
+
+  /** One ZSENTINEL trade envelope (trade id 999999990 + `i`, event time
+    * `ts`) as its own file `in/name`, modtime `mtime`. */
+  private def writeSentinel(in: String, name: String, i: Int, side: String,
+      ts: Long, mtime: Long): Unit = {
+    val sentinel =
+      s"""{"payload": {"before": null, "after": {"trade_id": ${999999990 + i}, """ +
+        s""""market": "ZSENTINEL", "trade_price": "1.0", "trade_volume": "1", """ +
+        s""""ask_bid": "$side", "sequential_id": ${999999990000L + i}}, """ +
+        s""""source": {"ts_ms": $ts, "db": "crypto_db", "table": "crypto_trades"}, """ +
+        s""""op": "c", "ts_ms": $ts}}"""
+    val f = new java.io.File(in, name)
+    java.nio.file.Files.write(f.toPath, (sentinel + "\n").getBytes("UTF-8"))
+    f.setLastModified(mtime)
     ()
   }
 
   /** Shared by [[sessionReplay]], [[windowAggReplay]] and
     * [[tradeQuoteOuterReplay]]: the envelope stream plus ZSENTINEL trades
     * past its end, written so the sentinels are the last micro-batches and
-    * the final watermark closes every real window/session.
+    * the final watermark closes every real window/session. Staged once per
+    * (session, dir, params); `tag` disambiguates callers whose `keep`
+    * column the key cannot see.
     *
     * `sentinels`: stateful operators that EMIT on state eviction (outer
     * join null rows) need a batch to run AFTER the watermark has already
@@ -1435,67 +1322,27 @@ object StreamingJobs {
     * late once the first batch's watermark passes it. A replay-fixture
     * granularity knob, not a scale choice (0 = keep the write's natural
     * partitioning; single-batch callers). */
-  /** Memoized wrapper over [[writeEnvelopeWithSentinel]]: the staged
-    * input is IMMUTABLE once written (streams only read it; fresh out/ck
-    * dirs are per-call), so it is staged once per (session, dir, params)
-    * and reused by every bench rep and every replay sharing the shape —
-    * the replays measure the streaming machinery, not repeated fixture
-    * writes. `tag` disambiguates callers whose `keep` column the key
-    * cannot see. Dirs are deleted on session sweep / JVM exit. */
-  private val fixtureMemo = graft.SessionMemo.tempDirs()
   private def stagedEnvelopeWithSentinel(spark: SparkSession, dir: String,
       sentinels: Int = 1, parts: Int = 0, minMs: Long = Long.MinValue,
       keep: org.apache.spark.sql.Column = lit(true), tag: String = "")
       : String =
-    fixtureMemo.getOrBuild(spark,
-      s"$dir#s=$sentinels#p=$parts#m=$minMs#$tag") {
-      // the memo holds (and on evict deletes) the PARENT temp dir; the
-      // write lands in its in/ subdirectory
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_fix_").toString
-      writeEnvelopeWithSentinel(spark, dir, s"$base/in", sentinels, parts,
-        minMs, keep)
-      base
-    } + "/in"
-
-  private def writeEnvelopeWithSentinel(spark: SparkSession, dir: String,
-      in: String, sentinels: Int = 1, parts: Int = 0,
-      minMs: Long = Long.MinValue,
-      keep: org.apache.spark.sql.Column = lit(true)): Unit = {
-    val env = graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
-      .filter(col("src_ms") >= minMs && keep)
-    val t0 = System.currentTimeMillis() - 3600000L
-    if (parts > 0) {
-      env.repartitionByRange(parts, col("src_ms")).select("json")
-        .write.mode("overwrite").text(in)
-      new java.io.File(in).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(t0 + i * 1000L); ()
-        }
-    } else env.select("json").write.mode("overwrite").text(in)
-    val maxTs = env.agg(max(col("src_ms"))).head().getLong(0)
-    // alternate ASK/BID: a query with per-side watermark branches (the
-    // stream-stream joins split on ask_bid) takes the MIN across branches,
-    // so a one-sided sentinel would leave the other branch's watermark at
-    // the last real event and hold its final rows in state forever
-    (1 to sentinels).foreach { i =>
-      val sentinelTs = maxTs + i * 2L * 86400000L
-      val side = if (i % 2 == 1) "ASK" else "BID"
-      val sentinel =
-        s"""{"payload": {"before": null, "after": {"trade_id": ${999999990 + i}, """ +
-          s""""market": "ZSENTINEL", "trade_price": "1.0", "trade_volume": "1", """ +
-          s""""ask_bid": "$side", "sequential_id": ${999999990000L + i}}, """ +
-          s""""source": {"ts_ms": $sentinelTs, "db": "crypto_db", "table": "crypto_trades"}, """ +
-          s""""op": "c", "ts_ms": $sentinelTs}}"""
-      val sentinelFile = new java.io.File(in, s"z-sentinel-$i.txt")
-      java.nio.file.Files.write(sentinelFile.toPath,
-        (sentinel + "\n").getBytes("UTF-8"))
-      sentinelFile.setLastModified(
-        System.currentTimeMillis() + 7200000L + i * 60000L)
+    stage(spark, s"$dir#s=$sentinels#p=$parts#m=$minMs#$tag",
+        stamp = parts > 0) { in =>
+      val env = graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
+        .filter(col("src_ms") >= minMs && keep)
+      (if (parts > 0) env.repartitionByRange(parts, col("src_ms")) else env)
+        .select("json").write.mode("overwrite").text(in)
+      val maxTs = env.agg(max(col("src_ms"))).head().getLong(0)
+      // alternate ASK/BID: a query with per-side watermark branches (the
+      // stream-stream joins split on ask_bid) takes the MIN across branches,
+      // so a one-sided sentinel would leave the other branch's watermark at
+      // the last real event and hold its final rows in state forever
+      (1 to sentinels).foreach { i =>
+        writeSentinel(in, s"z-sentinel-$i.txt", i,
+          if (i % 2 == 1) "ASK" else "BID", maxTs + i * 2L * 86400000L,
+          System.currentTimeMillis() + 7200000L + i * 60000L)
+      }
     }
-    ()
-  }
 
   /** Stream–stream event-time interval join: BID (trade) rows joined to
     * the ASK (quote) rows of the same market whose event time falls in the
@@ -1535,19 +1382,10 @@ object StreamingJobs {
     * topology would run with two topics) and read the sink back against a
     * plain DuckDB interval join over the parse oracle. */
   def tradeQuoteJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_j")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopePlain(spark, dir)
-    val joined = tradeQuoteJoin(
-      readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20))
-    val q = joined.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out).orderBy(col("trade_id"), col("quote_id"))
+    parquetReplay(spark, "graft_stream_j", tradeQuoteJoin(
+        readCdcStream(spark, in, maxFilesPerTrigger = 1 << 20)))
+      .orderBy(col("trade_id"), col("quote_id"))
   }
 
   val tradeQuoteJoinSql: String = {
@@ -1600,8 +1438,6 @@ object StreamingJobs {
     * unmatched BID is flushed as a NULL row before the stream ends — the
     * same trick the window/session replays use to close their state). */
   def tradeQuoteOuterReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_oj")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     // outer-join null rows emit on state EVICTION, and this query splits
     // the watermark across two branches (BID trades / ASK quotes) whose
     // MIN gates eviction — so the replay needs sentinels on BOTH sides
@@ -1609,15 +1445,8 @@ object StreamingJobs {
     // event; the trailing no-data micro-batch then flushes every buffered
     // unmatched BID as its null row
     val in = stagedEnvelopeWithSentinel(spark, dir, sentinels = 2)
-    val joined = tradeQuoteOuterJoin(readCdcStream(spark, in))
-    val q = joined.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out)
+    parquetReplay(spark, "graft_stream_oj",
+        tradeQuoteOuterJoin(readCdcStream(spark, in)))
       .filter(col("market") =!= "ZSENTINEL")
       .orderBy(col("trade_id"), col("quote_id"))
   }
@@ -1648,8 +1477,6 @@ object StreamingJobs {
     * micro-batches (the default maxFilesPerTrigger) to exercise the
     * per-batch dimension re-resolution path, not a single-batch join. */
   def enrichReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_e")
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val in = stagedEnvelopePlain(spark, dir)
     val dim = graft.operators.CdcParser.cdcParseRoundtrip(spark, dir)
       .groupBy(col("market"))
@@ -1658,14 +1485,7 @@ object StreamingJobs {
     val enriched = enrichStream(readCdcStream(spark, in), dim)
       .select(col("trade_id"), col("market"), col("trade_price"),
         col("market_trades"), col("market_first_ts"))
-    val q = enriched.writeStream
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", out)
-      .outputMode("append")
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    spark.read.parquet(out).orderBy(col("trade_id"))
+    parquetReplay(spark, "graft_stream_e", enriched).orderBy(col("trade_id"))
   }
 
   /** Parse oracle joined to the same per-market dim, grouped from itself. */
@@ -1748,7 +1568,7 @@ object StreamingJobs {
       val prevPath = s"$stateDir/open_${batchId - 1}"
       val prev =
         if (batchId == 0) b.limit(0)
-        else spark.read.parquet(prevPath)
+        else spark.read.schema(b.schema).parquet(prevPath)
       val bKeys = b.select(col("key")).distinct()
       val touched = prev.join(bKeys, Seq("key"), "left_semi")
         .unionByName(b)
@@ -1775,38 +1595,23 @@ object StreamingJobs {
     * batch q_p8 oracle ([[graft.operators.CdcParser.scd2HistorySql]]). */
   def scd2Replay(spark: SparkSession, dir: String): DataFrame = {
     val tmp = replayTmp("graft_stream_scd2")
-    val ck = s"$tmp/ck"
     val state = s"$tmp/state"; val closed = s"$tmp/closed"
-    val in = fixtureMemo.getOrBuild(spark, s"$dir#scd2") {
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_fix_scd2_").toString
-      val env = graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
-      env.repartitionByRange(5, col("src_ms")).select("json")
-        .write.mode("overwrite").text(s"$base/in")
-      val files = new java.io.File(s"$base/in").listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 1000L); ()
-      }
-      base
-    } + "/in"
+    val in = stage(spark, s"$dir#scd2", stamp = true)(
+      graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
+        .repartitionByRange(5, col("src_ms")).select("json")
+        .write.mode("overwrite").text(_))
     new java.io.File(closed).mkdirs()
-    val q = scd2Stream(readCdcStream(spark, in, maxFilesPerTrigger = 1),
-        state, closed)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    val lastOpen = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("open_"))
-      .maxBy(_.getName.stripPrefix("open_").toLong)
-    val open = spark.read.parquet(lastOpen.getPath)
+    drain(spark, s"$tmp/ck",
+      scd2Stream(readCdcStream(spark, in, maxFilesPerTrigger = 1),
+        state, closed))
+    // explicit schemas: the closed sink is legitimately EMPTY when no key
+    // ever gained a second version (chains of length 1)
+    val open = spark.read.schema("key LONG, sequential_id LONG, " +
+        "market STRING, trade_price DOUBLE, source_ts LONG")
+      .parquet(latest(state, "open_").get)
       .select(col("key"), col("sequential_id"), col("market"),
         col("trade_price"), col("source_ts").as("valid_from"),
         lit(null).cast("long").as("valid_to"), lit(1L).as("is_current"))
-    // explicit schema: the closed sink is legitimately EMPTY when no key
-    // ever gained a second version (chains of length 1)
     val closedDf = spark.read.schema(
         "key LONG, sequential_id LONG, market STRING, trade_price DOUBLE, " +
         "valid_from LONG, valid_to LONG, is_current LONG")
@@ -1836,44 +1641,28 @@ object StreamingJobs {
   def mergeReplay(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Relational
     val tmp = replayTmp("graft_stream_m")
-    val in = s"$tmp/in"; val ck = s"$tmp/ck"; val st = s"$tmp/state"
+    val st = s"$tmp/state"
     new java.io.File(st).mkdirs()
     val delta = Relational.mergeDelta(spark, dir)
-    delta.repartitionByRange(3, col("key"))
-      .write.mode("overwrite").parquet(in)
-    val files = new java.io.File(in).listFiles()
-      .filter(f => f.getName.startsWith("part-"))
-      .sortBy(_.getName)
-    val t0 = System.currentTimeMillis() - 3600000L
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(t0 + i * 1000L); ()
-    }
-    def latestSnap(before: Long): Option[java.io.File] = {
-      val snaps = new java.io.File(st).listFiles()
-        .filter(_.getName.startsWith("snap_"))
-        .filter(_.getName.stripPrefix("snap_").toLong < before)
-      if (snaps.isEmpty) None
-      else Some(snaps.maxBy(_.getName.stripPrefix("snap_").toLong))
-    }
-    val q = spark.readStream.schema(delta.schema)
+    val in = stage(spark, s"$dir#merge", stamp = true)(
+      delta.repartitionByRange(3, col("key")).write.mode("overwrite").parquet(_))
+    val snap = Relational.mergeStep(Relational.mergeTarget(spark, dir), delta)
+      .schema
+    drain(spark, s"$tmp/ck", spark.readStream.schema(delta.schema)
       .option("maxFilesPerTrigger", 1)
       .option("latestFirst", "false")
       .parquet(in)
       .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val s = batch.sparkSession
-        val prev = latestSnap(bid)
-          .map(f => s.read.parquet(f.getPath))
+        val prev = latest(st, "snap_", bid)
+          .map(s.read.schema(snap).parquet(_))
           .getOrElse(Relational.mergeTarget(s, dir))
         Relational.mergeStep(prev, batch)
           .write.mode("overwrite").parquet(s"$st/snap_$bid")
         ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    val fin = spark.read.parquet(latestSnap(Long.MaxValue).get.getPath)
+      })
+    val fin = spark.read.schema(snap).parquet(latest(st, "snap_").get)
     // action relative to the ORIGINAL target — derivable because the
     // synthetic updates always change bal and inserts use fresh keys
     fin.join(Relational.mergeTarget(spark, dir)
@@ -1902,24 +1691,14 @@ object StreamingJobs {
     * crosses engines — only final counts reach the oracle. */
   def profileReplay(spark: SparkSession, dir: String): DataFrame = {
     val tmp = replayTmp("graft_stream_v1")
-    val ck = s"$tmp/ck"; val st = s"$tmp/state"
+    val st = s"$tmp/state"
     new java.io.File(st).mkdirs()
     val ev = graft.G.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))
-    val in = fixtureMemo.getOrBuild(spark, s"$dir#profile") {
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_fix_v1_").toString
+    val in = stage(spark, s"$dir#profile", stamp = true)(
       ev.repartitionByRange(4, col("event_id"))
-        .write.mode("overwrite").parquet(s"$base/in")
-      val files = new java.io.File(s"$base/in").listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 1000L); ()
-      }
-      base
-    } + "/in"
+        .write.mode("overwrite").parquet(_))
     val cols = Seq("event_id", "user_id", "event_type", "value", "props")
     def scalarPartial(df: DataFrame): DataFrame =
       df.agg(
@@ -1934,14 +1713,10 @@ object StreamingJobs {
           .select(lit(c).as("col_name"),
             col(c).cast("string").as("val")).distinct())
         .reduce(_ unionByName _)
-    def latest(prefix: String, before: Long): Option[java.io.File] = {
-      val fs = new java.io.File(st).listFiles()
-        .filter(_.getName.startsWith(prefix))
-        .filter(_.getName.stripPrefix(prefix).toLong < before)
-      if (fs.isEmpty) None
-      else Some(fs.maxBy(_.getName.stripPrefix(prefix).toLong))
-    }
-    val q = spark.readStream.schema(ev.schema)
+    // state schemas: each merge below keeps its partial's schema
+    val scSchema = scalarPartial(ev).schema
+    val dvSchema = distinctPartial(ev).schema
+    drain(spark, s"$tmp/ck", spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).option("latestFirst", "false")
       .parquet(in)
       .writeStream
@@ -1949,10 +1724,10 @@ object StreamingJobs {
         val s = batch.sparkSession
         // mergeable half: fold the batch partial into the scalar state
         val part = scalarPartial(batch)
-        val sc = latest("sc_", bid) match {
+        val sc = latest(st, "sc_", bid) match {
           case None => part
           case Some(f) =>
-            val prev = s.read.parquet(f.getPath)
+            val prev = s.read.schema(scSchema).parquet(f)
             prev.unionByName(part).agg(
               sum(col("n_rows")).as("n_rows"),
               cols.map(c => sum(col(s"null_$c")).as(s"null_$c")) ++
@@ -1963,19 +1738,16 @@ object StreamingJobs {
         sc.coalesce(1).write.mode("overwrite").parquet(s"$st/sc_$bid")
         // holistic half: union the batch's distinct values into the set
         val dp = distinctPartial(batch)
-        val dv = latest("dv_", bid) match {
+        val dv = latest(st, "dv_", bid) match {
           case None => dp
-          case Some(f) => s.read.parquet(f.getPath).unionByName(dp).distinct()
+          case Some(f) =>
+            s.read.schema(dvSchema).parquet(f).unionByName(dp).distinct()
         }
         dv.write.mode("overwrite").parquet(s"$st/dv_$bid")
         ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    val sc = spark.read.parquet(latest("sc_", Long.MaxValue).get.getPath)
-    val nd = spark.read.parquet(latest("dv_", Long.MaxValue).get.getPath)
+      })
+    val sc = spark.read.schema(scSchema).parquet(latest(st, "sc_").get)
+    val nd = spark.read.schema(dvSchema).parquet(latest(st, "dv_").get)
       .groupBy(col("col_name")).agg(count(lit(1)).as("n_distinct"))
     val numeric = Set("event_id", "user_id", "value")
     val longRows = sc.select(col("n_rows"), expr(
@@ -2010,59 +1782,47 @@ object StreamingJobs {
       capacity: Int = 256, k: Int = 50): DataFrame = {
     import graft.functions.SpaceSaving
     val tmp = replayTmp("graft_stream_hh")
-    val in = s"$tmp/in"; val ck = s"$tmp/ck"; val st = s"$tmp/state"
+    val st = s"$tmp/state"
     new java.io.File(st).mkdirs()
-    graft.operators.Curation.docTexts(spark, dir)
-      .repartitionByRange(4, col("doc_id")).select("text")
-      .write.mode("overwrite").text(in)
-    val files = new java.io.File(in).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val t0 = System.currentTimeMillis() - 3600000L
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(t0 + i * 1000L); ()
-    }
+    val in = stage(spark, s"$dir#hh", stamp = true)(
+      graft.operators.Curation.docTexts(spark, dir)
+        .repartitionByRange(4, col("doc_id")).select("text")
+        .write.mode("overwrite").text(_))
     val agg = new SpaceSaving.Agg(capacity)
-    def stateFile(bid: Long) = new java.io.File(st, s"sk_$bid.bin")
-    def readState(bid: Long): SpaceSaving.State =
-      if (bid < 0 || !stateFile(bid).exists()) new SpaceSaving.State(capacity)
-      else {
+    def readState(f: Option[String]): SpaceSaving.State = f match {
+      case None => new SpaceSaving.State(capacity)
+      case Some(path) =>
         val ois = new java.io.ObjectInputStream(
-          new java.io.FileInputStream(stateFile(bid)))
+          new java.io.FileInputStream(path))
         try ois.readObject().asInstanceOf[SpaceSaving.State] finally ois.close()
-      }
+    }
     val ssUdf = udaf(agg)
     val stream = spark.readStream.schema("value STRING")
       .option("maxFilesPerTrigger", 1).text(in)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      val hh = batch
-        .withColumn("toks", split(lower(col("value")), "\\s+"))
-        .withColumn("bigram", explode(expr(
-          """CASE WHEN size(toks) >= 2
-            |  THEN transform(sequence(1, size(toks) - 1),
-            |         i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))
-            |  ELSE array() END""".stripMargin)))
-        .agg(ssUdf(col("bigram")).as("hh"))
-        .head().getSeq[org.apache.spark.sql.Row](0)
-      val bState = new SpaceSaving.State(capacity)
-      hh.foreach { r =>
-        bState.items.put(r.getString(0),
-          new SpaceSaving.Entry(r.getLong(1), r.getLong(2)))
-      }
-      val merged = agg.merge(readState(bid - 1), bState)
-      val oos = new java.io.ObjectOutputStream(
-        new java.io.FileOutputStream(stateFile(bid)))
-      try oos.writeObject(merged) finally oos.close()
-      ()
-    }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .startReplay(spark)
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-    val last = new java.io.File(st).listFiles()
-      .filter(_.getName.startsWith("sk_"))
-      .map(_.getName.stripPrefix("sk_").stripSuffix(".bin").toLong).max
+    drain(spark, s"$tmp/ck", stream.writeStream
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        val hh = batch
+          .withColumn("toks", split(lower(col("value")), "\\s+"))
+          .withColumn("bigram", explode(expr(
+            """CASE WHEN size(toks) >= 2
+              |  THEN transform(sequence(1, size(toks) - 1),
+              |         i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))
+              |  ELSE array() END""".stripMargin)))
+          .agg(ssUdf(col("bigram")).as("hh"))
+          .head().getSeq[org.apache.spark.sql.Row](0)
+        val bState = new SpaceSaving.State(capacity)
+        hh.foreach { r =>
+          bState.items.put(r.getString(0),
+            new SpaceSaving.Entry(r.getLong(1), r.getLong(2)))
+        }
+        val merged = agg.merge(readState(latest(st, "sk_", bid)), bState)
+        val oos = new java.io.ObjectOutputStream(
+          new java.io.FileOutputStream(s"$st/sk_$bid"))
+        try oos.writeObject(merged) finally oos.close()
+        ()
+      })
     import spark.implicits._
-    agg.finish(readState(last)).take(k)
+    agg.finish(readState(latest(st, "sk_"))).take(k)
       .map(h => (h.bigram, h.cnt_est, h.err))
       .toDF("bigram", "cnt_est", "err")
   }

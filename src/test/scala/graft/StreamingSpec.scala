@@ -156,6 +156,63 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("parquetReplay reads its sink back with the stream's schema and no " +
+      "job; a stream with no rows reads back empty") {
+    val in = Files.createTempDirectory("graft_pr_in")
+    Files.write(in.resolve("a.json"),
+      "{\"id\":1,\"s\":\"x\"}\n{\"id\":2,\"s\":\"y\"}\n{\"id\":3}\n"
+        .getBytes("UTF-8"))
+    val src = spark.readStream.schema("id LONG, s STRING").json(in.toString)
+    val sc = spark.sparkContext
+    // jobs the replay call starts, split by whether the stream's own
+    // thread started them; a fence job marks the end of the call (the
+    // listener bus delivers in order, so every earlier start is counted)
+    def countJobs(body: => org.apache.spark.sql.DataFrame)
+        : (org.apache.spark.sql.DataFrame, Int, Int) = {
+      val stream = new java.util.concurrent.atomic.AtomicInteger
+      val other = new java.util.concurrent.atomic.AtomicInteger
+      val fence = new java.util.concurrent.CountDownLatch(1)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          def has(k: String) =
+            Option(e.properties).exists(_.getProperty(k) != null)
+          if (has("graft.test.fence")) fence.countDown()
+          else if (has("sql.streaming.queryId")) stream.incrementAndGet()
+          else other.incrementAndGet()
+          ()
+        }
+      }
+      sc.addSparkListener(l)
+      try {
+        val df = body
+        sc.setLocalProperty("graft.test.fence", "1")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setLocalProperty("graft.test.fence", null)
+        assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        (df, stream.get, other.get)
+      } finally sc.removeSparkListener(l)
+    }
+    val (df, streamJobs, otherJobs) =
+      countJobs(StreamingJobs.parquetReplay(spark, "graft_test_pr", src))
+    assert(streamJobs > 0, "the listener saw none of the stream's own jobs")
+    assert(otherJobs == 0,
+      s"$otherJobs job(s) outside the stream: the read-back inferred a schema")
+    assert(df.schema == src.schema)
+    assert(df.orderBy("id").collect().toSeq.map(r =>
+        (r.getLong(0), Option(r.getString(1)))) ==
+      Seq((1L, Some("x")), (2L, Some("y")), (3L, None)))
+    // an input with no files runs no batch, so the sink has no data
+    // files; inferring a schema from it throws "Unable to infer schema"
+    val none = spark.readStream.schema(src.schema)
+      .json(Files.createTempDirectory("graft_pr_none").toString)
+    val (empty, _, emptyOther) = countJobs(
+      StreamingJobs.parquetReplay(spark, "graft_test_pr", none))
+    assert(emptyOther == 0)
+    assert(empty.schema == src.schema)
+    assert(empty.count() == 0)
+  }
+
   test("fan-out raw + alert sinks reproduce the batch parse (q_stream_raw / q_stream_alerts)") {
     // read-back of the OTHER two sinks of the same T1 replay: the raw sink
     // must hold exactly the parsed rows, the alert sink exactly the
