@@ -188,7 +188,6 @@ object Stress {
       // (bit-equal results, Round3OpsSpec; the gap is the reason the
       // expression exists)
       time("quantize_expr") {
-        graft.functions.VectorExpressions.ensureRegistered(spark)
         val nVecs = math.min(n, 1000000L)
         val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
           expr("""transform(sequence(0, 63),

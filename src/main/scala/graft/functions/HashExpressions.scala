@@ -63,15 +63,16 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 }
 
 object HashExpressions {
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.GraftSqlShims.{column, expression}
 
-  /** Register `poly_hash` in the session's function registry. Idempotent. */
+  /** Register `poly_hash` in the session's function registry, so SQL text
+    * can call it (`Graft.open` does this). Idempotent. */
   def ensureRegistered(spark: SparkSession): Unit =
     registerOnce(spark, "poly_hash")(exprs => PolyHash(exprs.head))
 
-  /** Register `name` unless the session's registry already has it: the
-    * operators call `ensureRegistered` per query, and replacing a function
-    * logs a "replaced a previously registered function" WARN every time. */
+  /** Register `name` unless the session's registry already has it:
+    * replacing a function logs a "replaced a previously registered
+    * function" WARN every time. */
   private[functions] def registerOnce(spark: SparkSession, name: String)(
       builder: Seq[Expression] => Expression): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -79,7 +80,6 @@ object HashExpressions {
       registry.createOrReplaceTempFunction(name, builder, "built-in")
   }
 
-  /** Rolling content hash of a string column (codegen'd).
-    * Requires ensureRegistered on the session. */
-  def poly_hash(c: Column): Column = call_function("poly_hash", c)
+  /** Rolling content hash of a string column (codegen'd). */
+  def poly_hash(c: Column): Column = column(PolyHash(expression(c)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -56,28 +56,41 @@ case class VectorDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Squared Euclidean distance of two array<double> columns — the k-means
-  * assignment kernel (ivfAssignCentOn and the near-dup probe ranking run it
-  * n·k times per pass; at the constant-cell law k reaches the hundreds and
-  * the HOF `aggregate(zip_with(...))` formulation's per-row array
-  * allocation became the dominant cost of the Stress ivf_neardup rung).
-  * Same strict left-to-right fold as the HOF version and the oracle's
-  * `list_reduce(list_prepend(0.0, list_transform(...)))` — each (xᵢ−yᵢ)²
+/** Squared Euclidean distance of two array<double> columns: the
+  * nearest-centroid kernel of the vector family. `Similarity.nearest`
+  * scores every (point, centroid) pair with it (the IVF and PQ Lloyd
+  * rounds, q_y18's and q_stream_centroids' delta assignment, the cell
+  * ranks of q_y15 and q_y25_filtered_search, the q_y17 query route,
+  * q_y21's final assign and the q_y26 probe ranks); q_y18 and
+  * q_stream_centroids measure centroid drift with it, and q_y8, q_y17 and
+  * q_y21 score their ADC tables and seeding distances with it.
+  * At the constant-cell law k reaches the hundreds, and the higher-order
+  * `aggregate(zip_with(...))` formulation's per-row array allocation was
+  * the dominant cost of the Stress ivf_neardup rung.
+  *
+  * Same strict left-to-right fold as that formulation and the oracle's
+  * `list_reduce(list_prepend(0.0, list_transform(...)))`: each (xᵢ−yᵢ)²
   * term is computed independently and added in index order, so results are
-  * bit-identical. */
+  * bit-identical. The null rule is the fold's too: null when either array
+  * is null, when the lengths differ (zip_with pads the shorter side with
+  * nulls) or when either array holds a null element; 0.0 for two empty
+  * arrays. */
 case class VectorDist2(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "vector_dist2"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val d = x.getDouble(i) - y.getDouble(i)
       acc += d * d
       i += 1
@@ -91,13 +104,17 @@ case class VectorDist2(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       val d = ctx.freshName("d")
+      val ok = ctx.freshName("ok")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |boolean $ok = $n == $b.numElements();
          |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
+         |for (int $i = 0; $ok && $i < $n; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $ok = false; break; }
          |  double $d = $a.getDouble($i) - $b.getDouble($i);
          |  $acc += $d * $d;
          |}
+         |${ev.isNull} = !$ok;
          |${ev.value} = $acc;
        """.stripMargin
     })
@@ -211,12 +228,12 @@ case class QuantStats(child: Expression)
 }
 
 object VectorExpressions {
-  import org.apache.spark.sql.functions.{call_function, sqrt}
+  import GraftSqlShims.{column, expression}
+  import org.apache.spark.sql.functions.sqrt
 
   /** Register `vector_dot`, `quant_stats` and `vector_dist2` in the function
-    * registry — the supported Spark 4 route to a custom Expression
-    * (Column↔Expression bridges are private to the sql package).
-    * Idempotent. */
+    * registry, so SQL text can call them (`Graft.open` does this). The
+    * Column builders below need no registration. Idempotent. */
   def ensureRegistered(spark: SparkSession): Unit = {
     import HashExpressions.registerOnce
     registerOnce(spark, "vector_dot")(exprs => VectorDot(exprs.head, exprs(1)))
@@ -224,19 +241,18 @@ object VectorExpressions {
     registerOnce(spark, "vector_dist2")(exprs => VectorDist2(exprs.head, exprs(1)))
   }
 
-  /** Dot product of two array<double> columns (codegen'd).
-    * Requires ensureRegistered on the session. */
+  /** Dot product of two array<double> columns (codegen'd). */
   def vector_dot(a: Column, b: Column): Column =
-    call_function("vector_dot", a, b)
+    column(VectorDot(expression(a), expression(b)))
 
   /** struct(max_abs, n_sat, rmse) of int8 quantization of an array<double>
-    * column (codegen'd). Requires ensureRegistered on the session. */
-  def quant_stats(v: Column): Column = call_function("quant_stats", v)
+    * column (codegen'd). */
+  def quant_stats(v: Column): Column = column(QuantStats(expression(v)))
 
   /** Squared Euclidean distance of two array<double> columns (codegen'd;
-    * bit-identical to the HOF/oracle folds). Requires ensureRegistered. */
+    * bit-identical to the HOF/oracle folds, nulls included). */
   def vector_dist2(a: Column, b: Column): Column =
-    call_function("vector_dist2", a, b)
+    column(VectorDist2(expression(a), expression(b)))
 
   /** Cosine similarity built from vector_dot — same fold order as the
     * DuckDB oracle (`list_dot_product` / sqrt composition). */

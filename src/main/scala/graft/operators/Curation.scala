@@ -414,7 +414,6 @@ object Curation {
     * `bucket < threshold` filter; the text never shuffles. Thresholds are
     * integer (floor(rate·10000)), so the oracle comparison is exact. */
   def mixRebalance(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashExpressions.ensureRegistered(spark)
     // fully declarative since round 2's PolyHash expression: token count and
     // sampling bucket are codegen'd projections — no object boundary
     val d = docs(spark, dir)
@@ -630,7 +629,6 @@ object Curation {
     * shuffled, so at 100 TB this is a scan + broadcast-join filter. */
   def stratifiedSample(spark: SparkSession, dir: String, target: Int = 10)
       : DataFrame = {
-    graft.functions.HashExpressions.ensureRegistered(spark)
     val d = docs(spark, dir).withColumn("bucket",
       graft.functions.HashExpressions.poly_hash(
         col("doc_id").cast("string")) % 10000L)
@@ -676,7 +674,6 @@ object Curation {
     * c9, so the DuckDB replay is exact: the per-row threshold
     * floor(10000·p) is integer arithmetic on both engines. */
   def weightedSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashExpressions.ensureRegistered(spark)
     docs(spark, dir)
       .withColumn("bucket",
         graft.functions.HashExpressions.poly_hash(

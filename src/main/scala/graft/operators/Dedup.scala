@@ -803,7 +803,7 @@ object Dedup {
     // while 31 cores idle. Width follows the session's shuffle setting —
     // a conf, not a local constant (and AQE never coalesces a numbered
     // repartition). Row set unchanged.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = spark.sessionState.conf.numShufflePartitions
     val a = grams.select(col("doc_id").as("doc_a"), col("grams").as("g_a"))
       .repartition(parts)
     val b = grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b"))
@@ -833,7 +833,7 @@ object Dedup {
     // repartition the streamed side — same single-split serialization as
     // x4 (round-11): ~5k Levenshtein DPs over 200-char prefixes are ~200M
     // cell updates, all on one task without this.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = spark.sessionState.conf.numShufflePartitions
     val a = pre.select(col("doc_id").as("doc_a"), col("p").as("pa"))
       .repartition(parts)
     val b = pre.select(col("doc_id").as("doc_b"), col("p").as("pb"))
@@ -947,7 +947,7 @@ object Dedup {
     val pairs = pairsDf.rdd.cache()
     val nPairs = pairs.count()
     val parts = math.max(1, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.sessionState.conf.numShufflePartitions,
       (nPairs / 250000L).toInt))
     val part = new org.apache.spark.HashPartitioner(parts)
     // (dst, src): neighbor lists keyed by the propagation target
@@ -2038,7 +2038,7 @@ object Dedup {
     val grams = charGramSets(docs)
     // numbered repartition of the streamed side — see jaccard3gramPairs
     // (round-11): the truth all-pairs otherwise runs on one scan split
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = spark.sessionState.conf.numShufflePartitions
     val a = grams.select(col("doc_id").as("doc_a"), col("grams").as("g_a"))
       .repartition(parts)
     val b = grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b"))
@@ -2440,7 +2440,7 @@ object Dedup {
       // NUMBERED repartition (round-11): the col-keyed form is
       // AQE-coalescible and folded back to 1-2 partitions at this byte
       // size, re-serializing the intersections it was added to spread
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .repartition(spark.sessionState.conf.numShufflePartitions)
     val b = grams.select(col("doc_id").as("doc_b"), col("grams").as("g_b"))
     val pairs = a.crossJoin(b)
       .filter(col("doc_a") < col("doc_b"))

@@ -313,7 +313,6 @@ object Multimodal {
       |ORDER BY doc_a, doc_b""".stripMargin
 
   def mediaEmbeddingJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val med = withMedia(spark, dir)
       .select(col("doc_id"), col("media_meta.format").as("format"),
         col("media_meta.n_bytes").as("n_bytes"))

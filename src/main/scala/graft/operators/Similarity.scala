@@ -1,17 +1,20 @@
 package graft.operators
 
 import graft.G
+import graft.functions.VectorExpressions.vector_dist2
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over the embedding column (BASELINE north-star).
   *
-  * Vector math is done with higher-order functions (`zip_with` +
-  * `aggregate`): a strict left-to-right fold in double precision, which is
-  * bit-identical to DuckDB's `list_dot_product` over `DOUBLE[]` — verified
-  * empirically — so cosine scores hash-match the oracle with no rounding
-  * slack on the filter predicates.
+  * Vector math is done by codegen'd Catalyst expressions
+  * (`graft.functions.VectorDot`, `VectorDist2`): strict left-to-right folds
+  * in double precision, bit-identical to DuckDB's `list_dot_product` over
+  * `DOUBLE[]` and to the oracles' [[dist2Sql]] fold — verified empirically —
+  * so scores and distances hash-match the oracle with no rounding slack on
+  * the filter predicates. Every nearest-centroid step (k-means assignment,
+  * query routing, probe ranking) is one kernel, [[nearest]].
   *
   * Scale design (100 TB / billions of vectors):
   *  - brute-force top-k = broadcast the (small) query set, one pass over the
@@ -42,7 +45,6 @@ object Similarity {
     * O(n²) sqrt work; the precomputed value is the identical double, so
     * oracle parity is unaffected). */
   private def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     G.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -338,7 +340,6 @@ object Similarity {
   private[graft] def lshNearDupsCheckedOn(e: DataFrame, tables: Int = 16,
       bits0: Int = 0, threshold: Double = 0.35): DataFrame = {
     val spark = e.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     import spark.implicits._
     val bits = if (bits0 > 0) bits0 else autoBits(e.count())
     val dims = 64
@@ -553,7 +554,7 @@ object Similarity {
   private[graft] def ivfNearDupsOn(e: DataFrame, k: Int, iters: Int = 2,
       nprobe: Int = 4, tables: Int = 2, tau: Double = 0.35): DataFrame = {
     val tabs = (0 until tables).map(t =>
-      ivfAssignCentOn(e.select(col("vec_id"), col("v")), k, iters, t))
+      lloyd(e.select(col("vec_id"), col("v")), k, iters, off = t))
     ivfNearDupPairsOf(tabs, e, math.min(nprobe, k), tau)
   }
 
@@ -561,23 +562,13 @@ object Similarity {
     * verify tail shared by the memoized and On variants. */
   private def ivfNearDupPairsOf(tabs: Seq[(DataFrame, DataFrame)],
       e: DataFrame, np: Int, tau: Double): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(e.sparkSession)
     val cand = tabs.map { case (assign, cent) =>
-      val corpus = assign.select(col("vec_id"), col("cid"), col("v"))
-      // the window ranks a v-FREE (vec_id, pcid, pdist2) frame: pdist2 is
-      // computed in the crossJoin projection and the 512 B vector payload
-      // never enters the n·k sort (the same spill class as the wide-k
-      // argmin above; probes only need ids)
-      val probes = corpus.select(col("vec_id"), col("v"))
-        .crossJoin(broadcast(cent.select(col("cid").as("pcid"), col("c"))))
-        .select(col("vec_id"), col("pcid"), graft.functions.VectorExpressions
-          .vector_dist2(col("v"), col("c")).as("pdist2"))
-        .withColumn("prank", row_number().over(
-          Window.partitionBy(col("vec_id"))
-            .orderBy(col("pdist2"), col("pcid"))))
-        .filter(col("prank") <= np)
-        .select(col("vec_id").as("qid"), col("pcid").as("cid"))
-      probes.join(corpus.select(col("vec_id").as("hid"), col("cid")), "cid")
+      // v-free ranking: the 512 B vector payload never enters the n·k
+      // sort (the wide-k spill class of [[lloyd]]; probes only need ids)
+      val probes = nearest(assign.select(col("vec_id"), col("v")), cent, np,
+          payload = false)
+        .select(col("vec_id").as("qid"), col("cid"))
+      probes.join(assign.select(col("vec_id").as("hid"), col("cid")), "cid")
         .filter(col("qid") =!= col("hid"))
         .select(least(col("qid"), col("hid")).as("id_a"),
           greatest(col("qid"), col("hid")).as("id_b"))
@@ -697,17 +688,12 @@ object Similarity {
        |    / CAST((SELECT count(*) FROM brute) AS DOUBLE) AS recall""".stripMargin
 
   /** IVF index BUILD — the missing half of the ANN story (q_y2 assumes the
-    * coarse cells exist; this constructs them): k-means with deterministic
-    * seeding (centroids ← vectors 0..k-1) and a FIXED number of Lloyd
-    * rounds, unrolled declaratively — assignment is a broadcast cross join
-    * (k centroid rows against the corpus, corpus never shuffled) + argmin
-    * window; the centroid update is posexplode → per-(cell,dim) exact mean
-    * (k·d tiny groups) — the new centroids are again a broadcast-sized
-    * frame. At 100 TB this is exactly the shape you want: per round, one
-    * corpus scan, one k·d-group aggregate, no corpus shuffle at all.
-    * Fixed rounds (not convergence-tested) keep the plan static and the
-    * cross-engine replay exact; every distance is the same sequential
-    * squared-diff fold both engines run term-for-term. */
+    * coarse cells exist; this constructs them): [[lloyd]]'s k-means with
+    * deterministic seeding (centroids ← vectors 0..k-1) and a FIXED number
+    * of Lloyd rounds. At 100 TB this is exactly the shape you want: per
+    * round, one corpus scan, one k·d-group aggregate, no corpus shuffle at
+    * all. Fixed rounds (not convergence-tested) keep the plan static and the
+    * cross-engine replay exact. */
   def ivfBuild(spark: SparkSession, dir: String, k: Int = 8, iters: Int = 2)
       : DataFrame =
     ivfAssign(spark, dir, k, iters).groupBy(col("cid"))
@@ -723,20 +709,7 @@ object Similarity {
 
   /** [[ivfAssign]] plus the centroid frame that produced the final
     * assignment — the probe sweep (q_y15) needs the same centroids to
-    * route queries that routed the corpus.
-    *
-    * Session-scoped MATERIALIZED INTERMEDIATE (the [[graft.Artifact]]
-    * pattern, for a pair of frames): y6/y9/y15/y17 all train the identical
-    * (k, iters) k-means over the same corpus — first caller computes and
-    * localCheckpoints (survives Bench's catalog.clearCache between
-    * queries; persist() would not), later callers reuse. The per-corpus
-    * index build a production vector store runs once per snapshot, not
-    * once per query. */
-  private val ivfMemo = // onEvict: release both checkpoint frames on sweep
-    new graft.SessionMemo[(DataFrame, DataFrame)]({ case (a, c) =>
-      graft.SessionMemo.unpersistCheckpointed(a)
-      graft.SessionMemo.unpersistCheckpointed(c)
-    })
+    * route queries that routed the corpus. */
   private def ivfAssignCent(spark: SparkSession, dir: String, k: Int,
       iters: Int): (DataFrame, DataFrame) =
     ivfAssignCentSeeded(spark, dir, k, iters, 0)
@@ -748,70 +721,115 @@ object Similarity {
     * with y6/y9/y15/y17. */
   private def ivfAssignCentSeeded(spark: SparkSession, dir: String, k: Int,
       iters: Int, off: Int): (DataFrame, DataFrame) =
-    // (k, iters, off) fold into the memo tag; SessionMemo sweeps entries
-    // from stopped sessions on every access (identityHashCode reuse guard)
-    ivfMemo.getOrBuild(spark,
-        s"$dir#k=$k#it=$iters${if (off == 0) "" else s"#off=$off"}") {
-      val (a, c) = ivfAssignCentOn(
-        embeddings(spark, dir).select(col("vec_id"), col("v")), k, iters,
-        off)
+    trained(spark, dir, s"k=$k#it=$iters${if (off == 0) "" else s"#off=$off"}",
+      embeddings(spark, dir).select(col("vec_id"), col("v")), k, iters,
+      off = off)
+
+  /** Session-scoped MATERIALIZED INTERMEDIATE (the [[graft.Artifact]]
+    * pattern, for a pair of frames): y6/y9/y15/y17 all train the identical
+    * IVF k-means, and y7/y8/y17 the identical PQ codebook, over the same
+    * corpus — the first caller runs [[lloyd]] and localCheckpoints
+    * (survives Bench's catalog.clearCache between queries; persist() would
+    * not), later callers reuse. The per-corpus index build a production
+    * vector store runs once per snapshot, not once per query. `params`
+    * folds into the memo tag; SessionMemo sweeps entries from stopped
+    * sessions on every access. */
+  private val lloydMemo = // onEvict: release both checkpoint frames on sweep
+    new graft.SessionMemo[(DataFrame, DataFrame)]({ case (a, c) =>
+      graft.SessionMemo.unpersistCheckpointed(a)
+      graft.SessionMemo.unpersistCheckpointed(c)
+    })
+  private def trained(spark: SparkSession, dir: String, params: String,
+      points: => DataFrame, k: Int, iters: Int, keys: Seq[String] = Nil,
+      off: Int = 0): (DataFrame, DataFrame) =
+    lloydMemo.getOrBuild(spark, s"$dir#$params") {
+      val (a, c) = lloyd(points, k, iters, keys, off)
       (a.localCheckpoint(), c.localCheckpoint())
     }
 
-  /** [[ivfAssignCent]] over a caller-supplied (vec_id, v) frame — the
-    * incremental refresh (q_y18) trains on the BASE slice only. */
-  private[graft] def ivfAssignCentOn(e: DataFrame, k: Int,
-      iters: Int, off: Int = 0): (DataFrame, DataFrame) = {
-    var cent = e
+  /** k-means over (vec_id, keys, v) `points`, one model per value of the
+    * `keys` (none for IVF; the subspace m for PQ): centroids seeded from
+    * the vectors with vec_id in [off·k, (off+1)·k), then `iters` Lloyd
+    * rounds, unrolled declaratively — assignment is [[nearest]] (broadcast
+    * centroids, the corpus never shuffled), and before a further round
+    * [[recenter]] averages each cell. Returns (final assignment
+    * (vec_id, keys, cid, dist2, v), the centroids that produced it). */
+  private[graft] def lloyd(points: DataFrame, k: Int, iters: Int,
+      keys: Seq[String] = Nil, off: Int = 0): (DataFrame, DataFrame) = {
+    val id = "vec_id" +: keys
+    def assign(cent: DataFrame): DataFrame =
+      (if (k <= 64) nearest(points, cent, 1, keys)
+       else {
+         // wide-k regime (the near-dup tables' constant-cell law can put
+         // k in the hundreds): the 512 B vector payload must NOT ride the
+         // n·k window sort — at k = 500, n = 100k that is a ~27 GB sort
+         // that spills (measured 303 s on the Stress rung; the v-free rank
+         // frame is 24 B/row, then ONE n-row join rehydrates v). The
+         // join-back loses 2× at small k (Stress kmeans_argmin), so the
+         // narrow path is gated, not unconditional.
+         nearest(points, cent, 1, keys, payload = false).join(points, id)
+       }).select((id ++ Seq("cid", "dist2", "v")).map(col): _*)
+    val seeds = points
       .filter(col("vec_id") >= lit(off.toLong * k) &&
         col("vec_id") < lit((off + 1).toLong * k))
-      .select(col("vec_id").as("cid"), col("v").as("c"))
-    graft.functions.VectorExpressions.ensureRegistered(e.sparkSession)
-    var assign: DataFrame = e.sparkSession.emptyDataFrame
-    for (round <- 1 to iters) {
-      // vector_dist2: the codegen'd native fold (bit-identical to the HOF
-      // zip_with+aggregate and the oracle's list_reduce formulation; the
-      // HOF's per-row array allocation dominated wide-k assignment)
-      val d = e.crossJoin(broadcast(cent))
-        .withColumn("dist2", graft.functions.VectorExpressions
-          .vector_dist2(col("v"), col("c")))
-      // argmin stays a row_number window, DELIBERATELY: min(struct(...))
-      // would partial-aggregate the k candidates map-side, but Min over a
-      // struct falls to SortAggregate with interpreted comparisons (and
-      // copies the payload per candidate) — measured 3.0× slower at
-      // 500k×16 (Stress kmeans_argmin vs kmeans_argmin_window; the
-      // narrow-struct + join-back variant still loses 2×). One window
-      // sort of the candidate frame is the cheapest argmin Spark has.
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cid"))
-      assign =
-        if (k <= 64)
-          d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-            .select(col("vec_id"), col("cid"), col("dist2"), col("v"))
-        else {
-          // wide-k regime (the near-dup tables' constant-cell law can put
-          // k in the hundreds): the 512 B vector payload must NOT ride the
-          // n·k window sort — at k = 500, n = 100k that is a ~27 GB sort
-          // that spills (measured 303 s on the Stress rung; v-free rank
-          // frame is 24 B/row, then ONE n-row join rehydrates v). The
-          // join-back loses 2× at small k (the measurement above), so the
-          // narrow path is gated, not unconditional.
-          d.select(col("vec_id"), col("cid"), col("dist2"))
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-            .drop("rn")
-            .join(e, "vec_id")
-            .select(col("vec_id"), col("cid"), col("dist2"), col("v"))
-        }
-      if (round < iters)
-        cent = assign
-          .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-          .groupBy(col("cid"), col("dim"))
-          .agg(G.davg(col("x")).as("m"))
-          .groupBy(col("cid"))
-          .agg(expr("transform(array_sort(collect_list(struct(dim, m))), s -> s.m)")
-            .as("c"))
+      .select(keys.map(col) :+ col("vec_id").as("cid") :+ col("v").as("c"): _*)
+    (2 to iters).foldLeft((assign(seeds), seeds)) { case ((a, _), _) =>
+      val cent = recenter(a, keys)
+      (assign(cent), cent)
     }
-    (assign, cent)
   }
+
+  /** Each cell's new centroid (keys, cid, c): the DECIMAL-exact mean of its
+    * vectors, per dimension (a k·d-group aggregate). */
+  private def recenter(assign: DataFrame, keys: Seq[String] = Nil)
+      : DataFrame = {
+    val cell = keys.map(col) :+ col("cid")
+    assign.select(cell :+ posexplode(col("v")).as(Seq("dim", "x")): _*)
+      .groupBy(cell :+ col("dim"): _*)
+      .agg(G.davg(col("x")).as("mean"))
+      .groupBy(cell: _*)
+      .agg(expr("transform(array_sort(collect_list(struct(dim, mean))), s -> s.mean)")
+        .as("c"))
+  }
+
+  /** The `n` centroids nearest each point, ranked by (dist2, cid): the one
+    * nearest-centroid kernel of the vector family. `points` carries vec_id,
+    * v and the `keys`; `cent` carries the `keys`, cid and c and is broadcast
+    * (cross-joined, or joined on the `keys`). Each pair is scored with
+    * [[graft.functions.VectorDist2]], the codegen'd twin of the oracles'
+    * [[dist2Sql]] fold. Returns `points`' columns plus cid, dist2 and rn;
+    * with `payload = false` only (vec_id, keys, cid, dist2, rn), so no
+    * vector rides the n·k window sort.
+    *
+    * The ranking stays a row_number window, DELIBERATELY: min(struct(...))
+    * would partial-aggregate the k candidates map-side, but Min over a
+    * struct falls to SortAggregate with interpreted comparisons (and copies
+    * the payload per candidate) — measured 3.0× slower at 500k×16 (Stress
+    * kmeans_argmin vs kmeans_argmin_window; the narrow-struct + join-back
+    * variant still loses 2×). One window sort of the candidate frame is the
+    * cheapest argmin Spark has. */
+  private[graft] def nearest(points: DataFrame, cent: DataFrame, n: Int,
+      keys: Seq[String] = Nil, payload: Boolean = true): DataFrame = {
+    val id = "vec_id" +: keys
+    val pairs =
+      if (keys.isEmpty) points.crossJoin(broadcast(cent))
+      else points.join(broadcast(cent), keys)
+    val kept = (if (payload) points.columns.toSeq else id) :+ "cid"
+    pairs
+      .select(kept.map(col) :+ vector_dist2(col("v"), col("c")).as("dist2"): _*)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(id.map(col): _*).orderBy(col("dist2"), col("cid"))))
+      .filter(col("rn") <= n)
+  }
+
+  /** The oracles' squared-distance fold over the first `dims` elements:
+    * the DuckDB twin of [[graft.functions.VectorDist2]], term for term. */
+  private def dist2Sql(a: String, b: String, dims: Int): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |  list_transform(range(0, $dims), i ->
+       |    ($a[CAST(i+1 AS INT)] - $b[CAST(i+1 AS INT)])
+       |  * ($a[CAST(i+1 AS INT)] - $b[CAST(i+1 AS INT)]))),
+       |  (a, b) -> a + b)""".stripMargin
 
   /** q_y15: IVF PROBE SWEEP — recall@5 vs brute force as a function of
     * nprobe ∈ {1, 2, 4}, the tuning table every IVF deployment reads
@@ -831,25 +849,17 @@ object Similarity {
     val (assignRaw, cent) = ivfAssignCent(spark, dir, 8, 2)
     val corpus = assignRaw.select(col("vec_id"), col("cid"), col("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v")))).cache()
-    val qd = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cent.select(col("cid").as("pcid"), col("c"))))
-      .withColumn("qdist2", expr(
-        """aggregate(zip_with(qv, c, (x, y) -> (x - y) * (x - y)),
-          |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin))
-      .withColumn("cellrank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("qdist2"), col("pcid"))))
+    val qd = nearest(corpus.filter(col("vec_id") < 10)
+        .select(col("vec_id"), col("v"), col("nrm")), cent, probes.max)
+      .select(col("vec_id").as("query_id"), col("cid"), col("v").as("qv"),
+        col("nrm").as("qnrm"), col("rn"))
       .cache()
     val bf = knnBruteForce(spark, dir)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     probes.map { np =>
-      val cells = qd.filter(col("cellrank") <= np)
-        .select(col("query_id"), col("pcid").as("cid"), col("qv"),
-          col("qnrm"))
+      val cells = qd.filter(col("rn") <= np).drop("rn")
       val cand = corpus.join(cells, "cid")
         .filter(col("vec_id") =!= col("query_id"))
         .withColumn("sim", dot(col("v"), col("qv")) /
@@ -864,6 +874,16 @@ object Similarity {
           (col("n_hits").cast("double") / col("k_total")).as("recall"))
     }.reduce(_.unionByName(_)).orderBy(col("nprobe"))
   }
+
+  /** Oracle of the y15/y25 cell ranking: each query's rank of every
+    * final-round centroid by (dist2, cid). */
+  private val queryCellsSql: String =
+    s"""qd AS (
+       |  SELECT q.vec_id AS query_id, q.v AS qv, c1.cid, c1.c,
+       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
+       |      ${dist2Sql("q.v", "c1.c", 64)}, c1.cid) AS cellrank
+       |  FROM (SELECT vec_id, v FROM e WHERE vec_id < 10) q
+       |  CROSS JOIN c1)""".stripMargin
 
   val probeSweepSql: String = {
     val rounds = ivfRoundsSql(8, 2, 64)
@@ -888,16 +908,7 @@ object Similarity {
          |    WHERE a2.vec_id <> cl.query_id) t WHERE rank <= 5) c
          |LEFT JOIN bf b ON c.query_id = b.query_id AND c.vec_id = b.vec_id""".stripMargin
     s"""$rounds,
-       |qd AS (
-       |  SELECT q.vec_id AS query_id, q.v AS qv, c1.cid, c1.c,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |        list_transform(range(0, 64), i ->
-       |          (q.v[CAST(i+1 AS INT)] - c1.c[CAST(i+1 AS INT)])
-       |        * (q.v[CAST(i+1 AS INT)] - c1.c[CAST(i+1 AS INT)]))),
-       |        (a, b) -> a + b), c1.cid) AS cellrank
-       |  FROM (SELECT vec_id, v FROM e WHERE vec_id < 10) q
-       |  CROSS JOIN c1),
+       |$queryCellsSql,
        |bfr AS (
        |  SELECT q.query_id, e.vec_id,
        |    row_number() OVER (PARTITION BY q.query_id ORDER BY
@@ -952,17 +963,10 @@ object Similarity {
       .filter(col("rank") <= 3)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
     // post-filter IVF: route to 2 cells, filter, re-rank
-    val cells = queries
-      .crossJoin(broadcast(cent.select(col("cid").as("pcid"), col("c"))))
-      .withColumn("qdist2", expr(
-        """aggregate(zip_with(qv, c, (x, y) -> (x - y) * (x - y)),
-          |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin))
-      .withColumn("cellrank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("qdist2"), col("pcid"))))
-      .filter(col("cellrank") <= 2)
-      .select(col("query_id"), col("pcid").as("cid"), col("qv"),
-        col("qnrm"))
+    val cells = nearest(corpus.filter(col("vec_id") < 10)
+        .select(col("vec_id"), col("v"), col("nrm")), cent, 2)
+      .select(col("vec_id").as("query_id"), col("cid"), col("v").as("qv"),
+        col("nrm").as("qnrm"))
     val cand = corpus.filter(pred).join(cells, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim",
@@ -987,16 +991,7 @@ object Similarity {
   val filteredSearchSql: String = {
     val rounds = ivfRoundsSql(8, 2, 64)
     s"""$rounds,
-       |qd AS (
-       |  SELECT q.vec_id AS query_id, q.v AS qv, c1.cid, c1.c,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |        list_transform(range(0, 64), i ->
-       |          (q.v[CAST(i+1 AS INT)] - c1.c[CAST(i+1 AS INT)])
-       |        * (q.v[CAST(i+1 AS INT)] - c1.c[CAST(i+1 AS INT)]))),
-       |        (a, b) -> a + b), c1.cid) AS cellrank
-       |  FROM (SELECT vec_id, v FROM e WHERE vec_id < 10) q
-       |  CROSS JOIN c1),
+       |$queryCellsSql,
        |ex AS (
        |  SELECT query_id, vec_id FROM (
        |    SELECT q.query_id, e.vec_id,
@@ -1103,7 +1098,7 @@ object Similarity {
     * matching oracle — previously a hand-written k=8/iters=2/dims=64 string
     * that silently mismatched any other parameterization. Structure per
     * Lloyd round r: d_r (squared distance to every centroid, the same
-    * term-for-term sequential fold as the Spark zip_with/aggregate), a_r
+    * term-for-term sequential fold as the Spark side's VectorDist2), a_r
     * (argmin via row_number), and — before a further round — m_r/c_r (the
     * exact per-(cell,dim) DECIMAL mean and re-assembled centroid list). */
   def ivfBuildSql(k: Int = 8, iters: Int = 2, dims: Int = 64): String =
@@ -1361,7 +1356,7 @@ object Similarity {
     * operator when accumulated drift justifies a full retrain.
     *
     * Every mean is DECIMAL(38,6)-exact and the drift fold is the same
-    * sequential zip_with square-diff both engines run term-for-term, so
+    * sequential square-diff fold both engines run term-for-term, so
     * the whole train→assign→recompute→drift chain hash-matches the
     * unrolled DuckDB replay. Cells that received no delta vectors
     * recompute the identical mean, so their drift² is exactly 0.0 —
@@ -1370,32 +1365,20 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     val eAll = embeddings(spark, dir).select(col("vec_id"), col("v"))
     val isDelta = col("vec_id") % 5 === 4 && col("vec_id") >= 8
-    val (assignRaw, centRaw) = ivfAssignCentOn(eAll.filter(!isDelta), k, iters)
+    val (assignRaw, centRaw) = lloyd(eAll.filter(!isDelta), k, iters)
     // both frames are consumed twice below; uncached, each reuse would
     // re-run the whole Lloyd lineage from the scan
     val assign = assignRaw.select(col("vec_id"), col("cid"), col("v")).cache()
     val cent = centRaw.cache()
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cid"))
-    val dAssign = eAll.filter(isDelta).crossJoin(broadcast(cent))
-      .withColumn("dist2", expr(
-        """aggregate(zip_with(v, c, (x, y) -> (x - y) * (x - y)),
-          |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val dAssign = nearest(eAll.filter(isDelta), cent, 1)
       .select(col("vec_id"), col("cid"), col("v")).cache()
-    val allAss = assign.unionByName(dAssign)
-    val newCent = allAss
-      .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cid"), col("dim")).agg(G.davg(col("x")).as("m"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, m))), s -> s.m)")
-        .as("c2"))
+    val newCent = recenter(assign.unionByName(dAssign))
+      .select(col("cid"), col("c").as("c2"))
     val nBase = assign.groupBy(col("cid")).agg(count(lit(1)).as("n_base"))
     val nDelta = dAssign.groupBy(col("cid")).agg(count(lit(1)).as("n_delta"))
     nBase.join(nDelta, Seq("cid"), "left")
       .join(cent, "cid").join(newCent, "cid")
-      .withColumn("drift2", expr(
-        """aggregate(zip_with(c2, c, (x, y) -> (x - y) * (x - y)),
-          |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin))
+      .withColumn("drift2", vector_dist2(col("c2"), col("c")))
       .select(col("cid"), col("n_base"),
         coalesce(col("n_delta"), lit(0L)).as("n_delta"), col("drift2"))
       .orderBy(col("cid"))
@@ -1414,11 +1397,7 @@ object Similarity {
        |${ivfCtes(k, iters, dims, "")},
        |dd0 AS (
        |  SELECT ed.vec_id, c$last.cid, ed.v,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(0, $dims), i ->
-       |        (ed.v[CAST(i+1 AS INT)] - c$last.c[CAST(i+1 AS INT)])
-       |      * (ed.v[CAST(i+1 AS INT)] - c$last.c[CAST(i+1 AS INT)]))),
-       |      (a, b) -> a + b) AS dist2
+       |    ${dist2Sql("ed.v", s"c$last.c", dims)} AS dist2
        |  FROM ed CROSS JOIN c$last),
        |da AS (SELECT vec_id, cid, v FROM (
        |    SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -1437,11 +1416,7 @@ object Similarity {
        |nd AS (SELECT cid, count(*) AS n_delta FROM da GROUP BY cid)
        |SELECT nb.cid, nb.n_base,
        |  coalesce(nd.n_delta, CAST(0 AS BIGINT)) AS n_delta,
-       |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(range(0, $dims), i ->
-       |      (cn.c2[CAST(i+1 AS INT)] - co.c[CAST(i+1 AS INT)])
-       |    * (cn.c2[CAST(i+1 AS INT)] - co.c[CAST(i+1 AS INT)]))),
-       |    (a, b) -> a + b) AS drift2
+       |  ${dist2Sql("cn.c2", "co.c", dims)} AS drift2
        |FROM nb LEFT JOIN nd ON nb.cid = nd.cid
        |JOIN c$last co ON nb.cid = co.cid
        |JOIN cn ON nb.cid = cn.cid
@@ -1481,11 +1456,7 @@ object Similarity {
     def dist(r: Int): String =
       s"""${p}d$r AS (
          |  SELECT e.vec_id, ${p}c${r - 1}.cid, e.v,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(0, $dims), i ->
-         |        (e.v[CAST(i+1 AS INT)] - ${p}c${r - 1}.c[CAST(i+1 AS INT)])
-         |      * (e.v[CAST(i+1 AS INT)] - ${p}c${r - 1}.c[CAST(i+1 AS INT)]))),
-         |      (a, b) -> a + b) AS dist2
+         |    ${dist2Sql("e.v", s"${p}c${r - 1}.c", dims)} AS dist2
          |  FROM e CROSS JOIN ${p}c${r - 1}),
          |${p}a$r AS (SELECT vec_id, cid, v, dist2 FROM (
          |    SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -1508,62 +1479,26 @@ object Similarity {
 
   /** Product-quantization subvector assignment: the shared k-means core of
     * [[pqBuild]] and [[pqSearch]]. The 64-d corpus is split into `m`
-    * subspaces of 64/m dims; each subspace trains its own K-centroid
-    * codebook with deterministic seeding (centroids ← subvectors of
-    * vec_id 0..k-1) and a FIXED number of Lloyd rounds, unrolled
-    * declaratively exactly like [[ivfBuild]]: assignment = broadcast join
-    * of the (m·k)-row codebook against the subvector frame + argmin
-    * window; recenter = per-(subspace, cell, dim) exact DECIMAL mean.
-    * Returns (final assignment (vec_id, m, cid, dist2), the codebook that
-    * produced it). Per round: one pass over the subvectors, one tiny
+    * subspaces of 64/m dims, and [[lloyd]] keyed by the subspace trains
+    * one K-centroid codebook per subspace (centroids ← subvectors of
+    * vec_id 0..k-1): assignment joins the broadcast (m·k)-row codebook
+    * on m. Returns (final assignment (vec_id, m, cid, dist2, v), the
+    * codebook that produced it), trained once per corpus snapshot like
+    * [[ivfAssignCent]]. Per round: one pass over the subvectors, one tiny
     * m·k·d-group aggregate, the corpus never shuffles. */
-  private val pqMemo = // onEvict: release both checkpoint frames on sweep
-    new graft.SessionMemo[(DataFrame, DataFrame)]({ case (a, c) =>
-      graft.SessionMemo.unpersistCheckpointed(a)
-      graft.SessionMemo.unpersistCheckpointed(c)
-    })
   private def pqAssign(spark: SparkSession, dir: String, m: Int, k: Int,
       iters: Int): (DataFrame, DataFrame) =
-    // same session-scoped memo as ivfAssignCent: y7/y8/y17 train the
-    // identical codebook; build once per corpus snapshot
-    pqMemo.getOrBuild(spark, s"$dir#m=$m#k=$k#it=$iters") {
-      val (a, c) = pqAssignComputed(spark, dir, m, k, iters)
-      (a.localCheckpoint(), c.localCheckpoint())
-    }
-  private def pqAssignComputed(spark: SparkSession, dir: String, m: Int,
-      k: Int, iters: Int): (DataFrame, DataFrame) = {
+    trained(spark, dir, s"m=$m#k=$k#it=$iters",
+      embeddings(spark, dir).select(col("vec_id"), subvectors("v", m)), k,
+      iters, Seq("m"))
+
+  /** The (m, v) rows of the `m` contiguous subvectors of vector column
+    * `v`. */
+  private def subvectors(v: String, m: Int): Column = {
     val subDim = 64 / m
-    val e = embeddings(spark, dir).select(col("vec_id"), col("v"))
-    val sub = e.select(col("vec_id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), mm -> slice(v, CAST(mm * $subDim + 1 AS INT), $subDim))"))
-        .as(Seq("m", "sv")))
-    var cent = sub.filter(col("vec_id") < k)
-      .select(col("m"), col("vec_id").as("cid"), col("sv").as("c"))
-    var assign: DataFrame = spark.emptyDataFrame
-    for (round <- 1 to iters) {
-      val d = sub.join(broadcast(cent), Seq("m"))
-        .withColumn("dist2", expr(
-          """aggregate(zip_with(sv, c, (x, y) -> (x - y) * (x - y)),
-            |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin))
-      // row_number window argmin — see the ivfAssign note: the
-      // min(struct) partial-agg alternative measures 3× slower (Stress
-      // kmeans_argmin A/B)
-      val w = Window.partitionBy(col("vec_id"), col("m"))
-        .orderBy(col("dist2"), col("cid"))
-      assign = d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("m"), col("cid"), col("dist2"), col("sv"))
-      if (round < iters)
-        cent = assign
-          .select(col("m"), col("cid"), posexplode(col("sv")).as(Seq("dim", "x")))
-          .groupBy(col("m"), col("cid"), col("dim"))
-          .agg(G.davg(col("x")).as("mean"))
-          .groupBy(col("m"), col("cid"))
-          .agg(expr(
-            "transform(array_sort(collect_list(struct(dim, mean))), s -> s.mean)")
-            .as("c"))
-    }
-    (assign, cent)
+    posexplode(expr(
+      s"transform(sequence(0, ${m - 1}), mm -> slice($v, CAST(mm * $subDim + 1 AS INT), $subDim))"))
+      .as(Seq("m", "v"))
   }
 
   /** Product-quantization codebook BUILD (q_y7): per-subspace cell sizes
@@ -1595,18 +1530,11 @@ object Similarity {
       iters: Int = 2, topK: Int = 5): DataFrame = {
     val (assign, cent) = pqAssign(spark, dir, m, k, iters)
     val codes = assign.select(col("vec_id"), col("m"), col("cid"))
-    val subDim = 64 / m
-    val e = embeddings(spark, dir).select(col("vec_id"), col("v"))
-    val qsub = e.filter(col("vec_id") < 10).select(
-      col("vec_id").as("query_id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), mm -> slice(v, CAST(mm * $subDim + 1 AS INT), $subDim))"))
-        .as(Seq("m", "qsv")))
-    val table = qsub.join(broadcast(cent), Seq("m"))
-      .withColumn("qdist2", expr(
-        """aggregate(zip_with(qsv, c, (x, y) -> (x - y) * (x - y)),
-          |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin))
-      .select(col("query_id"), col("m"), col("cid"), col("qdist2"))
+    val table = embeddings(spark, dir).filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), subvectors("v", m))
+      .join(broadcast(cent), Seq("m"))
+      .select(col("query_id"), col("m"), col("cid"),
+        vector_dist2(col("v"), col("c")).as("qdist2"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adist"), col("vec_id"))
     codes.join(broadcast(table), Seq("m", "cid"))
@@ -1635,11 +1563,7 @@ object Similarity {
     def dist(r: Int): String =
       s"""${p}d$r AS (
          |  SELECT s.vec_id, s.m, ${p}c${r - 1}.cid, s.sv,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(0, $subDim), i ->
-         |        (s.sv[CAST(i+1 AS INT)] - ${p}c${r - 1}.c[CAST(i+1 AS INT)])
-         |      * (s.sv[CAST(i+1 AS INT)] - ${p}c${r - 1}.c[CAST(i+1 AS INT)]))),
-         |      (a, b) -> a + b) AS dist2
+         |    ${dist2Sql("s.sv", s"${p}c${r - 1}.c", subDim)} AS dist2
          |  FROM ${p}sub s JOIN ${p}c${r - 1} ON s.m = ${p}c${r - 1}.m),
          |${p}a$r AS (SELECT vec_id, m, cid, sv, dist2 FROM (
          |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
@@ -1677,11 +1601,7 @@ object Similarity {
     s"""${pqRoundsSql(m, k, iters)},
        |qt AS (
        |  SELECT s.vec_id AS query_id, s.m, cf.cid,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(0, ${64 / m}), i ->
-       |        (s.sv[CAST(i+1 AS INT)] - cf.c[CAST(i+1 AS INT)])
-       |      * (s.sv[CAST(i+1 AS INT)] - cf.c[CAST(i+1 AS INT)]))),
-       |      (a, b) -> a + b) AS qdist2
+       |    ${dist2Sql("s.sv", "cf.c", 64 / m)} AS qdist2
        |  FROM sub s JOIN c${iters - 1} cf ON s.m = cf.m
        |  WHERE s.vec_id < 10),
        |adc AS (
@@ -1707,7 +1627,7 @@ object Similarity {
     // numbered repartition of the streamed side (round-11, guide §2.6):
     // the bounded window arrives as one scan split and the O(pairs) dot
     // products serialize onto one task; width follows the session conf.
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = spark.sessionState.conf.numShufflePartitions
     val a = e.select(col("vec_id").as("id_a"), col("v").as("va"),
       col("nrm").as("na")).repartition(parts)
     val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
@@ -1948,7 +1868,7 @@ object Similarity {
     val s = embeddings(spark, dir).filter(col("vec_id") < 500)
     // numbered repartition of the streamed side — see embeddingNearDups
     // (round-11): 250k pairwise dots otherwise run on one scan split
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = spark.sessionState.conf.numShufflePartitions
     val a = s.select(col("vec_id").as("ida"), col("label").as("la"),
       col("v").as("va"), col("nrm").as("nra")).repartition(parts)
     val b = s.select(col("vec_id").as("idb"), col("label").as("lb"),
@@ -2078,26 +1998,17 @@ object Similarity {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
-    val fold =
-      """aggregate(zip_with(%s, c, (x, y) -> (x - y) * (x - y)),
-        |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcdist2"), col("cid"))
-    val qroute = queries.crossJoin(broadcast(cent))
-      .withColumn("qcdist2", expr(fold.format("qv")))
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") === 1)
-      .select(col("query_id"), col("cid"))
+    val qroute = nearest(e.filter(col("vec_id") < 10)
+        .select(col("vec_id"), col("v")), cent, 1)
+      .select(col("vec_id").as("query_id"), col("cid"))
     val cand = assign.select(col("vec_id"), col("cid"))
       .join(broadcast(qroute), "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
-    val qsub = queries.select(col("query_id"),
-      posexplode(expr(
-        "transform(sequence(0, 7), mm -> slice(qv, CAST(mm * 8 + 1 AS INT), 8))"))
-        .as(Seq("m", "qsv")))
-    val table = qsub.join(broadcast(pqCent), Seq("m"))
-      .withColumn("qdist2", expr(fold.format("qsv")))
-      .select(col("query_id"), col("m"), col("cid"), col("qdist2"))
+    val table = queries.select(col("query_id"), subvectors("qv", 8))
+      .join(broadcast(pqCent), Seq("m"))
+      .select(col("query_id"), col("m"), col("cid"),
+        vector_dist2(col("v"), col("c")).as("qdist2"))
     val ws = Window.partitionBy(col("query_id"))
       .orderBy(col("adist"), col("vec_id"))
     val short = cand.join(codes, "vec_id")
@@ -2125,11 +2036,7 @@ object Similarity {
        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
        |qd AS (
        |  SELECT q.query_id, c.cid,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(0, 64), i ->
-       |        (q.qv[CAST(i+1 AS INT)] - c.c[CAST(i+1 AS INT)])
-       |      * (q.qv[CAST(i+1 AS INT)] - c.c[CAST(i+1 AS INT)]))),
-       |      (a, b) -> a + b) AS qcdist2
+       |    ${dist2Sql("q.qv", "c.c", 64)} AS qcdist2
        |  FROM q CROSS JOIN ic1 c),
        |qroute AS (SELECT query_id, cid FROM (
        |    SELECT *, row_number() OVER (PARTITION BY query_id
@@ -2144,11 +2051,7 @@ object Similarity {
        |  FROM q CROSS JOIN (SELECT unnest(range(0, 8)) AS m) mm),
        |qt AS (
        |  SELECT qs.query_id, qs.m, pc1.cid,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(0, 8), i ->
-       |        (qs.qsv[CAST(i+1 AS INT)] - pc1.c[CAST(i+1 AS INT)])
-       |      * (qs.qsv[CAST(i+1 AS INT)] - pc1.c[CAST(i+1 AS INT)]))),
-       |      (a, b) -> a + b) AS qdist2
+       |    ${dist2Sql("qs.qsv", "pc1.c", 8)} AS qdist2
        |  FROM qsub qs JOIN pc1 ON qs.m = pc1.m),
        |adc AS (
        |  SELECT c.query_id, c.vec_id,
@@ -2204,7 +2107,6 @@ object Similarity {
     * At 100 TB: 3 scans of the (cached) vector column, each exchanging
     * only d·partitions decimal partials; driver state 64 doubles. */
   def powerIteration(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val e = G.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .cache()
@@ -2217,7 +2119,6 @@ object Similarity {
   private[graft] def powerIterVecs(e: DataFrame, d: Int,
       rounds: Int): DataFrame = {
     val spark = e.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     import spark.implicits._
     var v: Array[Double] = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
     var lambda = 0.0
@@ -2334,16 +2235,13 @@ object Similarity {
   def kmeansParallelInit(spark: SparkSession, dir: String, l: Int = 4,
       rounds: Int = 2, k: Int = 8): DataFrame = {
     val e = embeddings(spark, dir).select(col("vec_id"), col("v"))
-    val d2expr = expr(
-      """aggregate(zip_with(v, c, (x, y) -> (x - y) * (x - y)),
-        |          CAST(0.0 AS DOUBLE), (s, t) -> s + t)""".stripMargin)
     var cent = e.filter(col("vec_id") === 0)
       .select(col("vec_id").as("cid"), col("v").as("c"),
         lit(0L).as("round"))
     for (r <- 1 to rounds) {
       val d2 = e.crossJoin(broadcast(cent.select(col("c"))))
-        .withColumn("dist2", d2expr)
-        .groupBy(col("vec_id")).agg(min(col("dist2")).as("d2"))
+        .groupBy(col("vec_id"))
+        .agg(min(vector_dist2(col("v"), col("c"))).as("d2"))
       val phi = d2.agg(G.dsum(col("d2")).as("phi"))
       val sampled = e.join(d2, "vec_id").crossJoin(broadcast(phi))
         .filter(
@@ -2356,12 +2254,7 @@ object Similarity {
       cent = cent.unionByName(sampled)
     }
     val cents = cent.cache()
-    val assign = e.crossJoin(broadcast(cents.select(col("cid"), col("c"))))
-      .withColumn("dist2", d2expr)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("dist2"), col("cid"))))
-      .filter(col("rn") === 1)
+    val assign = nearest(e, cents.select(col("cid"), col("c")), 1)
     val weights = assign.groupBy(col("cid"))
       .agg(count(lit(1)).as("weight"))
     cents.join(weights, Seq("cid"), "left")
@@ -2380,12 +2273,7 @@ object Similarity {
       s"""'0' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8) <
          |  printf('%09x', CAST(least(floor(${4294967296.0} * L * d2 / phi),
          |                            4294967296.0) AS BIGINT))""".stripMargin
-    def d2fold(cRel: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |  list_transform(range(0, $dims), i ->
-         |    (e.v[CAST(i+1 AS INT)] - $cRel.c[CAST(i+1 AS INT)])
-         |  * (e.v[CAST(i+1 AS INT)] - $cRel.c[CAST(i+1 AS INT)]))),
-         |  (a, b) -> a + b)""".stripMargin
+    def d2fold(cRel: String): String = dist2Sql("e.v", s"$cRel.c", dims)
     def round(r: Int): String =
       s"""d$r AS (
          |  SELECT e.vec_id, min(${d2fold(s"g${r - 1}")}) AS d2

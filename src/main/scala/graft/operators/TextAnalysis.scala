@@ -257,7 +257,6 @@ object TextAnalysis {
     * under re-encoding, unlike md5 of raw bytes only in that it is
     * reproducible in plain SQL on any engine. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashExpressions.ensureRegistered(spark)
     // round 2: the rolling hash is now a native codegen Expression
     // (graft.functions.PolyHash) — same arithmetic as the previous
     // mapPartitions loop (VectorExprSpec asserts parity) but the query

@@ -769,7 +769,6 @@ object Validation {
     * exact integers in fixed order; keys audit independently. */
   def skewReport(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HashExpressions.poly_hash
-    graft.functions.HashExpressions.ensureRegistered(spark)
     def audit(keyName: String, table: String, keyCol: String): DataFrame = {
       val perKey = G.table(spark, dir, table)
         .select(col(keyCol).cast("string").as("k"))

@@ -173,7 +173,7 @@ class Round6OpsSpec extends SparkSpec {
       // intermediate rework): centroids reach the corpus via broadcast
       val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
         .selectExpr("vec_id", "CAST(embedding AS array<double>) AS v")
-      val (assign, _) = Similarity.ivfAssignCentOn(e, 8, 2)
+      val (assign, _) = Similarity.lloyd(e, 8, 2)
       assign.collect()
       val bstr = assign.queryExecution.executedPlan.toString
       assert(bstr.contains("BroadcastNestedLoopJoin") ||

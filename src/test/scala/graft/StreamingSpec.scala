@@ -211,6 +211,14 @@ class StreamingSpec extends SparkSpec {
     assert(emptyOther == 0)
     assert(empty.schema == src.schema)
     assert(empty.count() == 0)
+    // a fan-out sink read-back: after the replay, its schema comes from
+    // the parsed stream by analysis, with no job
+    StreamingJobs.fanOutReplay(spark, sf())
+    val (raw, _, rawOther) =
+      countJobs(StreamingJobs.fanOutRawReplay(spark, sf()))
+    assert(rawOther == 0,
+      s"$rawOther job(s) outside the stream: the raw sink inferred a schema")
+    assert(raw.count() > 0)
   }
 
   test("fan-out raw + alert sinks reproduce the batch parse (q_stream_raw / q_stream_alerts)") {

@@ -85,4 +85,70 @@ class VectorExprSpec extends SparkSpec {
       .head().getDouble(0)
     assert(math.abs(c - 1.0) < 1e-15)
   }
+
+  test("the four custom columns evaluate on a session with no function " +
+      "registered") {
+    import graft.functions.HashExpressions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    assert(Seq("vector_dot", "quant_stats", "vector_dist2", "poly_hash")
+      .forall(n => !registry.functionExists(FunctionIdentifier(n))))
+    import fresh.implicits._
+    val r = Seq((Seq(1.0, 2.0), Seq(4.0, 6.0), "ab")).toDF("a", "b", "s")
+      .select(VectorExpressions.vector_dot(col("a"), col("b")),
+        VectorExpressions.vector_dist2(col("a"), col("b")),
+        VectorExpressions.quant_stats(col("a")).getField("n_sat"),
+        HashExpressions.poly_hash(col("s")))
+      .head()
+    assert(r.getDouble(0) == 16.0)
+    assert(r.getDouble(1) == 25.0)
+    assert(r.getLong(2) == 1L)
+    assert(r.getLong(3) == 97L * 31 + 98)
+  }
+
+  test("vector_dist2 == the aggregate(zip_with) fold bit for bit, with the " +
+      "fold's nulls for unequal lengths and null elements") {
+    val rnd = new scala.util.Random(20261018L)
+    def vec(n: Int) = Seq.fill(n)(rnd.nextGaussian() * 3)
+    val random = Seq(1, 8, 64).flatMap(n => Seq.fill(20)((vec(n), vec(n))))
+    // unequal lengths, then two empty arrays
+    val dense = random ++ Seq((vec(3), vec(4)), (vec(0), vec(1)),
+      (vec(0), vec(0)))
+    val holes = dense.map { case (a, b) => (a.map(Option(_)), b.map(Option(_))) } ++
+      Seq((Seq(Some(1.0), None, Some(2.0)), Seq(Some(1.0), Some(0.5), Some(2.0))),
+        (Seq(Some(1.0), Some(2.0)), Seq(Some(1.0), None)))
+    val fold = aggregate(
+      zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
+      lit(0.0), (s, t) => s + t)
+    def dist2s(df: org.apache.spark.sql.DataFrame): Seq[Option[Double]] =
+      df.select(col("id"),
+          VectorExpressions.vector_dist2(col("a"), col("b")), fold)
+        .orderBy("id").collect().toSeq.map { r =>
+          if (r.isNullAt(2)) assert(r.isNullAt(1), s"row ${r.getLong(0)}")
+          else assert(!r.isNullAt(1) && r.getDouble(1) == r.getDouble(2),
+            s"row ${r.getLong(0)}: ${r.get(1)} vs ${r.getDouble(2)}")
+          if (r.isNullAt(1)) None else Some(r.getDouble(1))
+        }
+    def frame[T: scala.reflect.runtime.universe.TypeTag](rows: Seq[(T, T)]) =
+      rows.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
+        .toDF("id", "a", "b")
+    // repartitioned, so the projection is not folded into the local
+    // relation on the driver: whole-stage codegen, then interpreted eval
+    for ((wholeStage, factory) <- Seq("true" -> "CODEGEN_ONLY",
+        "false" -> "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val d = dist2s(frame(dense).repartition(2))
+        assert(d.take(random.size).forall(_.isDefined))
+        assert(d.drop(random.size) == Seq(None, None, Some(0.0)))
+        val h = dist2s(frame(holes).repartition(2))
+        assert(h == d ++ Seq(None, None))
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
 }
