@@ -45,8 +45,7 @@ object Graft {
     // Small-shuffle parallelism floor: AQE coalescing bottoms out at
     // minPartitionSize (default 1m), serializing byte-small but CPU-dense
     // stages (3× on q_x12's verify shuffle); ≫1 MB partitions are untouched.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"),
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,

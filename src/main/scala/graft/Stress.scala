@@ -72,40 +72,18 @@ object Stress {
     }
 
     val results = Seq(
-      // oracle-flavored agg (DECIMAL-exact sums) vs production agg (double
-      // sums): same plan shape, the decimal path pays per-row Decimal
-      // allocation — quantified here, discussed in SCALE.md
+      // the DECIMAL-exact sums pay a per-row Decimal allocation (SCALE.md)
       time("window_agg_decimal") {
         TradeAggregates.windowAggOn(ev)
           .write.mode("overwrite").format("noop").save()
       },
-      time("window_agg_double") {
-        G.exactSums = false
-        try TradeAggregates.windowAggOn(ev)
-          .write.mode("overwrite").format("noop").save()
-        finally G.exactSums = true
-      },
       time("detector_fold") {
-        import org.apache.spark.sql.Dataset
-        val input = ev.select(col("user_id"), col("event_id"),
+        AnomalyDetection.detectOn(ev.select(col("user_id"), col("event_id"),
           expr("unix_micros(ts) DIV 1000").as("ts_ms"),
           col("value").as("price"), col("k").as("volume"),
           (col("value") * col("k")).as("amount"))
-          .as[AnomalyDetection.Ev]
-        val alerts: Dataset[model.AnomalyAlert] = input
-          .repartition(col("user_id"))
-          .sortWithinPartitions(col("user_id"), col("ts_ms"), col("event_id"))
-          .mapPartitions { it =>
-            var curKey = Long.MinValue
-            var st = model.DetectorState.empty
-            it.flatMap { e =>
-              if (e.user_id != curKey) { curKey = e.user_id; st = model.DetectorState.empty }
-              val (out, st2) = AnomalyDetection.step(st, e)
-              st = st2
-              out
-            }
-          }
-        alerts.write.mode("overwrite").format("noop").save()
+          .as[AnomalyDetection.Ev])
+          .write.mode("overwrite").format("noop").save()
       },
       time("cdc_parse") {
         val js = ev.select(concat(

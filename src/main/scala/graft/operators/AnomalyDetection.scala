@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * `mapPartitions`. One shuffle, spill-backed sort, O(1) state per key in
   * flight — this survives keys with billions of events where
   * per-group materialization would OOM. Streaming path: see
-  * `graft.streaming.StreamingJobs.detectAnomalies`
-  * (flatMapGroupsWithState), sharing the same per-event transition below.
+  * `graft.streaming.StreamingJobs.detectAnomaliesStream`
+  * (flatMapGroupsWithState) and `detectAnomaliesTws`, which fold each
+  * micro-batch through [[foldBatch]] — the same per-event transition.
   *
   * Thresholds are re-based from the reference's KRW crypto magnitudes
   * (`AnomalyDetector.java:32-37`: LARGE_TRADE 5e8/3e8/1e8, PRICE_SPIKE
@@ -55,8 +56,9 @@ object AnomalyDetection {
   final case class Ev(user_id: Long, event_id: Long, ts_ms: Long,
       price: Double, volume: Long, amount: Double)
 
-  /** The per-event state transition — shared verbatim by the batch fold and
-    * the streaming flatMapGroupsWithState path. Returns (alerts, newState).
+  /** The per-event state transition, called only by the two folds below
+    * ([[detectOn]] for batch, [[foldBatch]] for the streaming detectors).
+    * Returns (alerts, newState).
     * Rule order and state-update order mirror the reference exactly. */
   def step(st: DetectorState, e: Ev): (List[model.AnomalyAlert], DetectorState) = {
     var alerts = List.empty[model.AnomalyAlert]
@@ -113,26 +115,45 @@ object AnomalyDetection {
       .as[Ev]
   }
 
-  /** Deterministic batch detector: one shuffle on the key, secondary sort,
-    * single-pass fold. Emits the full alert stream (all 4 rule types). */
-  def detect(spark: SparkSession, dir: String): DataFrame = {
+  /** The streaming fold: one key's events from one micro-batch, sorted by
+    * (ts_ms, event_id) and stepped from the state `st` the key carried out
+    * of earlier batches. Returns the alerts and the state to carry on. */
+  def foldBatch(st: DetectorState, events: Iterator[Ev])
+      : (Seq[model.AnomalyAlert], DetectorState) = {
+    var s = st
+    val out = events.toSeq.sortBy(e => (e.ts_ms, e.event_id)).flatMap { e =>
+      val (alerts, s2) = step(s, e)
+      s = s2
+      alerts
+    }
+    (out, s)
+  }
+
+  /** The batch fold over any detector input: one shuffle on the key, a
+    * secondary sort by (user_id, ts_ms, event_id), then each partition
+    * stepped in order, with fresh state at each key change. */
+  def detectOn(input: Dataset[Ev]): Dataset[model.AnomalyAlert] = {
+    val spark = input.sparkSession
     import spark.implicits._
-    val alerts = detectorInput(spark, dir)
-      .repartition(col("user_id"))
+    input.repartition(col("user_id"))
       .sortWithinPartitions(col("user_id"), col("ts_ms"), col("event_id"))
-      .mapPartitions { it =>
-        var curKey = Long.MinValue
+      .mapPartitions { events =>
+        var key = Long.MinValue
         var st = DetectorState.empty
-        it.flatMap { e =>
-          if (e.user_id != curKey) { curKey = e.user_id; st = DetectorState.empty }
-          val (out, st2) = step(st, e)
+        events.flatMap { e =>
+          if (e.user_id != key) { key = e.user_id; st = DetectorState.empty }
+          val (alerts, st2) = step(st, e)
           st = st2
-          out
+          alerts
         }
       }
-    alerts.toDF()
-      .orderBy(col("detected_at"), col("trade_id"), col("alert_type"))
   }
+
+  /** Deterministic batch detector over `events`. Emits the full alert
+    * stream (all 4 rule types). */
+  def detect(spark: SparkSession, dir: String): DataFrame =
+    detectOn(detectorInput(spark, dir)).toDF()
+      .orderBy(col("detected_at"), col("trade_id"), col("alert_type"))
 
   /** D1 only, structured columns (message-free for exact SQL oracle). */
   def largeTrades(spark: SparkSession, dir: String): DataFrame =

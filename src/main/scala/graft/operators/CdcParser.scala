@@ -17,17 +17,20 @@ import org.apache.spark.sql.types._
   *  - `cdc_latency_ms = ts_ms - source.ts_ms` (`:90`)
   *  - malformed JSON → 0 rows, no failure (`:94-96`)
   *
-  * Spark-first: `from_json` returns null on corrupt input and null for absent
-  * fields, so the flatMap's 0-or-1-row behavior is exactly
-  * `from_json → filter(op.isNotNull) → filter(image.isNotNull)` and defaults
-  * are `coalesce` — all codegen'd builtins; no UDF, fully pushdown-friendly.
-  * At 100 TB this stays a single narrow projection stage: no shuffle, no
-  * state, whole-stage-codegen end to end.
+  * [[parse]] is the implementation: a Jackson streaming kernel that reads
+  * each envelope's tokens once into the 12 output slots. [[parseEnvelope]]
+  * states the same semantics declaratively (`from_json`, `coalesce`,
+  * `try_cast`); no production path calls it, and the specs compare the two
+  * on every fixture, the roundtrip corpus and fuzzed envelopes. At 100 TB
+  * the parse stays a single narrow stage: no shuffle, no state.
   */
 object CdcParser {
 
-  /** Core operator: parse a column of Debezium-envelope JSON into the
-    * flattened trade-event frame (model.TradeEvent columns).
+  /** The declarative reference for [[parse]]: the same Debezium-envelope
+    * parse written with `from_json` (null on corrupt input and on absent
+    * fields, so the flatMap's 0-or-1-row behavior is a keep flag over op and
+    * image) and `coalesce` defaults. The specs compare [[parse]] against it;
+    * no production code calls it.
     *
     * PERFORMANCE-CRITICAL SHAPE: the drop conditions (tombstone / malformed
     * / missing image) must NOT be expressed as `filter` over aliases of the
@@ -74,20 +77,11 @@ object CdcParser {
       .drop("_keep")
   }
 
-  /** When true (default), [[parse]] routes through the Jackson streaming
-    * kernel; false falls back to the declarative from_json formulation.
-    * Both are semantically pinned to each other by CdcParserSpec. */
-  @volatile var fastParse: Boolean = true
-
-  /** Production entry point: the ingest parse. */
-  def parse(df: DataFrame, jsonCol: Column): DataFrame =
-    if (fastParse) parseEnvelopeFast(df, jsonCol)
-    else parseEnvelope(df, jsonCol)
-
-  /** Jackson streaming fast path — same semantics as [[parseEnvelope]]
-    * (the from_json formulation above stays as the declarative reference
-    * and A/B baseline; CdcParserSpec asserts equivalence on every fixture
-    * and the full roundtrip corpus).
+  /** The ingest parse: a column of Debezium-envelope JSON into the
+    * flattened trade-event frame (model.ParsedEvent columns), through a
+    * Jackson streaming kernel with the semantics of [[parseEnvelope]]
+    * (CdcParserSpec asserts equivalence on every fixture and the full
+    * roundtrip corpus).
     *
     * Why: `from_json` is CodegenFallback — per row it allocates a generic
     * JacksonParser run, materializes the full envelope struct (3 nested
@@ -108,7 +102,7 @@ object CdcParser {
     *  - long fields accept only integer tokens (from_json nulls a string
     *    there); string fields accept any scalar's text (unquoted numbers
     *    arrive as their literal text, the "numeric decimal" fixture) */
-  def parseEnvelopeFast(df: DataFrame, jsonCol: Column): DataFrame = {
+  def parse(df: DataFrame, jsonCol: Column): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val out = df.select(jsonCol.cast(StringType)).as[String]
@@ -564,23 +558,29 @@ object CdcParser {
     * an unknown nested subtree injected (`v2_extras`: an array of mixed
     * scalars and objects — the worst case for a token-skipper), and the
     * ORACLE IS q_p1's unchanged v1 SQL: the hash match proves the parser
-    * treats v2 input exactly as v1, for both the Jackson fast path (its
-    * skipChildren branch) and the from_json reference formulation
-    * (absent-from-schema fields are dropped by construction).
+    * treats v2 input exactly as v1: the Jackson kernel skips the subtree
+    * (its skipChildren branch), and Round7gOpsSpec shows the from_json
+    * reference dropping it too (absent-from-schema fields are dropped by
+    * construction).
     *
     * Plan shape: identical to q_p1 — the injection is one conditional
     * string replace in the generator projection; still a single narrow
     * scan stage. */
-  def forwardCompatParse(spark: SparkSession, dir: String): DataFrame = {
-    val env = eventsAsEnvelopeJsonTs(spark, dir)
-    val v2 = env.withColumn("json",
+  def forwardCompatParse(spark: SparkSession, dir: String): DataFrame =
+    parse(forwardCompatEnvelopes(spark, dir), col("json"))
+      .orderBy(col("trade_id"))
+
+  /** q_p12's input: the roundtrip envelopes with the v2 subtree injected
+    * into every 13th event's, after the `source` object, which closes just
+    * before `op` in every envelope that has one. */
+  private[graft] def forwardCompatEnvelopes(spark: SparkSession,
+      dir: String): DataFrame =
+    eventsAsEnvelopeJsonTs(spark, dir).withColumn("json",
       when(col("event_id") % 13 === 0,
-        expr("""replace(json, '", "op": "',
-               |  '", "v2_extras": {"trace": [1, 2, {"deep": true}], "note": "n"}, "op": "')"""
+        expr("""replace(json, '}, "op": "',
+               |  '}, "v2_extras": {"trace": [1, 2, {"deep": true}], "note": "n"}, "op": "')"""
           .stripMargin.replace("\n", "")))
         .otherwise(col("json")))
-    parse(v2, col("json")).orderBy(col("trade_id"))
-  }
 
   /** The v1 parse spec, verbatim — equality IS the compatibility proof. */
   def forwardCompatParseSql: String = cdcParseRoundtripSql

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.G
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Window / rollup / dashboard aggregations (SURVEY §2.3 A1–A8).
@@ -35,49 +35,39 @@ object TradeAggregates {
   /** The aggregation itself over any frame with (ts, user_id, event_type,
     * value, k) — reused by the batch query, the streaming job
     * (graft.streaming.StreamingJobs) and the golden-fixture tests. */
-  def windowAggOn(ev: DataFrame): DataFrame = {
+  def windowAggOn(ev: DataFrame): DataFrame =
     ev.groupBy(
         window(col("ts"), "5 minutes").getField("start").as("window_start"),
         col("user_id"))
-      .agg(
-        count(lit(1)).as("trade_count"),
-        count(when(col("event_type") === "purchase", 1)).as("bid_count"),
-        count(when(col("event_type") =!= "purchase", 1)).as("ask_count"),
-        G.dsum(col("value") * col("k")).as("total_amount"),
-        sum(col("k")).as("total_volume"),
-        (G.dsum(col("value")) / count(col("value"))).as("avg_price"),
-        min(col("value")).as("min_price"),
-        max(col("value")).as("max_price"),
-        // VWAP = totalAmount/totalVolume, 0 when volume is 0
-        // (reference zero-guard, TradeAggregator.java:75)
-        when(sum(col("k")) > 0,
-          G.dsum(col("value") * col("k")) / sum(col("k")))
-          .otherwise(0.0).as("vwap"))
-  }
+      .agg(windowAggs.head, windowAggs.tail: _*)
 
   /** [[windowAggOn]] grouped by the window STRUCT (start projected after
     * the aggregate): identical values, but required for append-mode
     * streaming — extracting `.getField("start")` inside the groupBy severs
     * the event-time column Spark tracks the watermark through, and the
     * planner then rejects the query as an un-watermarked aggregation. */
-  def windowAggAppendOn(ev: DataFrame): DataFrame =
-    ev.groupBy(window(col("ts"), "5 minutes").as("w"), col("user_id"))
-      .agg(
-        count(lit(1)).as("trade_count"),
-        count(when(col("event_type") === "purchase", 1)).as("bid_count"),
-        count(when(col("event_type") =!= "purchase", 1)).as("ask_count"),
-        G.dsum(col("value") * col("k")).as("total_amount"),
-        sum(col("k")).as("total_volume"),
-        (G.dsum(col("value")) / count(col("value"))).as("avg_price"),
-        min(col("value")).as("min_price"),
-        max(col("value")).as("max_price"),
-        when(sum(col("k")) > 0,
-          G.dsum(col("value") * col("k")) / sum(col("k")))
-          .otherwise(0.0).as("vwap"))
-      .select(col("w.start").as("window_start"), col("user_id"),
-        col("trade_count"), col("bid_count"), col("ask_count"),
-        col("total_amount"), col("total_volume"), col("avg_price"),
-        col("min_price"), col("max_price"), col("vwap"))
+  def windowAggAppendOn(ev: DataFrame): DataFrame = {
+    val agg = ev.groupBy(window(col("ts"), "5 minutes").as("w"), col("user_id"))
+      .agg(windowAggs.head, windowAggs.tail: _*)
+    agg.select(col("w.start").as("window_start") +: agg.columns.tail.map(col): _*)
+  }
+
+  /** The A1/A2 aggregates both groupings above compute: count,
+    * conditional BID/ASK counts, sums, min/max, avg and VWAP. */
+  private val windowAggs: Seq[Column] = Seq(
+    count(lit(1)).as("trade_count"),
+    count(when(col("event_type") === "purchase", 1)).as("bid_count"),
+    count(when(col("event_type") =!= "purchase", 1)).as("ask_count"),
+    G.dsum(col("value") * col("k")).as("total_amount"),
+    sum(col("k")).as("total_volume"),
+    (G.dsum(col("value")) / count(col("value"))).as("avg_price"),
+    min(col("value")).as("min_price"),
+    max(col("value")).as("max_price"),
+    // VWAP = totalAmount/totalVolume, 0 when volume is 0
+    // (reference zero-guard, TradeAggregator.java:75)
+    when(sum(col("k")) > 0,
+      G.dsum(col("value") * col("k")) / sum(col("k")))
+      .otherwise(0.0).as("vwap"))
 
   /** Session windows (30-minute gap) per user — Spark `session_window`;
     * additive streaming-semantics surface (the reference has none,

@@ -197,13 +197,18 @@ object StreamingJobs {
     * mode's watermark tracking survives). */
   def windowAggStream(parsed: DataFrame): DataFrame =
     TradeAggregates.windowAggAppendOn(
-      parsed.select(
-        timestamp_millis(col("source_ts")).as("ts"),
-        col("market").as("user_id"),
-        col("ask_bid").as("event_type"),
-        col("trade_price").as("value"),
-        col("trade_volume").as("k"))
-        .withWatermark("ts", "10 minutes"))
+      windowInput(parsed).withWatermark("ts", "10 minutes"))
+
+  /** A parsed trade as window-aggregate input (ts, user_id, event_type,
+    * value, k): the projection the stream and the fan-out's per-batch
+    * aggregate share. */
+  private def windowInput(parsed: DataFrame): DataFrame =
+    parsed.select(
+      timestamp_millis(col("source_ts")).as("ts"),
+      col("market").as("user_id"),
+      col("ask_bid").as("event_type"),
+      col("trade_price").as("value"),
+      col("trade_volume").as("k"))
 
   /** OHLC candles STREAMING: q_a18's 15-minute bars emitted in APPEND
     * mode by watermark passage — the live version of the dashboard's
@@ -406,22 +411,29 @@ object StreamingJobs {
     parsed.join(
       org.apache.spark.sql.functions.broadcast(dim), Seq("market"), "left")
 
-  /** D1–D4 streaming: flatMapGroupsWithState, sharing
-    * `AnomalyDetection.step` with the batch fold. Events within each
-    * micro-batch group are sorted by (ts, id) before folding — the
-    * documented per-micro-batch ordering guarantee (SURVEY §7.4). */
+  /** D1–D4 streaming: flatMapGroupsWithState over
+    * [[AnomalyDetection.foldBatch]], carrying DetectorState across batches.
+    * Events within each micro-batch group are sorted by (ts, id) before
+    * folding — the documented per-micro-batch ordering guarantee
+    * (SURVEY §7.4). */
   def detectAnomaliesStream(parsed: DataFrame): Dataset[AnomalyAlert] = {
     val spark = parsed.sparkSession
     import spark.implicits._
     evFromTrades(parsed).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        detectGroup)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: Long, events: Iterator[AnomalyDetection.Ev],
+            state: GroupState[DetectorState]) =>
+          val (out, st) = AnomalyDetection.foldBatch(
+            state.getOption.getOrElse(DetectorState.empty), events)
+          state.update(st)
+          out.iterator
+      }
   }
 
   /** D1–D4 streaming on Spark 4's `transformWithState` — the successor API
     * to flatMapGroupsWithState (typed per-state-variable handles, state
-    * TTL, timers, RocksDB-native layout). Same shared `step` fold and the
-    * same per-micro-batch (ts, id) ordering guarantee; StreamingSpec
+    * TTL, timers, RocksDB-native layout). Same [[AnomalyDetection.foldBatch]]
+    * and the same per-micro-batch (ts, id) ordering guarantee; StreamingSpec
     * asserts output equality with the fMGWS variant. At scale TWS is the
     * forward path: per-variable state enables independent eviction and
     * schema evolution of detector state.
@@ -453,12 +465,8 @@ object StreamingJobs {
         rows: Iterator[AnomalyDetection.Ev],
         timerValues: org.apache.spark.sql.streaming.TimerValues):
         Iterator[AnomalyAlert] = {
-      var st = if (state.exists()) state.get() else DetectorState.empty
-      val out = rows.toSeq.sortBy(e => (e.ts_ms, e.event_id)).flatMap { e =>
-        val (alerts, st2) = AnomalyDetection.step(st, e)
-        st = st2
-        alerts
-      }
+      val (out, st) = AnomalyDetection.foldBatch(
+        if (state.exists()) state.get() else DetectorState.empty, rows)
       state.update(st)
       out.iterator
     }
@@ -489,21 +497,6 @@ object StreamingJobs {
         col("trade_volume").cast("long").as("volume"),
         (col("trade_price") * col("trade_volume")).as("amount"))
       .as[AnomalyDetection.Ev]
-  }
-
-  /** Per-group transition: fold this micro-batch's events (sorted) through
-    * the shared step function, carrying DetectorState across batches. */
-  private[streaming] def detectGroup(key: Long,
-      events: Iterator[AnomalyDetection.Ev],
-      state: GroupState[DetectorState]): Iterator[AnomalyAlert] = {
-    var st = state.getOption.getOrElse(DetectorState.empty)
-    val out = events.toSeq.sortBy(e => (e.ts_ms, e.event_id)).flatMap { e =>
-      val (alerts, st2) = AnomalyDetection.step(st, e)
-      st = st2
-      alerts
-    }
-    state.update(st)
-    out.iterator
   }
 
   /** T1: read-once fan-out — one foreachBatch persists the micro-batch and
@@ -539,7 +532,7 @@ object StreamingJobs {
   private val fanOutSinks = scala.collection.immutable.ListMap[String,
       DataFrame => DataFrame](
     "raw" -> (_.withColumn("inserted_at", current_timestamp())),
-    "agg" -> windowAggBatch,
+    "agg" -> (b => TradeAggregates.windowAggOn(windowInput(b))),
     "alerts" -> (_.filter(col("op") === "c")
       .filter(col("trade_price") * col("trade_volume") >= 3000.0)))
 
@@ -1834,15 +1827,6 @@ object StreamingJobs {
       .map(h => (h.bigram, h.cnt_est, h.err))
       .toDF("bigram", "cnt_est", "err")
   }
-
-  private def windowAggBatch(batch: DataFrame): DataFrame =
-    TradeAggregates.windowAggOn(
-      batch.select(
-        timestamp_millis(col("source_ts")).as("ts"),
-        col("market").as("user_id"),
-        col("ask_bid").as("event_type"),
-        col("trade_price").as("value"),
-        col("trade_volume").as("k")))
 
   /** W4: session config for fault-tolerant state — RocksDB state store
     * (reference: RocksDB backend, EXACTLY_ONCE, 60 s checkpoints).

@@ -404,12 +404,6 @@ object G {
     }
   }
 
-  /** When false, `dsum`/`davg` fall back to plain double aggregation —
-    * production mode: ~4× faster on agg-heavy plans (measured in
-    * graft.Stress at 10 M rows) at the cost of bit-exact cross-engine
-    * reproducibility. The oracle/verify path leaves this true. */
-  @volatile var exactSums: Boolean = true
-
   /** Order-independent, oracle-exact sum of a double column.
     *
     * Summing doubles is order-dependent; Spark's partial/final aggregation
@@ -420,8 +414,7 @@ object G {
     * DuckDB oracle equivalent: `CAST(CAST(SUM(CAST(x AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)`.
     */
   def dsum(c: Column, scale: Int = 6): Column =
-    if (exactSums) sum(c.cast(DecimalType(38, scale))).cast(DoubleType)
-    else sum(c)
+    sum(c.cast(DecimalType(38, scale))).cast(DoubleType)
 
   /** Exact mean via decimal sum / count (DuckDB: dsum / COUNT(x)).
     * Plain `avg(double)` has the same order-dependence problem as sum. */

@@ -165,7 +165,7 @@ class PropertySpec extends SparkSpec {
         val df = jsons.toDF("json")
         val slow = CdcParser.parseEnvelope(df, col("json"))
           .collect().map(_.toSeq)
-        val fast = CdcParser.parseEnvelopeFast(df, col("json"))
+        val fast = CdcParser.parse(df, col("json"))
           .collect().map(_.toSeq)
         slow.sortBy(_.toString()).toSeq == fast.sortBy(_.toString()).toSeq
       }

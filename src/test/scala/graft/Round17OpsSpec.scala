@@ -19,10 +19,9 @@ class Round17OpsSpec extends SparkSpec {
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val s = Graft.session()
-      assert(s.conf.get(floorKey) ==
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"),
-        "the production facade must ship the same env-overridable " +
-          "minPartitionSize floor as Bench/Verify/Prof")
+      assert(s.conf.get(floorKey) == "64k",
+        "the production facade must ship the same minPartitionSize " +
+          "floor as Bench/Verify/Prof")
     } finally {
       prevFloor match {
         case Some(v) => spark.conf.set(floorKey, v)

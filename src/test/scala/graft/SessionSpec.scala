@@ -66,7 +66,7 @@ class SessionSpec extends SparkSpec {
       assert(c("spark.ui.enabled") == "false", name)
       assert(c("spark.sql.adaptive.enabled") == "true", name)
       assert(c("spark.sql.adaptive.coalescePartitions.minPartitionSize") ==
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k"), name)
+        "64k", name)
       assert(c("spark.sql.codegen.cache.maxEntries") ==
         Graft.CodegenCacheEntries.toString, name)
       LocalFsImpls.foreach { case (k, v) => assert(c(k) == v, s"$name $k") }

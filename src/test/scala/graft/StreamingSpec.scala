@@ -68,51 +68,72 @@ class StreamingSpec extends SparkSpec {
     assert(streaming == batch)
   }
 
-  test("stateful detector stream == batch fold on same single batch") {
-    val trades = Synthetic.trades(200)
+  /** The detector specs' input twice: in event-time order, and shuffled
+    * with a fixed seed, so one micro-batch carries each key's events out of
+    * order and only the fold's in-batch (ts_ms, event_id) sort can restore
+    * the time-ordered alerts. */
+  private def detectorInputs(trades: Seq[Synthetic.Trade])
+      : Seq[(String, Seq[String])] = {
     val jsons = trades.map(t => Synthetic.envelopeJson(t))
-    val parsed = parsedStream(jsons)
-    val q = StreamingJobs.detectAnomaliesStream(parsed)
-      .writeStream.format("memory").queryName("alerts_out")
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val streaming = spark.table("alerts_out")
-      .select("alert_type", "market", "trade_id")
-      .collect().map(_.toSeq).toSet
-    // batch reference: same mapping as detectAnomaliesStream, local fold
-    val evs = StreamingJobs.evFromTrades(
-      graft.operators.CdcParser.parseEnvelope(jsons.toDF("json"), col("json")))
-      .collect()
-    val local = evs.groupBy(_.user_id).toSeq.flatMap { case (_, es) =>
+    Seq("ordered" -> jsons, "shuffled" -> new scala.util.Random(11).shuffle(jsons))
+  }
+
+  /** Reference alerts: each key's events folded through `step` in the
+    * order given. */
+  private def localAlerts(evs: Seq[AnomalyDetection.Ev]): Set[Seq[Any]] =
+    evs.groupBy(_.user_id).toSeq.flatMap { case (_, es) =>
       var st = model.DetectorState.empty
-      es.sortBy(e => (e.ts_ms, e.event_id)).toSeq.flatMap { e =>
-        val (a, s2) = AnomalyDetection.step(st, e); st = s2; a }
+      es.flatMap { e => val (a, s2) = AnomalyDetection.step(st, e); st = s2; a }
     }.map(a => Seq[Any](a.alert_type, a.market, a.trade_id)).toSet
-    assert(streaming.nonEmpty)
-    assert(streaming == local)
+
+  test("stateful detector stream == batch fold on same single batch") {
+    val inputs = detectorInputs(Synthetic.trades(200))
+    // batch reference: same mapping as detectAnomaliesStream, local fold
+    val evs = StreamingJobs.evFromTrades(graft.operators.CdcParser
+      .parseEnvelope(inputs.head._2.toDF("json"), col("json"))).collect().toSeq
+    val local = localAlerts(evs.sortBy(e => (e.ts_ms, e.event_id)))
+    assert(local.nonEmpty)
+    inputs.foreach { case (label, jsons) =>
+      val q = StreamingJobs.detectAnomaliesStream(parsedStream(jsons))
+        .writeStream.format("memory").queryName(s"alerts_out_$label")
+        .outputMode("append").start()
+      try { q.processAllAvailable() } finally q.stop()
+      val streaming = spark.table(s"alerts_out_$label")
+        .select("alert_type", "market", "trade_id")
+        .collect().map(_.toSeq).toSet
+      assert(streaming.nonEmpty, label)
+      assert(streaming == local, label)
+    }
+    // the shuffle reorders events within keys: folded in arrival order,
+    // they would raise other alerts
+    val arrival = StreamingJobs.evFromTrades(graft.operators.CdcParser
+      .parseEnvelope(inputs(1)._2.toDF("json"), col("json"))).collect().toSeq
+    assert(localAlerts(arrival) != local)
   }
 
   test("transformWithState detector == flatMapGroupsWithState detector") {
-    val trades = Synthetic.trades(200)
-    val jsons = trades.map(t => Synthetic.envelopeJson(t))
+    val inputs = detectorInputs(Synthetic.trades(200))
     // TWS needs column families -> RocksDB provider (production config W4)
     StreamingJobs.configureStateStore(spark)
-    val q = StreamingJobs.detectAnomaliesTws(parsedStream(jsons))
-      .writeStream.format("memory").queryName("tws_out")
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally q.stop()
-    val tws = spark.table("tws_out")
-      .select("alert_type", "market", "trade_id")
-      .collect().map(_.toSeq).toSet
-    val q2 = StreamingJobs.detectAnomaliesStream(parsedStream(jsons))
+    val q2 = StreamingJobs.detectAnomaliesStream(parsedStream(inputs.head._2))
       .writeStream.format("memory").queryName("fmgws_out")
       .outputMode("append").start()
     try { q2.processAllAvailable() } finally q2.stop()
     val fmgws = spark.table("fmgws_out")
       .select("alert_type", "market", "trade_id")
       .collect().map(_.toSeq).toSet
-    assert(tws.nonEmpty)
-    assert(tws == fmgws)
+    assert(fmgws.nonEmpty)
+    inputs.foreach { case (label, jsons) =>
+      val q = StreamingJobs.detectAnomaliesTws(parsedStream(jsons))
+        .writeStream.format("memory").queryName(s"tws_out_$label")
+        .outputMode("append").start()
+      try { q.processAllAvailable() } finally q.stop()
+      val tws = spark.table(s"tws_out_$label")
+        .select("alert_type", "market", "trade_id")
+        .collect().map(_.toSeq).toSet
+      assert(tws.nonEmpty, label)
+      assert(tws == fmgws, label)
+    }
   }
 
   test("streaming minute rollup == batch rollup (A3 MV analogue)") {
