@@ -727,10 +727,8 @@ object Curation {
       .select((col("doc_id") + 3000000).as("doc_id"),
         expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 100000))").as("text"))
     val sigs = Dedup.minhashPolyStage(base.union(bench)).cache()
-    val banded = Dedup.capBuckets(
-      sigs.select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
+    val banded = Dedup.capBuckets(Dedup.bandRows(sigs), Seq("band", "bucket"),
+      maxBucketSize = 100000)
     val bt = banded.filter(col("doc_id") < 3000000)
       .select(col("doc_id").as("train_id"), col("band"), col("bucket"))
     val bb = banded.filter(col("doc_id") >= 3000000)
@@ -742,9 +740,7 @@ object Curation {
     val shB = sigs.select(col("doc_id").as("bench_id"),
       col("shingles").as("sh_b"))
     cand.join(shT, Seq("train_id")).join(broadcast(shB), Seq("bench_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_t"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_t"), col("sh_b"))))
+      .withColumn("jaccard", Dedup.jaccard(col("sh_t"), col("sh_b")))
       .filter(G.simFilter(col("jaccard"), lit(0.5)))
       .select(col("train_id"), col("bench_id"),
         round(col("jaccard"), 4).as("jaccard"))

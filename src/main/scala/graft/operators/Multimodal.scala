@@ -224,23 +224,16 @@ object Multimodal {
     * shared by the query and the Stress `phash_neardup` ladder. */
   private[graft] def phashNearDupsOn(mediaDf: DataFrame): DataFrame = {
     val sigs = phashSigsOn(mediaDf)
-    val banded = Dedup.capBuckets(
-      sigs.select(col("doc_id"), col("phash"),
-        posexplode(expr(
-          """array(phash & 4095,
-            |      shiftright(phash, 12) & 4095,
-            |      shiftright(phash, 24) & 4095,
-            |      shiftright(phash, 36) & 4095)""".stripMargin))
-          .as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucketSize = 100000)
-    val a = banded.select(col("doc_id").as("doc_a"),
-      col("phash").as("ph_a"), col("band"), col("bucket"))
-    val b = banded.select(col("doc_id").as("doc_b"),
-      col("phash").as("ph_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
+    val banded = sigs.select(col("doc_id"), col("phash"),
+      posexplode(expr(
+        """array(phash & 4095,
+          |      shiftright(phash, 12) & 4095,
+          |      shiftright(phash, 24) & 4095,
+          |      shiftright(phash, 36) & 4095)""".stripMargin))
+        .as(Seq("band", "bucket")))
+    Dedup.bucketPairs(banded, Seq("band", "bucket"), Seq("phash"), 100000)
       .select(col("doc_a"), col("doc_b"),
-        expr("CAST(bit_count(ph_a ^ ph_b) AS BIGINT)").as("hamming"))
+        expr("CAST(bit_count(phash_a ^ phash_b) AS BIGINT)").as("hamming"))
       .filter(col("hamming") <= 1)
       .distinct()
       .orderBy(col("doc_a"), col("doc_b"))

@@ -37,8 +37,22 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.vector_dot(a, b)
 
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.vector_cosine(a, b)
+  /** Cosine of `a` and `b` from their precomputed norms `na`, `nb`. */
+  private[graft] def cosine(a: Column, b: Column, na: Column, nb: Column)
+      : Column = dot(a, b) / (na * nb)
+
+  /** Exact-cosine verify of candidate pairs (`cand`: id_a, id_b) against
+    * `e` (vec_id, v, nrm): keeps sim ≥ `tau`, ordered by the pair. */
+  private def cosineVerify(cand: DataFrame, e: DataFrame, tau: Double)
+      : DataFrame = {
+    val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
+    cand.join(vecs.toDF("id_a", "va", "na"), "id_a")
+      .join(vecs.toDF("id_b", "vb", "nb"), "id_b")
+      .withColumn("sim", cosine(col("va"), col("vb"), col("na"), col("nb")))
+      .filter(G.simFilter(col("sim"), lit(tau)))
+      .select(col("id_a"), col("id_b"), col("sim"))
+      .orderBy(col("id_a"), col("id_b"))
+  }
 
   /** Corpus with per-vector norm precomputed once — cosine over pairs then
     * costs one dot product, not three (norms recomputed per pair would be
@@ -296,26 +310,18 @@ object Similarity {
     // Bench/Verify clearCache() between queries so these blocks don't
     // accumulate across a 50-query session. capBuckets drops degenerate hot
     // buckets (see Dedup.capBuckets) before the O(size²) self-join.
-    val banded = Dedup.capBuckets(
-      sigs.select(col("vec_id"), explode(col("buckets")).as("bucket")),
-      Seq("bucket"), maxBucketSize = 100000)
-      .cache()
-    val cand = banded.as("a")
-      .join(banded.as("b"), col("a.bucket") === col("b.bucket"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
-    cand
-      .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va"),
-        col("nrm").as("na")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb"),
-        col("nrm").as("nb")), Seq("id_b"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(G.simFilter(col("sim"), lit(threshold)))
-      .select(col("id_a"), col("id_b"), col("sim"))
-      .orderBy(col("id_a"), col("id_b"))
+    signLshPairs(sigs, e, threshold)
   }
+
+  /** The sign-LSH tail of y4 and y4b: candidate pairs from the capped
+    * (cached) bucket self-join of a (vec_id, buckets) signature frame,
+    * deduped, then verified by exact cosine against `e`. */
+  private def signLshPairs(sigs: DataFrame, e: DataFrame, threshold: Double)
+      : DataFrame =
+    cosineVerify(Dedup.bucketPairs(
+      sigs.select(col("vec_id"), explode(col("buckets")).as("bucket")),
+      Seq("bucket"), Nil, 100000, "vec_id", ("id_a", "id_b"), cache = true)
+      .distinct(), e, threshold)
 
   /** Oracle-checked sign-LSH twin of [[lshNearDups]] — same 16 tables ×
     * corpus-tuned sign-bits × 0.35 threshold, but the hyperplane signs come from
@@ -378,25 +384,7 @@ object Similarity {
           (id, buckets)
         }
       }.toDF("vec_id", "buckets")
-    val banded = Dedup.capBuckets(
-      sigs.select(col("vec_id"), explode(col("buckets")).as("bucket")),
-      Seq("bucket"), maxBucketSize = 100000)
-      .cache()
-    val cand = banded.as("a")
-      .join(banded.as("b"), col("a.bucket") === col("b.bucket"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
-    cand
-      .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va"),
-        col("nrm").as("na")), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb"),
-        col("nrm").as("nb")), Seq("id_b"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(G.simFilter(col("sim"), lit(threshold)))
-      .select(col("id_a"), col("id_b"), col("sim"))
-      .orderBy(col("id_a"), col("id_b"))
+    signLshPairs(sigs, e, threshold)
   }
 
   /** Unordered body — [[signLshRecallSql]] embeds it as a subquery
@@ -573,15 +561,7 @@ object Similarity {
         .select(least(col("qid"), col("hid")).as("id_a"),
           greatest(col("qid"), col("hid")).as("id_b"))
     }.reduce(_ unionByName _).distinct()
-    val x = e.select(col("vec_id").as("id_a"), col("v").as("va"),
-      col("nrm").as("na"))
-    val y = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
-      col("nrm").as("nb"))
-    cand.join(x, "id_a").join(y, "id_b")
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(G.simFilter(col("sim"), lit(tau)))
-      .select(col("id_a"), col("id_b"), col("sim"))
-      .orderBy(col("id_a"), col("id_b"))
+    cosineVerify(cand, e, tau)
   }
 
   /** DuckDB replay of [[ivfNearDups]]: one k-means CTE chain per table
@@ -615,7 +595,7 @@ object Similarity {
       val seedPred =
         if (t == 0) s"vec_id < $kSql"
         else s"vec_id >= $t * $kSql AND vec_id < ${t + 1} * $kSql"
-      s"""${ivfCtesSeeded(kSql, iters, 64, p, seedPred)},
+      s"""${ivfCtesSeeded(iters, 64, p, seedPred)},
          |${p}probe AS (
          |  SELECT vec_id AS qid, cid FROM (
          |    SELECT vec_id, cid,
@@ -1090,7 +1070,7 @@ object Similarity {
       .withColumn("nb", sqrt(dot(col("vb"), col("vb"))))
     a.join(b, Seq("cid"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+      .withColumn("sim", cosine(col("va"), col("vb"), col("na"), col("nb")))
       .filter(G.simFilter(col("sim"), lit(tau)))
       .groupBy(col("id_b"), col("cid"))
       .agg(min(col("id_a")).as("kept_id"),
@@ -1443,46 +1423,62 @@ object Similarity {
     * for literal and derived k. */
   private def ivfRoundsSqlK(kSql: String, iters: Int, dims: Int): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |${ivfCtesK(kSql, iters, dims, "")}""".stripMargin
+       |${ivfCtesSeeded(iters, dims, "", s"vec_id < $kSql")}""".stripMargin
 
   /** CTE list (no WITH header, references a prior `e` CTE) with every CTE
     * name prefixed by `p` — so the composed IVF+PQ oracle (q_y17) can hold
     * both k-means chains in one WITH without name collisions. */
   private def ivfCtes(k: Int, iters: Int, dims: Int, p: String): String = {
     require(k > 0)
-    ivfCtesK(k.toString, iters, dims, p)
+    ivfCtesSeeded(iters, dims, p, s"vec_id < $k")
   }
 
-  private def ivfCtesK(k: String, iters: Int, dims: Int, p: String): String =
-    ivfCtesSeeded(k, iters, dims, p, s"vec_id < $k")
-
-  /** [[ivfCtesK]] with an explicit seed predicate — the per-table seeding
+  /** [[ivfCtes]] with an explicit seed predicate — the per-table seeding
     * of [[ivfNearDupsSql]] (table t seeds vec_ids [t·k, (t+1)·k)). */
-  private def ivfCtesSeeded(k: String, iters: Int, dims: Int, p: String,
-      seedPred: String): String = {
+  private def ivfCtesSeeded(iters: Int, dims: Int, p: String,
+      seedPred: String): String =
+    s"""${p}c0 AS (SELECT vec_id AS cid, v AS c FROM e WHERE $seedPred),
+       |${lloydCtes("e", "v", Nil, dims, iters, p)}""".stripMargin
+
+  /** The oracles' Lloyd rounds, the DuckDB twin of [[lloyd]] (CTE list,
+    * every name prefixed by `p`): from the seed codebook `c0`, round r
+    * pairs each `src` row's `v` (`dims` elements) with every centroid
+    * sharing its `keys` (the PQ subspace `m`; all centroids when empty)
+    * in `d<r>`, keeps the `row_number` argmin by (dist2, cid) in `a<r>`
+    * and — before a further round — recenters on the DECIMAL-exact
+    * per-dimension mean in `m<r>`/`c<r>`. */
+  private def lloydCtes(src: String, v: String, keys: Seq[String],
+      dims: Int, iters: Int, p: String): String = {
     require(iters > 0 && dims > 0)
-    def dist(r: Int): String =
+    def ks(t: String) = keys.map(k => s"$t$k, ").mkString
+    def dist(r: Int): String = {
+      val c = s"${p}c${r - 1}"
+      val pair =
+        if (keys.isEmpty) s"CROSS JOIN $c"
+        else s"JOIN $c ON " + keys.map(k => s"s.$k = $c.$k").mkString(" AND ")
       s"""${p}d$r AS (
-         |  SELECT e.vec_id, ${p}c${r - 1}.cid, e.v,
-         |    ${dist2Sql("e.v", s"${p}c${r - 1}.c", dims)} AS dist2
-         |  FROM e CROSS JOIN ${p}c${r - 1}),
-         |${p}a$r AS (SELECT vec_id, cid, v, dist2 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
+         |  SELECT s.vec_id, ${ks("s.")}$c.cid, s.$v,
+         |    ${dist2Sql(s"s.$v", s"$c.c", dims)} AS dist2
+         |  FROM $src s $pair),
+         |${p}a$r AS (SELECT vec_id, ${ks("")}cid, $v, dist2 FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY ${ks("")}vec_id
          |      ORDER BY dist2, cid) AS rn FROM ${p}d$r) t
          |  WHERE rn = 1)""".stripMargin
-    def recenter(r: Int): String =
+    }
+    def recenter(r: Int): String = {
+      val a = s"${p}a$r"
       s"""${p}m$r AS (
-         |  SELECT ${p}a$r.cid, dd.i AS dim,
-         |    CAST(CAST(SUM(CAST(${p}a$r.v[CAST(dd.i+1 AS INT)] AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
-         |      / COUNT(${p}a$r.v[CAST(dd.i+1 AS INT)]) AS m
-         |  FROM ${p}a$r CROSS JOIN (SELECT unnest(range(0, $dims)) AS i) dd
-         |  GROUP BY ${p}a$r.cid, dd.i),
-         |${p}c$r AS (SELECT cid, list(m ORDER BY dim) AS c FROM ${p}m$r GROUP BY cid)""".stripMargin
-    val rounds = (1 to iters).map { r =>
+         |  SELECT ${ks(s"$a.")}$a.cid, dd.i AS dim,
+         |    CAST(CAST(SUM(CAST($a.$v[CAST(dd.i+1 AS INT)] AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
+         |      / COUNT($a.$v[CAST(dd.i+1 AS INT)]) AS mean
+         |  FROM $a CROSS JOIN (SELECT unnest(range(0, $dims)) AS i) dd
+         |  GROUP BY ${ks(s"$a.")}$a.cid, dd.i),
+         |${p}c$r AS (SELECT ${ks("")}cid, list(mean ORDER BY dim) AS c
+         |  FROM ${p}m$r GROUP BY ${ks("")}cid)""".stripMargin
+    }
+    (1 to iters).map { r =>
       if (r < iters) dist(r) + ",\n" + recenter(r) else dist(r)
     }.mkString(",\n")
-    s"""${p}c0 AS (SELECT vec_id AS cid, v AS c FROM e WHERE $seedPred),
-       |$rounds""".stripMargin
   }
 
   /** Product-quantization subvector assignment: the shared k-means core of
@@ -1566,36 +1562,15 @@ object Similarity {
   /** Prefixed CTE-list form, mirroring [[ivfCtes]] — the `sub` subvector
     * frame is prefixed too. */
   private def pqCtes(m: Int, k: Int, iters: Int, p: String): String = {
-    require(m > 0 && 64 % m == 0 && k > 0 && iters > 0)
+    require(m > 0 && 64 % m == 0 && k > 0)
     val subDim = 64 / m
-    def dist(r: Int): String =
-      s"""${p}d$r AS (
-         |  SELECT s.vec_id, s.m, ${p}c${r - 1}.cid, s.sv,
-         |    ${dist2Sql("s.sv", s"${p}c${r - 1}.c", subDim)} AS dist2
-         |  FROM ${p}sub s JOIN ${p}c${r - 1} ON s.m = ${p}c${r - 1}.m),
-         |${p}a$r AS (SELECT vec_id, m, cid, sv, dist2 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
-         |      ORDER BY dist2, cid) AS rn FROM ${p}d$r) t
-         |  WHERE rn = 1)""".stripMargin
-    def recenter(r: Int): String =
-      s"""${p}m$r AS (
-         |  SELECT ${p}a$r.m, ${p}a$r.cid, dd.i AS dim,
-         |    CAST(CAST(SUM(CAST(${p}a$r.sv[CAST(dd.i+1 AS INT)] AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
-         |      / COUNT(${p}a$r.sv[CAST(dd.i+1 AS INT)]) AS mean
-         |  FROM ${p}a$r CROSS JOIN (SELECT unnest(range(0, $subDim)) AS i) dd
-         |  GROUP BY ${p}a$r.m, ${p}a$r.cid, dd.i),
-         |${p}c$r AS (SELECT m, cid, list(mean ORDER BY dim) AS c
-         |        FROM ${p}m$r GROUP BY m, cid)""".stripMargin
-    val rounds = (1 to iters).map { r =>
-      if (r < iters) dist(r) + ",\n" + recenter(r) else dist(r)
-    }.mkString(",\n")
     s"""${p}sub AS (
        |  SELECT e.vec_id, mm.m,
        |    list_transform(range(0, $subDim),
        |      i -> e.v[CAST(mm.m * $subDim + i + 1 AS INT)]) AS sv
        |  FROM e CROSS JOIN (SELECT unnest(range(0, $m)) AS m) mm),
        |${p}c0 AS (SELECT m, vec_id AS cid, sv AS c FROM ${p}sub WHERE vec_id < $k),
-       |$rounds""".stripMargin
+       |${lloydCtes(s"${p}sub", "sv", Seq("m"), subDim, iters, p)}""".stripMargin
   }
 
   def pqBuildSql(m: Int = 8, k: Int = 16, iters: Int = 2): String =
@@ -1632,17 +1607,9 @@ object Similarity {
     * embeddings are random so 0.35 yields a thin non-empty tail). */
   def embeddingNearDups(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir).filter(col("vec_id") < 300)
-    // numbered repartition of the streamed side (round-11, guide §2.6):
-    // the bounded window arrives as one scan split and the O(pairs) dot
-    // products serialize onto one task; width follows the session conf.
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"),
-      col("nrm").as("na")).repartition(parts)
-    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
-      col("nrm").as("nb"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+    Dedup.allPairs(e, "vec_id", Seq("v", "nrm"), ("id_a", "id_b"))
+      .withColumn("sim",
+        cosine(col("v_a"), col("v_b"), col("nrm_a"), col("nrm_b")))
       .filter(G.simFilter(col("sim"), lit(0.35)))
       .select(col("id_a"), col("id_b"), col("sim"))
       .orderBy(col("id_a"), col("id_b"))
@@ -1874,7 +1841,7 @@ object Similarity {
     * the inner own-join on both engines identically. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     val s = embeddings(spark, dir).filter(col("vec_id") < 500)
-    // numbered repartition of the streamed side — see embeddingNearDups
+    // numbered repartition of the streamed side — see Dedup.allPairs
     // (round-11): 250k pairwise dots otherwise run on one scan split
     val parts = spark.sessionState.conf.numShufflePartitions
     val a = s.select(col("vec_id").as("ida"), col("label").as("la"),
@@ -1883,7 +1850,7 @@ object Similarity {
       col("v").as("vb"), col("nrm").as("nrb"))
     val perLabel = a.crossJoin(b).filter(col("ida") =!= col("idb"))
       .withColumn("dist",
-        lit(1.0) - dot(col("va"), col("vb")) / (col("nra") * col("nrb")))
+        lit(1.0) - cosine(col("va"), col("vb"), col("nra"), col("nrb")))
       .groupBy(col("ida"), col("la"), col("lb"))
       .agg((G.dsum(col("dist"), 9) / count(lit(1))).as("mdist"))
     val own = perLabel.filter(col("la") === col("lb"))

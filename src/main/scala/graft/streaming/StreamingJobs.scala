@@ -201,12 +201,15 @@ object StreamingJobs {
 
   /** A parsed trade as window-aggregate input (ts, user_id, event_type,
     * value, k): the projection the stream and the fan-out's per-batch
-    * aggregate share. */
+    * aggregate share. A BID becomes event_type 'purchase', the event the
+    * shared aggregate counts as a bid (FIXTURES.md); every other side
+    * counts as an ask, as in the reference (`TradeAggregator.java`). */
   private def windowInput(parsed: DataFrame): DataFrame =
     parsed.select(
       timestamp_millis(col("source_ts")).as("ts"),
       col("market").as("user_id"),
-      col("ask_bid").as("event_type"),
+      when(col("ask_bid") === "BID", "purchase").otherwise(col("ask_bid"))
+        .as("event_type"),
       col("trade_price").as("value"),
       col("trade_volume").as("k"))
 
@@ -1504,14 +1507,17 @@ object StreamingJobs {
 
   /** DuckDB replay of [[fanOutReplay]]: the q_p1 parse SQL feeding the q_a1
     * window-aggregation SQL under the stream's column mapping (market →
-    * user_id, ask_bid → event_type, trade_price → value, trade_volume → k).
+    * user_id, ask_bid → event_type with BID as 'purchase', trade_price →
+    * value, trade_volume → k).
     * total_volume is DOUBLE (k rides the envelope as a decimal string) but
     * every k is integer-valued, so the plain double sum is order-exact. */
   val fanOutReplaySql: String = {
     val parsed = graft.operators.CdcParser.cdcParseBodySql
     s"""WITH parsed AS ($parsed),
        |ev AS (SELECT make_timestamp(source_ts * 1000) AS ts,
-       |              market AS user_id, ask_bid AS event_type,
+       |              market AS user_id,
+       |              CASE WHEN ask_bid = 'BID' THEN 'purchase' ELSE ask_bid END
+       |                AS event_type,
        |              trade_price AS value, trade_volume AS k
        |       FROM parsed)
        |SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start, user_id,

@@ -128,6 +128,35 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(noCap.count() == banded.count())
   }
 
+  test("bucketPairs: one row per shared bucket, a < b, hot buckets capped, payload rides") {
+    import spark.implicits._
+    // docs 1 and 2 collide in bands 0 and 1; docs 10..14 only in band 2's
+    // bucket 999, which holds 5 rows against a cap of 3
+    val banded = Seq(
+      (1L, 0, 7L, 101L), (2L, 0, 7L, 102L), (1L, 1, 8L, 101L), (2L, 1, 8L, 102L),
+      (3L, 0, 9L, 103L)) ++ (10L to 14L).map(id => (id, 2, 999L, 100L + id))
+    val pairs = Dedup.bucketPairs(banded.toDF("doc_id", "band", "bucket", "sig"),
+      Seq("band", "bucket"), Seq("sig"), cap = 3)
+    assert(pairs.columns.toSeq == Seq("doc_a", "sig_a", "doc_b", "sig_b"))
+    val rows = pairs.as[(Long, Long, Long, Long)].collect().toSeq
+    assert(rows == Seq.fill(2)((1L, 101L, 2L, 102L)))
+    assert(pairs.distinct().count() == 1)
+  }
+
+  test("allPairs: n(n-1)/2 ordered pairs, streamed side at the session width") {
+    import spark.implicits._
+    val df = (1L to 7L).map(id => (id, id * 10)).toDF("doc_id", "x")
+    val pairs = Dedup.allPairs(df, "doc_id", Seq("x"))
+    val rows = pairs.as[(Long, Long, Long, Long)].collect().toSeq
+    assert(rows.size == 7 * 6 / 2)
+    assert(rows.forall { case (a, xa, b, xb) => a < b && xa == a * 10 && xb == b * 10 })
+    assert(rows.map(r => (r._1, r._3)).distinct.size == rows.size)
+    val widths = pairs.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions
+    }
+    assert(widths == Seq(spark.sessionState.conf.numShufflePartitions))
+  }
+
   test("text quality scores are bounded and fingerprints discriminate") {
     val q = TextAnalysis.qualityScore(spark, sf()).collect()
     assert(q.forall { r =>

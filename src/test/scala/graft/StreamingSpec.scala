@@ -19,6 +19,15 @@ class StreamingSpec extends SparkSpec {
       mem.toDF().withColumnRenamed("value", "json"), col("json"))
   }
 
+  /** Parsed trades as A1 input under the FIXTURES.md mapping: a BID is
+    * the 'purchase' event the aggregate counts as a bid. */
+  private def windowInput(parsed: org.apache.spark.sql.DataFrame) =
+    parsed.select(timestamp_millis(col("source_ts")).as("ts"),
+      col("market").as("user_id"),
+      when(col("ask_bid") === "BID", "purchase").otherwise(col("ask_bid"))
+        .as("event_type"),
+      col("trade_price").as("value"), col("trade_volume").as("k"))
+
   test("streaming window agg == batch window agg (complete mode)") {
     val trades = Synthetic.trades(300)
     val jsons = trades.map(t => Synthetic.envelopeJson(t))
@@ -29,11 +38,8 @@ class StreamingSpec extends SparkSpec {
     try { q.processAllAvailable() } finally q.stop()
     val streaming = spark.table("agg_out")
       .orderBy(col("window_start"), col("user_id")).collect().toSeq
-    val batch = TradeAggregates.windowAggOn(
-      graft.operators.CdcParser.parseEnvelope(jsons.toDF("json"), col("json"))
-        .select(timestamp_millis(col("source_ts")).as("ts"),
-          col("market").as("user_id"), col("ask_bid").as("event_type"),
-          col("trade_price").as("value"), col("trade_volume").as("k")))
+    val batch = TradeAggregates.windowAggOn(windowInput(
+      graft.operators.CdcParser.parseEnvelope(jsons.toDF("json"), col("json"))))
       .orderBy(col("window_start"), col("user_id")).collect().toSeq
     assert(streaming.nonEmpty)
     assert(streaming == batch)
@@ -165,16 +171,25 @@ class StreamingSpec extends SparkSpec {
     // parse → foreachBatch fan-out → agg sink must reproduce the batch
     // aggregation over the identical events-derived CDC input, row for row
     val streamed = StreamingJobs.fanOutReplay(spark, sf()).collect().toSeq
-    val batch = TradeAggregates.windowAggOn(
-      graft.operators.CdcParser.cdcParseRoundtrip(spark, sf())
-        .select(timestamp_millis(col("source_ts")).as("ts"),
-          col("market").as("user_id"), col("ask_bid").as("event_type"),
-          col("trade_price").as("value"), col("trade_volume").as("k")))
+    val batch = TradeAggregates.windowAggOn(windowInput(
+      graft.operators.CdcParser.cdcParseRoundtrip(spark, sf())))
       .withColumn("window_start", col("window_start")
         .cast(org.apache.spark.sql.types.TimestampNTZType))
       .orderBy(col("window_start"), col("user_id")).collect().toSeq
     assert(streamed.nonEmpty)
     assert(streamed == batch)
+  }
+
+  test("fan-out agg sink counts every parsed BID as a bid and the rest as asks") {
+    val agg = StreamingJobs.fanOutReplay(spark, sf())
+      .agg(sum(col("bid_count")), sum(col("ask_count")), sum(col("trade_count")))
+      .head()
+    val parsed = graft.operators.CdcParser.cdcParseRoundtrip(spark, sf())
+    val bids = parsed.filter(col("ask_bid") === "BID").count()
+    assert(bids > 0)
+    assert(agg.getLong(0) == bids)
+    assert(agg.getLong(1) == parsed.count() - bids)
+    assert(agg.getLong(2) == parsed.count())
   }
 
   test("parquetReplay reads its sink back with the stream's schema and no " +

@@ -2,6 +2,7 @@
 """Local stand-in for the driver's DuckDB-oracle compare.
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [only_query ...]
+       python3 tools/compare.py --dumps <verifyOutA> <verifyOutB> [only_query ...]
 
 Registers each <sfDir>/<table>.parquet as a DuckDB view, runs every query in
 <verifyOutDir>/oracle_sql.json, and compares against the Spark parquet dump in
@@ -14,6 +15,11 @@ bare integer SUM, which pandas renders as float64 (`498223.0`) while Spark's
 parquet column stays int64 (`498223`) — fetchall kept Python ints and masked
 exactly that mismatch in round 1 (q_a1). Pandas row-sorting also raises
 `unhashable type` on array columns, mirroring the driver's q_m2 failure mode.
+
+`--dumps` compares two Verify output dirs (say, a change against its parent)
+query by query, with no oracle: each query dumped in either dir must be in
+both, with the same ordered (column, type) schema and the same row multiset.
+This also covers the rows-only queries, which have no oracle SQL.
 """
 import sys, json, glob, math
 
@@ -140,5 +146,44 @@ def main(sf_dir, out_dir, only=()):
     return 1 if n_fail else 0
 
 
+def compare_dumps(dir_a, dir_b, only=()):
+    import os
+    con = duckdb.connect()
+    names = sorted({n for d in (dir_a, dir_b) for n in os.listdir(d)
+                    if os.path.isdir(f"{d}/{n}")})
+    n_pass = n_fail = 0
+    for name in names:
+        if only and name not in only:
+            continue
+        files = [glob.glob(f"{d}/{name}/*.parquet") for d in (dir_a, dir_b)]
+        if not all(files):
+            print(f"FAIL {name}: dumped in one dir only")
+            n_fail += 1
+            continue
+        ra, rb = (con.sql(f"SELECT * FROM read_parquet({f!r})") for f in files)
+        sa, sb = (list(zip(r.columns, map(str, r.types))) for r in (ra, rb))
+        if sa != sb:
+            print(f"FAIL {name}: schema {sa} vs {sb}")
+            n_fail += 1
+            continue
+        try:
+            a, b = norm(ra.df()), norm(rb.df())
+        except Exception as e:
+            print(f"FAIL {name}: sort error: {e}")
+            n_fail += 1
+            continue
+        if a != b:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            print(f"FAIL {name}: rows {len(a)} vs {len(b)}, first diffs: {diffs}")
+            n_fail += 1
+            continue
+        print(f"PASS {name} ({len(a)} rows)")
+        n_pass += 1
+    print(f"== {n_pass} pass / {n_fail} fail")
+    return 1 if n_fail else 0
+
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--dumps":
+        sys.exit(compare_dumps(sys.argv[2], sys.argv[3], sys.argv[4:]))
     sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3:]))
