@@ -207,8 +207,7 @@ object Tables {
     * returned frame stays valid for the driver's later read. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val base =
-      java.nio.file.Files.createTempDirectory(s"graft_st6_$tag").toString
+    val base = Scratch.dir(s"graft_st6_$tag")
     val li = G.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
     val ord = G.table(spark, dir, "orders")

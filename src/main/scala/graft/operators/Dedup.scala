@@ -609,10 +609,11 @@ object Dedup {
     val delta = dropFirst.union(dropLast).union(novel)
 
     // yesterday's job: build + persist the band index (no payload)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x15_idx").toString
-    bandRows(minhashPolyStage(base))
-      .write.mode("overwrite").parquet(s"$tmp/index")
-    val index = spark.read.parquet(s"$tmp/index")
+    val tmp = graft.Scratch.dir("graft_x15_idx")
+    val baseRows = bandRows(minhashPolyStage(base))
+    baseRows.write.mode("overwrite").parquet(s"$tmp/index")
+    // read back with the written frame's schema: no inference job
+    val index = spark.read.schema(baseRows.schema).parquet(s"$tmp/index")
 
     // today's job: sign the DELTA only, probe the stored index
     val deltaStage = minhashPolyStage(delta).cache()

@@ -34,7 +34,7 @@ object Formats {
   def roundTrip(spark: SparkSession, dir: String): DataFrame = {
     val orders = G.table(spark, dir, "orders")
     val schema = orders.schema
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fmt")
+    val tmp = graft.Scratch.dir("graft_fmt")
 
     orders.write.mode("overwrite")
       .option("header", "true").option("timestampFormat", TsFmt)

@@ -4,6 +4,7 @@ package graft.streaming
 import graft.model.{AnomalyAlert, DetectorState}
 import graft.operators.{AnomalyDetection, CdcParser, TradeAggregates}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -14,7 +15,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   * Shape: CDC-envelope JSON stream → parse (P1) → foreachBatch fan-out to
   * three sinks (raw / windowed agg / alerts) — the read-once multi-sink DAG
   * (`docs/04-flink-streaming.md:23-41`): the micro-batch is persisted once
-  * and written three times, exactly Flink's one-source-three-sinks topology.
+  * and written to its three sinks concurrently, as Flink's
+  * one-source-three-sinks topology runs its sinks side by side.
   *
   * Deviations from the reference, by design (SURVEY §7.4):
   *  - event time + watermark instead of processing-time windows (W1/W2):
@@ -36,26 +38,6 @@ object StreamingJobs {
     * the round-7 streaming block (102 s of a 318 s bench). 8 covers every
     * replay's key space with headroom (r11 measured it against 4 and 32). */
   @volatile private[graft] var replayShufflePartitions: String = "8"
-
-  /** Per-call scratch dirs (sink, checkpoint, state) under java.io.tmpdir,
-    * swept in one JVM-exit hook (File.deleteOnExit can't remove non-empty
-    * trees). Round 12 measured /dev/shm against /tmp for them: within
-    * noise on every replay, because the commit path's cost was Hadoop
-    * forking `chmod`/`readlink` per file, not the device (`graft.LocalFs`
-    * removes the forks). */
-  private val scratchDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(
-      () => scratchDirs.forEach(graft.SessionMemo.deleteTree(_)),
-      "graft-replay-scratch-cleanup"))
-  }
-
-  private def replayTmp(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix).toString
-    scratchDirs.add(p)
-    p
-  }
 
   private val startLock = new Object
 
@@ -104,7 +86,7 @@ object StreamingJobs {
     * "Unable to infer schema" on a sink without data files). */
   private[graft] def parquetReplay(spark: SparkSession, prefix: String,
       df: Dataset[_]): DataFrame = {
-    val tmp = replayTmp(prefix)
+    val tmp = graft.Scratch.dir(prefix)
     drainToParquet(df, s"$tmp/out", s"$tmp/ck")
     spark.read.schema(df.schema).parquet(s"$tmp/out")
   }
@@ -314,7 +296,7 @@ object StreamingJobs {
     * relies on AvailableNow's clean replay; a production deployment
     * idempotizes the sink with the batch id. */
   def ivmJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_ivm")
+    val tmp = graft.Scratch.dir("graft_stream_ivm")
     val out = s"$tmp/out"
     val stateA = s"$tmp/bids"; val stateB = s"$tmp/asks"
     val in = stagedEnvelopeWithSentinel(spark, dir, sentinels = 1, parts = 3)
@@ -503,12 +485,20 @@ object StreamingJobs {
   }
 
   /** T1: read-once fan-out — one foreachBatch persists the micro-batch and
-    * writes raw rows (K1), window aggregates (K2) and alerts (K3).
+    * appends raw rows (K1), window aggregates (K2) and alerts (K3) to their
+    * sinks concurrently ([[appendAll]]).
     * Aggregations inside foreachBatch are per-batch (complete recompute of
     * the batch's windows) — cross-batch window state belongs to the
     * dedicated `windowAggStream` query; this sink mirrors the reference's
     * three JDBC sinks batching 200 rows / 3 s (`ClickHouseSinks.java:19-21`)
-    * via the trigger interval. */
+    * via the trigger interval.
+    *
+    * A small trigger's floor is its fixed per-task and per-write cost, not
+    * its rows. So the batch is first coalesced to its byte width
+    * ([[sizedByBytes]]): a live or catch-up batch becomes one
+    * partition, raw and alerts write one task each, and the window
+    * aggregate needs no exchange (one partition already satisfies its
+    * distribution). */
   def fanOut(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
@@ -517,15 +507,69 @@ object StreamingJobs {
     val w = parsed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          fanOutSinks.foreach { case (sink, rows) =>
-            rows(batch).write.mode("append").parquet(s"$outDir/$sink")
-          }
-        } finally batch.unpersist()
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val sized = sizedByBytes(batch).persist()
+        try appendAll(sized.sparkSession, fanOutSinks.toSeq.map {
+          case (sink, rows) =>
+            () => rows(sized).write.mode("append").parquet(s"$outDir/$sink")
+        })
+        finally sized.unpersist()
       }
     startReplay(spark, w)
+  }
+
+  /** `batch` coalesced to [[fanOutWidth]] of its estimated size. The
+    * estimate is the optimizer's: a foreachBatch frame is a LogicalRDD that
+    * carries its source plan's statistics, so no job runs. The file
+    * source's admission limit (`maxFilesPerTrigger`) is what bounds a
+    * batch's bytes, and a batch of many MB keeps its width, because
+    * coalesce never adds partitions. */
+  private[graft] def sizedByBytes(batch: DataFrame): DataFrame =
+    fanOutWidth(batch.sparkSession.sessionState.conf,
+        batch.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .fold(batch)(batch.coalesce)
+
+  /** Partitions for a batch estimated at `bytes`: one per
+    * `spark.sql.files.openCostInBytes` (the size Spark already deems worth
+    * a split of its own), at least 1. None for an unknown estimate, which
+    * Spark reports as `spark.sql.defaultSizeInBytes` (a source without
+    * statistics). */
+  private[graft] def fanOutWidth(conf: org.apache.spark.sql.internal.SQLConf,
+      bytes: BigInt): Option[Int] =
+    if (bytes >= conf.defaultSizeInBytes) None
+    else {
+      val open = conf.filesOpenCostInBytes
+      Some(((bytes + open - 1) / open).max(1).min(Int.MaxValue).toInt)
+    }
+
+  /** Daemon threads for [[appendAll]]. The appends never wait on one
+    * another, so a fixed pool cannot deadlock: concurrent fan-outs queue. */
+  private lazy val appendPool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(fanOutSinks.size,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-fanout-append-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+
+  /** Run `appends` concurrently, each under the calling thread's active
+    * session and local properties: the stream's job group (so the query's
+    * `stop()` cancels them), its query and batch ids and the root execution
+    * id. Returns only once every append has ended, then rethrows the first
+    * failure's cause. Only for appends that are independent: one that reads
+    * another's output (the ivm replay's state) must stay sequential. */
+  private def appendAll(spark: SparkSession, appends: Seq[() => Unit]): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    appends
+      .map(a => SQLExecution.withThreadLocalCaptured(session, appendPool)(a()))
+      .flatMap(f => scala.util.Try(f.join()).failed.toOption)
+      .headOption.foreach {
+        case e: java.util.concurrent.CompletionException if e.getCause != null =>
+          throw e.getCause
+        case e => throw e
+      }
   }
 
   /** The fan-out's sinks and the rows each takes from a micro-batch: K1 raw
@@ -570,7 +614,7 @@ object StreamingJobs {
     * covered by StreamingSpec's watermarked queries). */
   private def runFanOutReplay(spark: SparkSession, dir: String)
       : (String, String) = {
-    val tmp = replayTmp("graft_stream_a1")
+    val tmp = graft.Scratch.dir("graft_stream_a1")
     val out = s"$tmp/out"
     val in = stagedEnvelopePlain(spark, dir)
     drain(fanOut(spark, in, out, s"$tmp/ck", Trigger.AvailableNow(),
@@ -839,7 +883,7 @@ object StreamingJobs {
       slice: DataFrame => DataFrame,
       merge: (DataFrame, DataFrame) => DataFrame,
       fixtureTag: String): DataFrame = {
-    val tmp = replayTmp(s"graft_stream_$statePrefix")
+    val tmp = graft.Scratch.dir(s"graft_stream_$statePrefix")
     val st = s"$tmp/state"; val pre = s"${statePrefix}_"
     new java.io.File(st).mkdirs()
     // input fixture memoized per (session, tag); ck/state stay per-call
@@ -1104,7 +1148,7 @@ object StreamingJobs {
     * on every executor loss and every planned restart; the fixture makes
     * it a deterministic two-phase replay. */
   def resumeReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_resume")
+    val tmp = graft.Scratch.dir("graft_stream_resume")
     val in = s"$tmp/in"
     val out = s"$tmp/out"; val ck = s"$tmp/ck"
     // the staged fixture is shared/memoized — COPY files into the
@@ -1601,7 +1645,7 @@ object StreamingJobs {
     * (5 micro-batches) and return closed ∪ open — checked against the
     * batch q_p8 oracle ([[graft.operators.CdcParser.scd2HistorySql]]). */
   def scd2Replay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_scd2")
+    val tmp = graft.Scratch.dir("graft_stream_scd2")
     val state = s"$tmp/state"; val closed = s"$tmp/closed"
     val in = stage(spark, s"$dir#scd2", stamp = true)(
       graft.operators.CdcParser.eventsAsEnvelopeJsonTs(spark, dir)
@@ -1647,7 +1691,7 @@ object StreamingJobs {
     * key ranges (here the whole small snapshot rewrites per batch). */
   def mergeReplay(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Relational
-    val tmp = replayTmp("graft_stream_m")
+    val tmp = graft.Scratch.dir("graft_stream_m")
     val st = s"$tmp/state"
     new java.io.File(st).mkdirs()
     val delta = Relational.mergeDelta(spark, dir)
@@ -1697,7 +1741,7 @@ object StreamingJobs {
     * is injective, so stringified NDV == value NDV); the state never
     * crosses engines — only final counts reach the oracle. */
   def profileReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = replayTmp("graft_stream_v1")
+    val tmp = graft.Scratch.dir("graft_stream_v1")
     val st = s"$tmp/state"
     new java.io.File(st).mkdirs()
     val ev = graft.G.events(spark, dir)
@@ -1788,7 +1832,7 @@ object StreamingJobs {
   def heavyHitterReplay(spark: SparkSession, dir: String,
       capacity: Int = 256, k: Int = 50): DataFrame = {
     import graft.functions.SpaceSaving
-    val tmp = replayTmp("graft_stream_hh")
+    val tmp = graft.Scratch.dir("graft_stream_hh")
     val st = s"$tmp/state"
     new java.io.File(st).mkdirs()
     val in = stage(spark, s"$dir#hh", stamp = true)(

@@ -151,6 +151,29 @@ object SessionMemo {
   }
 }
 
+/** Per-call scratch dirs under java.io.tmpdir (replay sinks and
+  * checkpoints, x15's band index, the format round trip, st6's bucketed
+  * tables): every call gets a fresh dir, because the frame a query returns
+  * may still read it, and one JVM-exit hook sweeps them all
+  * (File.deleteOnExit can't remove non-empty trees). Round 12 measured
+  * /dev/shm against /tmp for the replay dirs: within noise on every
+  * replay, because the commit path's cost was Hadoop forking
+  * `chmod`/`readlink` per file, not the device (`graft.LocalFs` removes
+  * the forks). */
+object Scratch {
+  private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(
+      () => dirs.forEach(SessionMemo.deleteTree(_)), "graft-scratch-cleanup"))
+  }
+
+  def dir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    dirs.add(p)
+    p
+  }
+}
+
 /** One per-snapshot artifact: a frame derived deterministically from a
   * data directory (the near-dup pair list, the co-purchase edges, the
   * suffix ranks, …), built once per snapshot and shared by every consumer.

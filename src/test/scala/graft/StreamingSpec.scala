@@ -441,6 +441,129 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/alerts").count() > 0)
   }
 
+  /** `n` trades as envelope files `part-0.json` … in a fresh dir, `per`
+    * envelopes per file. */
+  private def envelopeFiles(n: Int, per: Int): String = {
+    val in = Files.createTempDirectory("graft_fo_in")
+    Synthetic.trades(n).map(t => Synthetic.envelopeJson(t)).grouped(per)
+      .zipWithIndex.foreach { case (js, i) =>
+        Files.write(in.resolve(s"part-$i.json"), js.mkString("\n").getBytes)
+      }
+    in.toString
+  }
+
+  private def partFiles(dir: String): Int =
+    new java.io.File(dir).list().count(_.startsWith("part-"))
+
+  test("fanOut writes a small batch as one partition: one part file per " +
+      "sink and no exchange in the agg append") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val in = envelopeFiles(300, 100)
+    val out = Files.createTempDirectory("graft_fo_out").toString
+    val ckpt = Files.createTempDirectory("graft_fo_ck").toString
+    // an AQE plan hides its stages from a bare collect: descend explicitly
+    def exchanges(p: SparkPlan): Int = p.collectWithSubqueries {
+      case _: Exchange => 1
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case s: QueryStageExec => exchanges(s.plan)
+    }.sum
+    val aggPlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.exists {
+          case c: InsertIntoHadoopFsRelationCommand =>
+            c.outputPath.getName == "agg"
+          case _ => false
+        }) { aggPlans.add(qe.executedPlan); () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // the stream's session clone copies the listener manager at start
+    spark.listenerManager.register(listener)
+    try {
+      val q = StreamingJobs.fanOut(spark, in, out, ckpt,
+        trigger = Trigger.AvailableNow(), maxFilesPerTrigger = 3)
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1,
+        "the three files did not drain in one batch")
+      // listener callbacks land asynchronously
+      val deadline = System.nanoTime() + 30000000000L
+      while (aggPlans.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    Seq("raw", "agg", "alerts").foreach(sink =>
+      assert(partFiles(s"$out/$sink") == 1, s"$sink: one part file per batch"))
+    assert(spark.read.parquet(s"$out/raw").count() == 300)
+    assert(aggPlans.size == 1)
+    assert(exchanges(aggPlans.peek()) == 0,
+      s"the agg append shuffled:\n${aggPlans.peek()}")
+  }
+
+  test("fanOut appends its sinks concurrently: a failing agg append fails " +
+      "the query only after raw and alerts commit, with no job left running") {
+    val in = envelopeFiles(100, 100)
+    val out = Files.createTempDirectory("graft_fo_out").toString
+    val ckpt = Files.createTempDirectory("graft_fo_ck").toString
+    // the agg sink's path is a regular file, so its append cannot commit
+    Files.write(java.nio.file.Paths.get(out, "agg"), "x".getBytes)
+    val q = StreamingJobs.fanOut(spark, in, out, ckpt,
+      trigger = Trigger.AvailableNow())
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.awaitTermination(120000))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(chain.exists(_.contains(s"$out/agg")),
+      s"not the agg append's error: ${chain.mkString(" <- ")}")
+    val parsed = graft.operators.CdcParser.parse(
+      spark.read.text(in).withColumnRenamed("value", "json"), col("json"))
+    assert(spark.read.parquet(s"$out/raw").count() == 100)
+    val alerts = parsed.filter(col("op") === "c" &&
+      col("trade_price") * col("trade_volume") >= 3000.0).count()
+    assert(alerts > 0)
+    assert(spark.read.parquet(s"$out/alerts").count() == alerts)
+    // the status store lags the scheduler: once a later job's end is
+    // recorded, every job that ended before it is recorded too
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-test-fence", "fence")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30000000000L
+    def fenceDone = sc.statusTracker.getJobIdsForGroup("graft-test-fence")
+      .flatMap(sc.statusTracker.getJobInfo)
+      .exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED)
+    while (!fenceDone && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(fenceDone)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "an append was still running after the query terminated")
+  }
+
+  test("fan-out width rule: one partition per openCostInBytes, at least " +
+      "one; an unknown size estimate leaves the batch unchanged") {
+    val conf = spark.sessionState.conf
+    val open = conf.filesOpenCostInBytes
+    assert(StreamingJobs.fanOutWidth(conf, 0) == Some(1))
+    assert(StreamingJobs.fanOutWidth(conf, open) == Some(1))
+    assert(StreamingJobs.fanOutWidth(conf, open + 1) == Some(2))
+    assert(StreamingJobs.fanOutWidth(conf, conf.defaultSizeInBytes).isEmpty)
+    // an RDD-backed frame reports no statistics: Spark's default size
+    val rows = spark.sparkContext.parallelize(
+      Seq(org.apache.spark.sql.Row(1L), org.apache.spark.sql.Row(2L)), 3)
+    val unknown = spark.createDataFrame(rows,
+      org.apache.spark.sql.types.StructType.fromDDL("id LONG"))
+    assert(unknown.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(conf.defaultSizeInBytes))
+    assert(StreamingJobs.sizedByBytes(unknown) eq unknown)
+    val small = spark.range(0, 100, 1, 3).toDF()
+    assert(StreamingJobs.sizedByBytes(small).rdd.getNumPartitions == 1)
+  }
+
   test("partitioned table writer: layout + pruning (ST1/ST2/ST4)") {
     val dir = Files.createTempDirectory("graft_tbl").toString
     val df = G.events(spark, sf())
