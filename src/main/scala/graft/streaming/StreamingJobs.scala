@@ -525,33 +525,30 @@ object StreamingJobs {
     * batch's bytes, and a batch of many MB keeps its width, because
     * coalesce never adds partitions. */
   private[graft] def sizedByBytes(batch: DataFrame): DataFrame =
-    fanOutWidth(batch.sparkSession.sessionState.conf,
-        batch.queryExecution.optimizedPlan.stats.sizeInBytes)
-      .fold(batch)(batch.coalesce)
+    batch.coalesce(fanOutWidth(batch.sparkSession.sessionState.conf,
+      batch.queryExecution.optimizedPlan.stats.sizeInBytes))
 
   /** Partitions for a batch estimated at `bytes`: one per
     * `spark.sql.files.openCostInBytes` (the size Spark already deems worth
-    * a split of its own), at least 1. None for an unknown estimate, which
-    * Spark reports as `spark.sql.defaultSizeInBytes` (a source without
-    * statistics). */
+    * a split of its own), at least 1. An unknown estimate (Spark's
+    * `spark.sql.defaultSizeInBytes`) clamps to `Int.MaxValue`, which
+    * coalesce reads as the batch's own width. */
   private[graft] def fanOutWidth(conf: org.apache.spark.sql.internal.SQLConf,
-      bytes: BigInt): Option[Int] =
-    if (bytes >= conf.defaultSizeInBytes) None
-    else {
-      val open = conf.filesOpenCostInBytes
-      Some(((bytes + open - 1) / open).max(1).min(Int.MaxValue).toInt)
-    }
+      bytes: BigInt): Int = {
+    val open = conf.filesOpenCostInBytes
+    ((bytes + open - 1) / open).max(1).min(Int.MaxValue).toInt
+  }
 
-  /** Daemon threads for [[appendAll]]. The appends never wait on one
-    * another, so a fixed pool cannot deadlock: concurrent fan-outs queue. */
+  /** Daemon threads for [[appendAll]], one per running append: concurrent
+    * fan-outs (Verify starts replays from a worker pool) never queue behind
+    * one another's appends. */
   private lazy val appendPool = {
     val n = new java.util.concurrent.atomic.AtomicInteger
-    java.util.concurrent.Executors.newFixedThreadPool(fanOutSinks.size,
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-fanout-append-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      })
+    java.util.concurrent.Executors.newCachedThreadPool((r: Runnable) => {
+      val t = new Thread(r, s"graft-fanout-append-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
   }
 
   /** Run `appends` concurrently, each under the calling thread's active
@@ -559,12 +556,32 @@ object StreamingJobs {
     * `stop()` cancels them), its query and batch ids and the root execution
     * id. Returns only once every append has ended, then rethrows the first
     * failure's cause. Only for appends that are independent: one that reads
-    * another's output (the ivm replay's state) must stay sequential. */
+    * another's output (the ivm replay's state) must stay sequential.
+    *
+    * `stop()` cancels the job group once and then interrupts this thread.
+    * An append still planning its write submits the job after that cancel,
+    * so on the interrupt the group is cancelled again until every append
+    * has ended, and the interrupt is rethrown. */
   private def appendAll(spark: SparkSession, appends: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{CompletableFuture, ExecutionException, TimeUnit}
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    appends
-      .map(a => SQLExecution.withThreadLocalCaptured(session, appendPool)(a()))
-      .flatMap(f => scala.util.Try(f.join()).failed.toOption)
+    val runs = appends.map(a =>
+      SQLExecution.withThreadLocalCaptured(session, appendPool)(a()))
+    val all = CompletableFuture.allOf(runs: _*)
+    try all.get()
+    catch {
+      case _: ExecutionException => ()
+      case stop: InterruptedException =>
+        val sc = session.sparkContext
+        val group = Option(sc.getLocalProperty("spark.jobGroup.id"))
+        while (!all.isDone) {
+          group.foreach(sc.cancelJobGroup)
+          try all.get(50, TimeUnit.MILLISECONDS)
+          catch { case _: Exception => () }
+        }
+        throw stop
+    }
+    runs.flatMap(f => scala.util.Try(f.join()).failed.toOption)
       .headOption.foreach {
         case e: java.util.concurrent.CompletionException if e.getCause != null =>
           throw e.getCause

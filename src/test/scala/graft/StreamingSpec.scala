@@ -506,8 +506,100 @@ class StreamingSpec extends SparkSpec {
       s"the agg append shuffled:\n${aggPlans.peek()}")
   }
 
-  test("fanOut appends its sinks concurrently: a failing agg append fails " +
-      "the query only after raw and alerts commit, with no job left running") {
+  /** Asserts that no job of this context is still running. The status
+    * store lags the scheduler: once a later job's end is recorded, every
+    * job that ended before it is recorded too. */
+  private def assertNoJobRunning(clue: String): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-test-fence", "fence")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30000000000L
+    def fenceDone = sc.statusTracker.getJobIdsForGroup("graft-test-fence")
+      .flatMap(sc.statusTracker.getJobInfo)
+      .exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED)
+    while (!fenceDone && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(fenceDone)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, clue)
+  }
+
+  /** A listener that records, per fan-out sink under `out`, the start and
+    * end ms of its append's SQL execution. */
+  private class AppendTimes(out: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+    private val sink = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    private val start = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    private val end = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    @volatile var onStart: String => Unit = _ => ()
+    override def onOtherEvent(
+        e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        Seq("raw", "agg", "alerts")
+          .find(k => s.physicalPlanDescription.contains(s"$out/$k"))
+          .foreach { k =>
+            sink.put(s.executionId, k)
+            start.put(s.executionId, s.time)
+            onStart(k)
+          }
+      case s: SparkListenerSQLExecutionEnd => end.put(s.executionId, s.time)
+      case _ => ()
+    }
+    /** sink -> (start, end) of its ended appends. */
+    def intervals: Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      sink.asScala.toMap.collect {
+        case (x, k) if end.containsKey(x) => k -> (start.get(x), end.get(x))
+      }
+    }
+  }
+
+  test("fanOut's raw, agg and alerts appends overlap in time") {
+    val in = envelopeFiles(300, 100)
+    val out = Files.createTempDirectory("graft_fo_out").toString
+    val ckpt = Files.createTempDirectory("graft_fo_ck").toString
+    val times = new AppendTimes(out)
+    spark.sparkContext.addSparkListener(times)
+    val spans = try {
+      val q = StreamingJobs.fanOut(spark, in, out, ckpt,
+        trigger = Trigger.AvailableNow(), maxFilesPerTrigger = 3)
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty)
+      // listener events land asynchronously
+      val deadline = System.nanoTime() + 30000000000L
+      while (times.intervals.size < 3 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      times.intervals
+    } finally spark.sparkContext.removeSparkListener(times)
+    assert(spans.keySet == Set("raw", "agg", "alerts"), spans)
+    // appends run one after another never share an instant
+    val lastStart = spans.values.map(_._1).max
+    val firstEnd = spans.values.map(_._2).min
+    assert(lastStart < firstEnd, s"the appends did not overlap: $spans")
+  }
+
+  test("fanOut's stop() during its appends ends the query cleanly with no " +
+      "job left running") {
+    val in = envelopeFiles(3000, 1000)
+    val out = Files.createTempDirectory("graft_fo_out").toString
+    val ckpt = Files.createTempDirectory("graft_fo_ck").toString
+    val appending = new java.util.concurrent.CountDownLatch(1)
+    val times = new AppendTimes(out)
+    times.onStart = _ => appending.countDown()
+    spark.sparkContext.addSparkListener(times)
+    try {
+      val q = StreamingJobs.fanOut(spark, in, out, ckpt,
+        trigger = Trigger.ProcessingTime("1 second"), maxFilesPerTrigger = 1)
+      assert(appending.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      q.stop()
+      assert(!q.isActive)
+      assert(q.exception.isEmpty, q.exception)
+    } finally spark.sparkContext.removeSparkListener(times)
+    assertNoJobRunning("an append was still running after stop()")
+  }
+
+  test("fanOut fails a failing agg append only after raw and alerts " +
+      "commit, with no job left running") {
     val in = envelopeFiles(100, 100)
     val out = Files.createTempDirectory("graft_fo_out").toString
     val ckpt = Files.createTempDirectory("graft_fo_ck").toString
@@ -528,30 +620,18 @@ class StreamingSpec extends SparkSpec {
       col("trade_price") * col("trade_volume") >= 3000.0).count()
     assert(alerts > 0)
     assert(spark.read.parquet(s"$out/alerts").count() == alerts)
-    // the status store lags the scheduler: once a later job's end is
-    // recorded, every job that ended before it is recorded too
-    val sc = spark.sparkContext
-    sc.setJobGroup("graft-test-fence", "fence")
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30000000000L
-    def fenceDone = sc.statusTracker.getJobIdsForGroup("graft-test-fence")
-      .flatMap(sc.statusTracker.getJobInfo)
-      .exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED)
-    while (!fenceDone && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(fenceDone)
-    assert(sc.statusTracker.getActiveJobIds.isEmpty,
-      "an append was still running after the query terminated")
+    assertNoJobRunning("an append was still running after the query terminated")
   }
 
   test("fan-out width rule: one partition per openCostInBytes, at least " +
       "one; an unknown size estimate leaves the batch unchanged") {
     val conf = spark.sessionState.conf
     val open = conf.filesOpenCostInBytes
-    assert(StreamingJobs.fanOutWidth(conf, 0) == Some(1))
-    assert(StreamingJobs.fanOutWidth(conf, open) == Some(1))
-    assert(StreamingJobs.fanOutWidth(conf, open + 1) == Some(2))
-    assert(StreamingJobs.fanOutWidth(conf, conf.defaultSizeInBytes).isEmpty)
+    assert(StreamingJobs.fanOutWidth(conf, 0) == 1)
+    assert(StreamingJobs.fanOutWidth(conf, open) == 1)
+    assert(StreamingJobs.fanOutWidth(conf, open + 1) == 2)
+    assert(StreamingJobs.fanOutWidth(conf, conf.defaultSizeInBytes) ==
+      Int.MaxValue)
     // an RDD-backed frame reports no statistics: Spark's default size
     val rows = spark.sparkContext.parallelize(
       Seq(org.apache.spark.sql.Row(1L), org.apache.spark.sql.Row(2L)), 3)
@@ -559,7 +639,7 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType.fromDDL("id LONG"))
     assert(unknown.queryExecution.optimizedPlan.stats.sizeInBytes ==
       BigInt(conf.defaultSizeInBytes))
-    assert(StreamingJobs.sizedByBytes(unknown) eq unknown)
+    assert(StreamingJobs.sizedByBytes(unknown).rdd.getNumPartitions == 3)
     val small = spark.range(0, 100, 1, 3).toDF()
     assert(StreamingJobs.sizedByBytes(small).rdd.getNumPartitions == 1)
   }

@@ -3,7 +3,7 @@
 
 Usage:
 
-    python3 tools/trigger_ledger.py EVENT_LOG [--live-rows N] [--no-sql]
+    python3 tools/trigger_ledger.py EVENT_LOG
 
 Prints one line per streaming trigger, keyed by (query id, batch id): the
 jobs and tasks it ran, the tasks' executor-deserialize and run ms, the
@@ -11,10 +11,10 @@ shuffle bytes (read + written), its input rows and, from the query's
 progress event, its triggerExecution and addBatch ms. Each query is named by
 its sink (a `foreachBatch` query is a ForeachBatchSink, a file sink names its
 path). Per query it then prints the medians over the triggers whose input
-holds 1..N rows (N = --live-rows, default 1000: the live triggers of a run
-whose catch-up triggers read more).
+holds 1..LIVE_ROWS rows: the live triggers of a run whose catch-up triggers
+read more.
 
-Then, unless --no-sql, one line per SQL execution: the ms from its start to
+Then one line per SQL execution: the ms from its start to
 its first job's submission (pre-job), from there to its last job's end
 (job), and from there to its end (post-job), with the trigger its jobs ran
 for.
@@ -35,6 +35,9 @@ from collections import defaultdict
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
 PROGRESS = "org.apache.spark.sql.streaming.StreamingQueryListener$QueryProgressEvent"
+
+# most input rows of a live trigger; catch-up triggers read more
+LIVE_ROWS = 1000
 
 
 class Trigger:
@@ -123,8 +126,6 @@ def fmt(v):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("log")
-    ap.add_argument("--live-rows", type=int, default=1000)
-    ap.add_argument("--no-sql", action="store_true")
     a = ap.parse_args()
     trig, sinks, execs, job_key, job_exec, job_t = ledger(a.log)
 
@@ -136,18 +137,16 @@ def main():
         print(f"{name_of(sinks, q)}\t{b}\t"
               + "\t".join(fmt(getattr(t, c)) for c in cols))
 
-    print(f"\nmedian per trigger, triggers of 1..{a.live_rows} input rows")
+    print(f"\nmedian per trigger, triggers of 1..{LIVE_ROWS} input rows")
     print("query\ttriggers\t" + "\t".join(cols))
     for q in sorted(set(k[0] for k in trig), key=lambda q: name_of(sinks, q)):
         live = [t for (qq, _), t in trig.items()
-                if qq == q and t.rows and 0 < t.rows <= a.live_rows]
+                if qq == q and t.rows and 0 < t.rows <= LIVE_ROWS]
         if not live:
             continue
         med = [statistics.median([getattr(t, c) or 0 for t in live]) for c in cols]
         print(f"{name_of(sinks, q)}\t{len(live)}\t" + "\t".join(fmt(float(v)) for v in med))
 
-    if a.no_sql:
-        return
     jobs_of = defaultdict(list)
     for j, x in job_exec.items():
         if x is not None:
