@@ -18,7 +18,7 @@ object SparkEntry {
     TradeAggregates.windowAgg5m(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. A `val`: built
-    * once, so the per-query lookups of Bench, Prof and RunOne are map reads. */
+    * once, so the per-query lookups of Bench and Prof are map reads. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1/A2: flagship 5-min window aggregate
     "q_a1_window_agg_5m" -> ((s, d) => TradeAggregates.windowAgg5m(s, d)),

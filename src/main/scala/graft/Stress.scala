@@ -114,11 +114,8 @@ object Stress {
           .write.mode("overwrite").format("noop").save()
       },
       time("topn_per_key") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("value").desc, col("event_id"))
-        ev.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
+        G.topK(ev, Seq(col("user_id")), Seq(col("value").desc, col("event_id")),
+            3, "rn")
           .write.mode("overwrite").format("noop").save()
       },
       // sign-LSH ANN ingest (round 2): bucket signatures for 500k synthetic
@@ -307,7 +304,6 @@ object Stress {
       // corpus codes never shuffle. The bench queries run this at 2k
       // vectors; this is the 500× rung.
       time("pq_adc") {
-        import org.apache.spark.sql.expressions.Window
         val nVecs = math.min(n / 10, 4000000L)
         val m = 8; val k = 16
         // synthetic code table: every vector coded in all m subspaces
@@ -321,13 +317,10 @@ object Stress {
           .withColumn("qdist2",
             pmod(xxhash64(col("query_id") * 1000 + col("m") * 100 + col("cid")),
               lit(1000)).cast("double") / 100.0)
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("adist"), col("vec_id"))
-        codes.join(broadcast(table), Seq("m", "cid"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("qdist2")).as("adist"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
+        G.topK(codes.join(broadcast(table), Seq("m", "cid"))
+            .groupBy(col("query_id"), col("vec_id"))
+            .agg(sum(col("qdist2")).as("adist")),
+            Seq(col("query_id")), Seq(col("adist"), col("vec_id")), 5, "rank")
           .write.mode("overwrite").format("noop").save()
       },
       // round 6: SpaceSaving sketch vs exact hash-agg heavy hitters over n

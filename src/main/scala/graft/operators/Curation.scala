@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shapes:
   *  - `hashSample` / `chunk` are pure projections — scan-speed, shuffle-free.
-  *  - `sourceCaps` shuffles once on `source` and relies on Spark's
-  *    WindowGroupLimit to push `rnk <= k` below the sort.
+  *  - `sourceCaps` shuffles once on `source` ([[G.topK]]).
   *  - `bigramStats` is explode → partial/final hash-agg (map-side combine
   *    absorbs the explode factor) → TakeOrderedAndProject top-k, so the
   *    driver never sees more than k rows.
@@ -56,15 +55,11 @@ object Curation {
 
   /** Per-source document cap: keep the k longest documents per source
     * (deterministic `doc_id` tiebreak) — the standard per-domain quota that
-    * stops one crawl domain from dominating a training mix. One shuffle on
-    * `source`; `row_number <= k` triggers WindowGroupLimit, so each partition
-    * retains only k rows before the final sort. */
+    * stops one crawl domain from dominating a training mix: [[G.topK]],
+    * one shuffle on `source`. */
   def sourceCaps(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    docs(spark, dir)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    G.topK(docs(spark, dir), Seq(col("source")),
+        Seq(col("n_chars").desc, col("doc_id")), k, "rnk")
       .select(col("source"), col("rnk"), col("doc_id"), col("n_chars"))
       .orderBy(col("source"), col("rnk"))
   }

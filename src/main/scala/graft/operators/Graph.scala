@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.G
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics over relation-derived graphs — the family
@@ -902,10 +901,7 @@ object Graph {
           (when(col("s").isNotNull, lit(restartU)).otherwise(lit(0L)) +
             expr("(85 * coalesce(contrib, 0)) DIV 100")).as("r"))
     }
-    val w = Window.partitionBy(col("seed"))
-      .orderBy(col("r").desc, col("node"))
-    ranks.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
+    G.topK(ranks, Seq(col("seed")), Seq(col("r").desc, col("node")), 10, "rnk")
       .select(col("seed"), col("rnk"), col("node"),
         (col("r").cast("double") / lit(1.0e12)).as("ppr"))
       .orderBy(col("seed"), col("rnk"))

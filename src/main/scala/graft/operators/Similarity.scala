@@ -41,6 +41,25 @@ object Similarity {
   private[graft] def cosine(a: Column, b: Column, na: Column, nb: Column)
       : Column = dot(a, b) / (na * nb)
 
+  /** The query set of the search family: the rows of `e` with vec_id < 10,
+    * as query_id, the caller's `extra` columns, then qv (and qnrm when `e`
+    * carries a norm). */
+  private def queryVecs(e: DataFrame, extra: Column*): DataFrame = {
+    val qnrm = if (e.columns.contains("nrm")) Seq(col("nrm").as("qnrm")) else Nil
+    e.filter(col("vec_id") < 10)
+      .select((col("vec_id").as("query_id") +: extra :+ col("v").as("qv")) ++ qnrm: _*)
+  }
+
+  /** Each query's `k` most similar rows by `sim`, ties to the lower vec_id. */
+  private def topBySim(scored: DataFrame, k: Int, rank: String = "rank")
+      : DataFrame =
+    G.topK(scored, Seq(col("query_id")), Seq(col("sim").desc, col("vec_id")),
+      k, rank)
+
+  /** `sim`: the cosine of each corpus row (v, nrm) and its query (qv, qnrm). */
+  private def querySim: Column =
+    cosine(col("v"), col("qv"), col("nrm"), col("qnrm"))
+
   /** Exact-cosine verify of candidate pairs (`cand`: id_a, id_b) against
     * `e` (vec_id, v, nrm): keeps sim ≥ `tau`, ordered by the pair. */
   private def cosineVerify(cand: DataFrame, e: DataFrame, tau: Double)
@@ -69,16 +88,10 @@ object Similarity {
     * corpus: broadcast queries, single corpus pass, rank window. */
   def knnBruteForce(spark: SparkSession, dir: String): DataFrame = {
     val corpus = embeddings(spark, dir)
-    val queries = embeddings(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    corpus.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    val queries = queryVecs(embeddings(spark, dir))
+    topBySim(corpus.crossJoin(broadcast(queries))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("sim", querySim), 5)
       .select(col("query_id"), col("rank"), col("vec_id"), col("sim"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -102,16 +115,10 @@ object Similarity {
     * Scan cost drops by ~|cells|; recall is exact within the cell. */
   def knnIvf(spark: SparkSession, dir: String): DataFrame = {
     val corpus = embeddings(spark, dir)
-    val queries = embeddings(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("v").as("qv"), col("nrm").as("qnrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    corpus.join(broadcast(queries), col("label") === col("qlabel"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    val queries = queryVecs(embeddings(spark, dir), col("label").as("qlabel"))
+    topBySim(corpus.join(broadcast(queries), col("label") === col("qlabel"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("sim", querySim), 3)
       .select(col("query_id"), col("rank"), col("vec_id"), col("sim"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -151,8 +158,7 @@ object Similarity {
       .select(col("v").as("qv"), col("nrm").as("qnrm"))
     val cand = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("v"), col("nrm"),
-        (dot(col("v"), col("qv")) / (col("nrm") * col("qnrm"))).as("rel"))
+      .select(col("vec_id"), col("v"), col("nrm"), querySim.as("rel"))
       .cache()
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double, Double)]
     var sel: Seq[(Long, Seq[Double], Double)] = Nil
@@ -163,7 +169,7 @@ object Similarity {
           val selDf = broadcast(sel.toDF("sid", "sv", "snrm"))
           val pen = cand.crossJoin(selDf)
             .groupBy(col("vec_id"))
-            .agg(max(dot(col("v"), col("sv")) / (col("nrm") * col("snrm")))
+            .agg(max(cosine(col("v"), col("sv"), col("nrm"), col("snrm")))
               .as("maxsim"))
           cand.join(pen, Seq("vec_id"))
         }
@@ -789,7 +795,7 @@ object Similarity {
     * with `payload = false` only (vec_id, keys, cid, dist2, rn), so no
     * vector rides the n·k window sort.
     *
-    * The ranking stays a row_number window, DELIBERATELY: min(struct(...))
+    * The ranking stays a [[G.topK]] window, DELIBERATELY: min(struct(...))
     * would partial-aggregate the k candidates map-side, but Min over a
     * struct falls to SortAggregate with interpreted comparisons (and copies
     * the payload per candidate) — measured 3.0× slower at 500k×16 (Stress
@@ -803,11 +809,9 @@ object Similarity {
       if (keys.isEmpty) points.crossJoin(broadcast(cent))
       else points.join(broadcast(cent), keys)
     val kept = (if (payload) points.columns.toSeq else id) :+ "cid"
-    pairs
-      .select(kept.map(col) :+ vector_dist2(col("v"), col("c")).as("dist2"): _*)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(id.map(col): _*).orderBy(col("dist2"), col("cid"))))
-      .filter(col("rn") <= n)
+    G.topK(
+      pairs.select(kept.map(col) :+ vector_dist2(col("v"), col("c")).as("dist2"): _*),
+      id.map(col), Seq(col("dist2"), col("cid")), n, "rn")
   }
 
   /** The oracles' squared-distance fold over the first `dims` elements:
@@ -837,23 +841,17 @@ object Similarity {
     val (assignRaw, cent) = ivfAssignCent(spark, dir, 8, 2)
     val corpus = assignRaw.select(col("vec_id"), col("cid"), col("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v")))).cache()
-    val qd = nearest(corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("v"), col("nrm")), cent, probes.max)
-      .select(col("vec_id").as("query_id"), col("cid"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("rn"))
+    val qd = queryVecs(nearest(corpus.select(col("vec_id"), col("v"),
+        col("nrm")), cent, probes.max), col("cid"), col("rn"))
+      .select("query_id", "cid", "qv", "qnrm", "rn")
       .cache()
     val bf = knnBruteForce(spark, dir)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     probes.map { np =>
       val cells = qd.filter(col("rn") <= np).drop("rn")
-      val cand = corpus.join(cells, "cid")
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", dot(col("v"), col("qv")) /
-          (col("nrm") * col("qnrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      val cand = topBySim(corpus.join(cells, "cid")
+          .filter(col("vec_id") =!= col("query_id"))
+          .withColumn("sim", querySim), 5)
         .select(col("query_id"), col("vec_id"))
       cand.join(bf, Seq("query_id", "vec_id"), "left")
         .agg(count(lit(1)).as("k_total"),
@@ -936,34 +934,22 @@ object Similarity {
     val corpus = assignRaw.select(col("vec_id"), col("cid"), col("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val pred = pmod(col("vec_id"), lit(3L)) === 0L
-    val queries = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     // pre-filter exact truth
-    val exact = corpus.filter(pred)
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    val exact = topBySim(corpus.filter(pred)
+        .crossJoin(broadcast(queryVecs(corpus)))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("sim", querySim), 3)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
     // post-filter IVF: route to 2 cells, filter, re-rank
-    val cells = nearest(corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("v"), col("nrm")), cent, 2)
-      .select(col("vec_id").as("query_id"), col("cid"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
+    val cells = queryVecs(nearest(corpus.select(col("vec_id"), col("v"),
+      col("nrm")), cent, 2), col("cid"))
     val cand = corpus.filter(pred).join(cells, "cid")
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
+      .withColumn("sim", querySim)
       .cache()
     val nCand = cand.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_postfilter_cand"))
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    topBySim(cand, 3)
       .select(col("query_id"), col("vec_id"))
       .join(exact, Seq("query_id", "vec_id"), "left")
       .groupBy(col("query_id"))
@@ -1113,6 +1099,21 @@ object Similarity {
        |FROM pairs WHERE sim >= $tau
        |GROUP BY id_b, cid ORDER BY vec_id""".stripMargin
 
+  /** The corpus (vec_id, v, nrm) with its 64-bit sign code (bit i set when
+    * v_i ≥ 0) as two 32-bit halves `lo` and `hi`, cached. */
+  private def signCodes(spark: SparkSession, dir: String): DataFrame = {
+    val codeLo = expr(
+      """aggregate(sequence(0, 31), 0L,
+        |  (acc, i) -> acc + IF(element_at(v, i + 1) >= 0.0,
+        |                       shiftleft(1L, i), 0L))""".stripMargin)
+    val codeHi = expr(
+      """aggregate(sequence(32, 63), 0L,
+        |  (acc, i) -> acc + IF(element_at(v, i + 1) >= 0.0,
+        |                       shiftleft(1L, i - 32), 0L))""".stripMargin)
+    embeddings(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
+      .withColumn("lo", codeLo).withColumn("hi", codeHi).cache()
+  }
+
   /** q_y19: BINARY-CODE ANN search — the 1-bit sibling of the int8
     * two-stage search (y13) and the most compressed point on the
     * quantization ladder (float32 2048 B → int8 64+8 B → HERE 8 B/vector):
@@ -1135,39 +1136,21 @@ object Similarity {
     * the O(queries·20) rescore join-back, the y13/y17 contract. */
   def binarySearch(spark: SparkSession, dir: String, shortlist: Int = 20,
       topK: Int = 5): DataFrame = {
-    val e = embeddings(spark, dir)
-    val codeLo = expr(
-      """aggregate(sequence(0, 31), 0L,
-        |  (acc, i) -> acc + IF(element_at(v, i + 1) >= 0.0,
-        |                       shiftleft(1L, i), 0L))""".stripMargin)
-    val codeHi = expr(
-      """aggregate(sequence(32, 63), 0L,
-        |  (acc, i) -> acc + IF(element_at(v, i + 1) >= 0.0,
-        |                       shiftleft(1L, i - 32), 0L))""".stripMargin)
-    val codes = e.select(col("vec_id"), col("v"), col("nrm"))
-      .withColumn("lo", codeLo).withColumn("hi", codeHi).cache()
-    val queries = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
-        col("hi").as("qhi"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wH = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val short = codes.select(col("vec_id"), col("lo"), col("hi"))
-      .crossJoin(broadcast(queries.select(col("query_id"), col("qlo"), col("qhi"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("hamming",
-        expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)"))
-      .withColumn("hrank", row_number().over(wH))
-      .filter(col("hrank") <= shortlist)
+    val codes = signCodes(spark, dir)
+    val queries = queryVecs(codes, col("lo").as("qlo"), col("hi").as("qhi"))
+    val short = G.topK(codes.select(col("vec_id"), col("lo"), col("hi"))
+        .crossJoin(broadcast(queries.select(col("query_id"), col("qlo"), col("qhi"))))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("hamming",
+          expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)")),
+        Seq(col("query_id")), Seq(col("hamming"), col("vec_id")), shortlist,
+        "hrank")
       .select(col("query_id"), col("vec_id"), col("hamming"))
-    val wS = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    short
-      .join(codes.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(broadcast(queries.select(col("query_id"), col("qv"), col("qnrm"))),
-        "query_id")
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(wS))
-      .filter(col("rank") <= topK)
+    topBySim(short
+        .join(codes.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
+        .join(broadcast(queries.select(col("query_id"), col("qv"), col("qnrm"))),
+          "query_id")
+        .withColumn("sim", querySim), topK)
       .select(col("query_id"), col("rank"), col("vec_id"), col("hamming"),
         col("sim"))
       .orderBy(col("query_id"), col("rank"))
@@ -1223,43 +1206,24 @@ object Similarity {
     * shared candidate stage (the y15 lesson). */
   def hammingRecall(spark: SparkSession, dir: String,
       sizes: Seq[Int] = Seq(5, 10, 20)): DataFrame = {
-    val e = embeddings(spark, dir)
-    val codeLo = expr(
-      """aggregate(sequence(0, 31), 0L,
-        |  (acc, i) -> acc + IF(element_at(v, i + 1) >= 0.0,
-        |                       shiftleft(1L, i), 0L))""".stripMargin)
-    val codeHi = expr(
-      """aggregate(sequence(32, 63), 0L,
-        |  (acc, i) -> acc + IF(element_at(v, i + 1) >= 0.0,
-        |                       shiftleft(1L, i - 32), 0L))""".stripMargin)
-    val codes = e.select(col("vec_id"), col("v"), col("nrm"))
-      .withColumn("lo", codeLo).withColumn("hi", codeHi).cache()
-    val queries = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
-        col("hi").as("qhi"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wH = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val maxS = sizes.max
-    val sims = codes.select(col("vec_id"), col("lo"), col("hi"))
-      .crossJoin(broadcast(queries.select(col("query_id"), col("qlo"), col("qhi"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("hamming", expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)"))
-      .withColumn("hrank", row_number().over(wH))
-      .filter(col("hrank") <= maxS)
+    val codes = signCodes(spark, dir)
+    val queries = queryVecs(codes, col("lo").as("qlo"), col("hi").as("qhi"))
+    val sims = G.topK(codes.select(col("vec_id"), col("lo"), col("hi"))
+        .crossJoin(broadcast(queries.select(col("query_id"), col("qlo"), col("qhi"))))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("hamming", expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)")),
+        Seq(col("query_id")), Seq(col("hamming"), col("vec_id")), sizes.max,
+        "hrank")
       .join(codes.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
       .join(broadcast(queries.select(col("query_id"), col("qv"), col("qnrm"))),
         "query_id")
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
+      .withColumn("sim", querySim)
       .select(col("query_id"), col("vec_id"), col("hrank"), col("sim"))
       .cache()
     val bf = knnBruteForce(spark, dir)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
-    val wS = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     sizes.map { s =>
-      sims.filter(col("hrank") <= s)
-        .withColumn("rk", row_number().over(wS))
-        .filter(col("rk") <= 5)
+      topBySim(sims.filter(col("hrank") <= s), 5, "rk")
         .select(col("query_id"), col("vec_id"))
         .join(bf, Seq("query_id", "vec_id"), "left")
         .agg(count(lit(1)).as("k_total"),
@@ -1534,19 +1498,15 @@ object Similarity {
       iters: Int = 2, topK: Int = 5): DataFrame = {
     val (assign, cent) = pqAssign(spark, dir, m, k, iters)
     val codes = assign.select(col("vec_id"), col("m"), col("cid"))
-    val table = embeddings(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), subvectors("v", m))
+    val table = queryVecs(embeddings(spark, dir), subvectors("v", m))
       .join(broadcast(cent), Seq("m"))
       .select(col("query_id"), col("m"), col("cid"),
         vector_dist2(col("v"), col("c")).as("qdist2"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    codes.join(broadcast(table), Seq("m", "cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(G.dsum(col("qdist2")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    G.topK(codes.join(broadcast(table), Seq("m", "cid"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(G.dsum(col("qdist2")).as("adist")),
+        Seq(col("query_id")), Seq(col("adist"), col("vec_id")), topK, "rank")
       .select(col("query_id"), col("rank"), col("vec_id"), col("adist"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -1759,30 +1719,22 @@ object Similarity {
       .withColumn("scale", lit(127.0) / col("max_abs"))
       .withColumn("code",
         expr("transform(v, x -> CAST(floor(x * scale + 0.5D) AS DOUBLE))"))
-    val queries = base.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("scale").as("qscale"),
-        col("code").as("qcode"))
-    val cw = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim_approx").desc, col("vec_id"))
-    val cand = base.select(col("vec_id"), col("scale"), col("code"))
-      .crossJoin(broadcast(queries.select(col("query_id"), col("qscale"),
-        col("qcode"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim_approx",
-        dot(col("code"), col("qcode")) / (col("scale") * col("qscale")))
-      .withColumn("crank", row_number().over(cw))
-      .filter(col("crank") <= 20)
+    val queries = queryVecs(base, col("scale").as("qscale"),
+      col("code").as("qcode"))
+    val cand = G.topK(base.select(col("vec_id"), col("scale"), col("code"))
+        .crossJoin(broadcast(queries.select(col("query_id"), col("qscale"),
+          col("qcode"))))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("sim_approx",
+          dot(col("code"), col("qcode")) / (col("scale") * col("qscale"))),
+        Seq(col("query_id")), Seq(col("sim_approx").desc, col("vec_id")), 20,
+        "crank")
       .select(col("query_id"), col("vec_id"), col("sim_approx"))
-    val rw = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    embeddings(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(cand), "vec_id")
-      .join(broadcast(queries.select(col("query_id"), col("qv"), col("qnrm"))),
-        "query_id")
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(rw))
-      .filter(col("rank") <= 5)
+    topBySim(embeddings(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
+        .join(broadcast(cand), "vec_id")
+        .join(broadcast(queries.select(col("query_id"), col("qv"), col("qnrm"))),
+          "query_id")
+        .withColumn("sim", querySim), 5)
       .select(col("query_id"), col("rank"), col("vec_id"), col("sim"),
         col("sim_approx"))
       .orderBy(col("query_id"), col("rank"))
@@ -1922,7 +1874,7 @@ object Similarity {
     val sel = embeddings(spark, dir).filter(col("vec_id") % 37 === 0)
       .select(col("v").as("sv"), col("nrm").as("snrm"))
     val best = corpus.crossJoin(broadcast(sel))
-      .withColumn("sim", dot(col("v"), col("sv")) / (col("nrm") * col("snrm")))
+      .withColumn("sim", cosine(col("v"), col("sv"), col("nrm"), col("snrm")))
       .groupBy(col("vec_id"))
       .agg(max(col("sim")).as("max_sim"))
     best
@@ -1970,12 +1922,9 @@ object Similarity {
     val (pqA, pqCent) = pqAssign(spark, dir, 8, 16, 2)
     val codes = pqA.select(col("vec_id"), col("m"), col("cid"))
     val e = embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    val qroute = nearest(e.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("v")), cent, 1)
-      .select(col("vec_id").as("query_id"), col("cid"))
+    val queries = queryVecs(e)
+    val qroute = queryVecs(nearest(e.select(col("vec_id"), col("v")), cent, 1),
+      col("cid"))
     val cand = assign.select(col("vec_id"), col("cid"))
       .join(broadcast(qroute), "cid")
       .filter(col("vec_id") =!= col("query_id"))
@@ -1984,21 +1933,14 @@ object Similarity {
       .join(broadcast(pqCent), Seq("m"))
       .select(col("query_id"), col("m"), col("cid"),
         vector_dist2(col("v"), col("c")).as("qdist2"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    val short = cand.join(codes, "vec_id")
-      .join(broadcast(table), Seq("query_id", "m", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(G.dsum(col("qdist2")).as("adist"))
-      .withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= shortlist)
-    val wf = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    short.join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(broadcast(queries), "query_id")
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= topK)
+    val short = G.topK(cand.join(codes, "vec_id")
+        .join(broadcast(table), Seq("query_id", "m", "cid"))
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(G.dsum(col("qdist2")).as("adist")),
+      Seq(col("query_id")), Seq(col("adist"), col("vec_id")), shortlist, "srank")
+    topBySim(short.join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
+        .join(broadcast(queries), "query_id")
+        .withColumn("sim", querySim), topK)
       .select(col("query_id"), col("rank"), col("vec_id"), col("adist"),
         col("sim"))
       .orderBy(col("query_id"), col("rank"))
@@ -2298,21 +2240,17 @@ object Similarity {
   def matryoshkaRecall(spark: SparkSession, dir: String,
       ds: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     val corpus = embeddings(spark, dir).select(col("vec_id"), col("v")).cache()
-    val queries = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     val truth = knnBruteForce(spark, dir)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
     ds.map { d =>
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      val top = corpus.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("pv", slice(col("v"), 1, d))
-        .withColumn("pq", slice(col("qv"), 1, d))
-        .withColumn("sim", dot(col("pv"), col("pq")) /
-          (sqrt(dot(col("pv"), col("pv"))) * sqrt(dot(col("pq"), col("pq")))))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      val top = topBySim(corpus.crossJoin(broadcast(queries))
+          .filter(col("vec_id") =!= col("query_id"))
+          .withColumn("pv", slice(col("v"), 1, d))
+          .withColumn("pq", slice(col("qv"), 1, d))
+          .withColumn("sim", cosine(col("pv"), col("pq"),
+            sqrt(dot(col("pv"), col("pv"))), sqrt(dot(col("pq"), col("pq"))))),
+          5)
         .select(col("query_id"), col("vec_id"))
       top.join(truth, Seq("query_id", "vec_id"), "left")
         .agg(count(lit(1)).as("k_total"),
@@ -2457,18 +2395,15 @@ object Similarity {
     * t11 way. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val corpus = embeddings(spark, dir)
-    val anchors = embeddings(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("anchor_id"), col("label").as("alabel"),
-        col("v").as("qv"), col("nrm").as("qnrm"))
-    val w = Window.partitionBy(col("anchor_id"), col("kind"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    corpus.crossJoin(broadcast(anchors))
-      .filter(col("vec_id") =!= col("anchor_id"))
-      .withColumn("kind",
-        when(col("label") === col("alabel"), lit("pos")).otherwise(lit("neg")))
-      .withColumn("sim", dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    val anchors = queryVecs(embeddings(spark, dir), col("label").as("alabel"))
+      .withColumnRenamed("query_id", "anchor_id")
+    G.topK(corpus.crossJoin(broadcast(anchors))
+        .filter(col("vec_id") =!= col("anchor_id"))
+        .withColumn("kind",
+          when(col("label") === col("alabel"), lit("pos")).otherwise(lit("neg")))
+        .withColumn("sim", querySim),
+        Seq(col("anchor_id"), col("kind")), Seq(col("sim").desc, col("vec_id")),
+        3, "rank")
       .select(col("anchor_id"), col("kind"), col("rank"), col("vec_id"),
         col("label"), col("sim"))
       .orderBy(col("anchor_id"), col("kind"), col("rank"))

@@ -167,9 +167,8 @@ object TextAnalysis {
     * (log() is not bit-reproducible across engines; the ratio is, and the
     * ranking exercise is identical). Top-3 terms per doc, deterministic
     * tiebreak. Scale shape: explode → two hash-aggs → broadcast of the
-    * (term, df) side → rank window with WindowGroupLimit. */
+    * (term, df) side → [[G.topK]]. */
   def topTerms(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = docs(spark, dir)
     val tf = d.select(col("doc_id"),
         explode(expr("split(lower(text), '\\\\s+')")).as("term"))
@@ -177,14 +176,11 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = d.agg(count(lit(1)).as("n_docs"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("term"))
-    tf.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(n))
-      .withColumn("score",
-        col("tf").cast("double") * (col("n_docs").cast("double") / col("df")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
+    G.topK(tf.join(broadcast(dfreq), "term")
+        .crossJoin(broadcast(n))
+        .withColumn("score",
+          col("tf").cast("double") * (col("n_docs").cast("double") / col("df"))),
+        Seq(col("doc_id")), Seq(col("score").desc, col("term")), 3, "rnk")
       .select(col("doc_id"), col("rnk"), col("term"), col("score"))
       .orderBy(col("doc_id"), col("rnk"))
   }
@@ -511,11 +507,10 @@ object TextAnalysis {
     * scorer. The corpus is tokenized once; per-term tf/df stats are shared
     * across queries; fanning out to the (query_id, term) relation happens
     * AFTER the tf rollup, so the explode volume is independent of Q. Top-k
-    * per query is a rank-filtered window over the scored frame — Spark
-    * rewrites `row_number <= k` into WindowGroupLimit (a per-partition
-    * top-k heap), so no query's full posting list is ever sorted. At
-    * 100 TB/Q queries this is the right shape: one corpus scan, broadcast
-    * stats, one keyed (query_id, doc_id) aggregate, heap-bounded ranking.
+    * per query is [[G.topK]] over the scored frame, so no query's full
+    * posting list is ever sorted. At 100 TB/Q queries this is the right
+    * shape: one corpus scan, broadcast stats, one keyed (query_id, doc_id)
+    * aggregate, heap-bounded ranking.
     * Reference: search-serving endpoints (`api/.../dashboard.py` query
     * surface) generalized to the LLM-retrieval workload. */
   def batchRetrieve(spark: SparkSession, dir: String,
@@ -549,11 +544,8 @@ object TextAnalysis {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(G.dsum(col("contrib")).as("score"),
         count(lit(1)).as("n_terms_hit"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    G.topK(scored, Seq(col("query_id")),
+        Seq(col("score").desc, col("doc_id")), topK, "rank")
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
         col("n_terms_hit"))
       .orderBy(col("query_id"), col("rank"))
@@ -1163,15 +1155,12 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf")).persist()
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = tf.agg(countDistinct(col("doc_id")).as("n_docs"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("term"))
-    tf.join(dfreq, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("score", col("tf") *
-        ((col("n_docs").cast("double") - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    G.topK(tf.join(dfreq, Seq("term"))
+        .crossJoin(broadcast(stats))
+        .withColumn("score", col("tf") *
+          ((col("n_docs").cast("double") - col("df") + lit(0.5)) /
+            (col("df") + lit(0.5)))),
+        Seq(col("doc_id")), Seq(col("score").desc, col("term")), 3, "rank")
       .select(col("doc_id"), col("rank"), col("term"), col("tf"), col("df"),
         col("score"))
       .orderBy(col("doc_id"), col("rank"))

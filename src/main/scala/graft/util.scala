@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -369,7 +370,8 @@ object ArtifactStore {
   }
 }
 
-/** Shared helpers: table loading and oracle-exact numeric aggregation. */
+/** Shared helpers: table loading, oracle-exact numeric aggregation and the
+  * per-group top-k. */
 object G {
 
   /** Load one driver parquet table (TESTDATA.md). */
@@ -463,4 +465,18 @@ object G {
     * trade-volume analogue when events stands in for the trade stream
     * (FIXTURES.md §B mapping). */
   def propsK(c: Column): Column = get_json_object(c, "$.k").cast(LongType)
+
+  /** The `k` first rows of each `by` group in `order`, numbered 1..k in the
+    * column `rank`: the one per-group top-k of the engine (kNN, IVF, PQ,
+    * BM25, PPR, per-source caps, top terms). The last `order` column must
+    * break every tie, so the kept rows are deterministic and match the
+    * oracle's `row_number`. The filter sits directly on the window, so
+    * Spark plans a partial WindowGroupLimit (a per-partition top-k) ahead
+    * of the exchange on `by`, and only k rows per group and partition
+    * shuffle. */
+  def topK(df: DataFrame, by: Seq[Column], order: Seq[Column], k: Int,
+      rank: String): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(by: _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
 }

@@ -157,6 +157,40 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(widths == Seq(spark.sessionState.conf.numShufflePartitions))
   }
 
+  test("G.topK: k rows per group, ties by the last order column, partial limit below the exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    // group a ties 0.9 three ways; group b has two rows; kind splits a in two
+    val df = Seq(("a", "x", 1L, 0.9), ("a", "y", 2L, 0.9), ("a", "x", 3L, 0.9),
+      ("a", "y", 4L, 0.5), ("b", "x", 5L, 0.7), ("b", "x", 6L, 0.8))
+      .toDF("g", "kind", "id", "s")
+    def ranked(by: Seq[String], order: Seq[org.apache.spark.sql.Column], k: Int) =
+      G.topK(df, by.map(col), order, k, "rk")
+        .select(col("g"), col("kind"), col("rk"), col("id"))
+        .as[(String, String, Int, Long)].collect().toSeq
+        .sortBy(r => (r._1, r._3, r._2))
+    assert(ranked(Seq("g"), Seq(col("s").desc, col("id")), 2) ==
+      Seq(("a", "x", 1, 1L), ("a", "y", 2, 2L), ("b", "x", 1, 6L), ("b", "x", 2, 5L)))
+    assert(ranked(Seq("g"), Seq(col("s").desc, col("id").desc), 2) ==
+      Seq(("a", "x", 1, 3L), ("a", "y", 2, 2L), ("b", "x", 1, 6L), ("b", "x", 2, 5L)))
+    // k past a group's size keeps the whole group, numbered 1..n
+    assert(ranked(Seq("g"), Seq(col("s").desc, col("id")), 10).map(r => (r._3, r._4)) ==
+      Seq((1, 1L), (2, 2L), (3, 3L), (4, 4L), (1, 6L), (2, 5L)))
+    // (g, kind) groups rank apart: a/x and a/y each restart at 1
+    assert(ranked(Seq("g", "kind"), Seq(col("s").desc, col("id")), 1) ==
+      Seq(("a", "x", 1, 1L), ("a", "y", 1, 2L), ("b", "x", 1, 6L)))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = G.topK(df, Seq(col("g")), Seq(col("s").desc, col("id")), 2, "rk")
+        .queryExecution.executedPlan
+      val partialBelowExchange = plan.collect { case e: ShuffleExchangeExec =>
+        e.child.collect { case w: WindowGroupLimitExec if w.mode == Partial => w }
+      }.flatten
+      assert(partialBelowExchange.size == 1, plan.treeString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("text quality scores are bounded and fingerprints discriminate") {
     val q = TextAnalysis.qualityScore(spark, sf()).collect()
     assert(q.forall { r =>

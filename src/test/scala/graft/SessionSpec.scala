@@ -51,7 +51,6 @@ class SessionSpec extends SparkSpec {
       (Bench.setup, envOr(4), true),
       (Verify.setup, envOr(nproc), true),
       (Prof.setup, envOr(32), true),
-      (RunOne.setup, envOr(4), false),
       (Stress.setup, envOr(32), false),
       (ScaleGen.setup, envOr(16), false),
       (Explain.setup, 4, false),
